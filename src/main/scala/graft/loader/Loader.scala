@@ -106,10 +106,12 @@ final class Loader(catalog: GraftCatalog, defaultConfig: LoaderConfig = LoaderCo
       if (cfg.schemaEvolution && t.current().isDefined) {
         t.evolveSchema(stamped.schema)
       }
-      // Row accounting rides the write job itself (Observation): no
-      // second evaluation of the buffered batches, and the count is what
-      // the committed job actually saw — a separate count() would re-read
-      // the source and could diverge on non-deterministic inputs.
+      // Row accounting rides the job that evaluates the buffered batches
+      // (Observation): the write job for append/overwrite, the source
+      // checkpoint that feeds the write for upsert. No second evaluation,
+      // and the count is what the commit actually holds — a separate
+      // count() would re-read the source and could diverge on
+      // non-deterministic inputs.
       val obs = org.apache.spark.sql.Observation(
         s"graft_load_${java.util.UUID.randomUUID().toString.take(8)}")
       val observed = stamped.observe(obs, count(lit(1)).as("rows"))

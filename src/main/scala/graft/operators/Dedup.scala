@@ -448,10 +448,6 @@ object Dedup {
         .distinct()
     }
 
-    // (count, xxhash64 sum): a deterministic O(edges) scan with no
-    // shuffle beyond the partial agg — equal sets always produce equal
-    // signatures, so inequality alone continues the loop without the
-    // exact check
     // Exact star-shape test, one groupBy pass: under the u > v
     // invariant, an edge set is a family of min-rooted stars ⟺ no left
     // endpoint repeats AND no left endpoint also appears as a right

@@ -10,7 +10,7 @@ import graft.config.LoaderConfig
 import graft.meta.{ColumnStats, DataFile, DeleteGroup, EqualityDeleteGroup, FileGroup, MetadataLog, PositionDeleteGroup, PredicateDeleteGroup, Snapshot}
 import graft.partitioning.{PartitionExpr, PartitionField}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.functions._
@@ -53,9 +53,10 @@ final case class MergeClause(kind: String, condition: Option[String],
   * Scale notes (100 TB): all data movement is plain `DataFrame` writes —
   * executors write file splits in parallel; the driver only lists the
   * commit directory and appends metadata. Delete/upsert prune the
-  * rewrite set by partition before launching any Spark job, so a
-  * predicate or key-set touching one partition rewrites one partition,
-  * not the table.
+  * rewrite set by partition before reading any target file — a keyed
+  * write derives its partition values in one aggregation over the
+  * (small) source side — so a predicate or key-set touching one
+  * partition rewrites one partition, not the table.
   */
 final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: MetadataLog) {
 
@@ -560,21 +561,36 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
   def upsert(source: DataFrame, keys: Seq[String], props: Map[String, String] = Map.empty): Snapshot = {
     require(keys.nonEmpty, "upsert requires join columns")
     val snap = currentOrFail()
-    val projected = Projection.project(source, snap.schema)
+    // one evaluation: the source feeds the duplicate check, partition
+    // pruning, the anti join and the write — a nondeterministic source
+    // must not give each pass different rows, or a key only the write
+    // saw could land beside a carried file that still holds it (the
+    // deleteByKeys / mergeRows guard)
+    val projected = Projection.project(source, snap.schema).localCheckpoint()
+    val keyCols = keys.map(k => col(s"`$k`"))
+    val nonNull = keyCols.map(_.isNotNull).reduce(_ && _)
+    val pruning = new KeyPruning(snap, keys)
 
-    // Duplicate source keys make the merge ambiguous (which version
-    // wins?) — reject like PyIceberg's upsert does (SURVEY §7.4). One
-    // count-distinct over the (small) source side, not the target.
-    // NULL keys are exempt: SQL equality never matches them, so two
-    // NULL-keyed rows are two independent inserts, not a conflict.
-    val dupKeys = projected
-      .where(keys.map(k => col(s"`$k`").isNotNull).reduce(_ && _))
-      .groupBy(keys.map(k => col(s"`$k`")): _*)
-      .agg(count(lit(1)).as("_n")).where(col("_n") > 1).limit(1).collect()
-    if (dupKeys.nonEmpty)
+    // One grouped aggregation over the (small) source side, never the
+    // target, answers three questions:
+    //   - duplicate source keys make the merge ambiguous (which version
+    //     wins?) — reject like PyIceberg's upsert does (SURVEY §7.4).
+    //     NULL keys are exempt: SQL equality never matches them, so two
+    //     NULL-keyed rows are two independent inserts, not a conflict;
+    //   - the non-null key count, for the anti join's broadcast;
+    //   - the derived partition values, for rewrite-set pruning.
+    val stats = {
+      val perKey = projected.groupBy(keyCols: _*).agg(count(lit(1)).as("_graft_n"))
+      val aggs = Seq(
+        first(when(nonNull && col("_graft_n") > 1, struct(keyCols: _*)), ignoreNulls = true),
+        count(when(nonNull, lit(1)))) ++ pruning.aggs
+      perKey.agg(aggs.head, aggs.tail: _*).head
+    }
+    if (!stats.isNullAt(0))
       throw new IllegalArgumentException(
         s"upsert source contains duplicate keys on (${keys.mkString(", ")}), " +
-          s"e.g. ${dupKeys.head.toSeq.init.mkString("/")}")
+          s"e.g. ${stats.getStruct(0).toSeq.mkString("/")}")
+    val nKeys = stats.getLong(1)
     val specs = partitionFields()
 
     // Partition pruning for the rewrite set: a target file whose
@@ -582,7 +598,8 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     // contain a matched key *if* the partition source column is a key
     // (common case: upsert keyed on the partition column's source).
     // Multi-field specs prune on EVERY key-sourced field.
-    val rewriteSet: Seq[DataFile] = keyPrunedFiles(snap, projected, keys)
+    val rewriteSet: Seq[DataFile] = pruning.files(stats, 2)
+    val srcKeys = projected.select(keyCols: _*).where(nonNull)
 
     // Merge-on-read upsert (the Iceberg MoR MERGE shape): past the
     // threshold the upsert becomes ONE commit of an append group plus
@@ -592,14 +609,14 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     // replaced, unmatched source rows are plain inserts, and a later
     // upsert's delete group supersedes this one's rows the same way.
     if (rewriteSet.nonEmpty && chooseMor(snap, rewriteSet.map(_.sizeBytes).sum))
-      return morMergeCommit(snap, projected,
-        projected.select(keys.map(k => col(s"`$k`")): _*)
-          .where(keys.map(k => col(s"`$k`").isNotNull).reduce(_ && _)).distinct(),
-        keys, "upsert", props)
+      return morMergeCommit(snap, projected, srcKeys.distinct(), keys, "upsert", props)
 
-    val target = readFilesMoR(snap, rewriteSet, snap.schema)
-    val kept = target.join(
-      projected.select(keys.map(k => col(s"`$k`")): _*).distinct(),
+    // no distinct(): duplicate keys were rejected above, and an anti
+    // join is indifferent to them anyway. The checkpointed keys carry
+    // no size stats, so broadcast them below the merge bound or the
+    // anti join shuffles every rewritten file (see deleteByKeys).
+    val kept = readFilesMoR(snap, rewriteSet, snap.schema).join(
+      if (nKeys <= GraftTable.MergeBroadcastRowBound) broadcast(srcKeys) else srcKeys,
       keys, "left_anti")
     val merged = kept.unionByName(projected)
     val newGroup = writeDataFiles(merged, snap.schema, specs)
@@ -653,8 +670,7 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     }: _*).distinct().localCheckpoint()
     val joinKeys = keys.map(targetField(_).name)
     val specs = partitionFields()
-    // carried files are implicit: only rewriteSet paths are pruned
-    val rewriteSet: Seq[DataFile] = keyPrunedFiles(snap, keyDf, joinKeys)
+    val pruning = new KeyPruning(snap, joinKeys)
     // Zone-map pruning on top of partition pruning: a matching row
     // needs EVERY key component inside the key frame's [min, max], so
     // a file whose stats exclude any component's range cannot contain
@@ -663,15 +679,17 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     // rewriting years of history. One tiny agg over the (small) key
     // frame; a key column with a NULL bound means no tuple can match
     // at all (empty frame, or an all-null component) — no-op commit.
-    // trailing count(*) rides the bounds pass — feeds the kept-join
-    // broadcast decision (one fewer action per keyed delete)
+    // count(*) and the partition pruning's derived values ride the
+    // bounds pass — the count feeds the kept-join broadcast decision
     val boundsRow = {
       val aggs = joinKeys.flatMap(k =>
-        Seq(min(col(s"`$k`")), max(col(s"`$k`")))) :+ count(lit(1))
+        Seq(min(col(s"`$k`")), max(col(s"`$k`")))) ++ (count(lit(1)) +: pruning.aggs)
       keyDf.agg(aggs.head, aggs.tail: _*).head
     }
     val nKeyRows = boundsRow.getLong(2 * joinKeys.size)
     if (joinKeys.indices.exists(i => boundsRow.isNullAt(2 * i))) return snap
+    // carried files are implicit: only rewriteSet paths are pruned
+    val rewriteSet: Seq[DataFile] = pruning.files(boundsRow, 2 * joinKeys.size + 1)
     val rangePred: org.apache.spark.sql.catalyst.expressions.Expression =
       joinKeys.zipWithIndex.map { case (k, i) =>
         import org.apache.spark.sql.catalyst.expressions._
@@ -796,11 +814,12 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
       if (notMatchedBySource.nonEmpty) snap.files
       else if (matched.isEmpty) Nil
       else if (pruneKeys.nonEmpty) {
-        val keyDf = src.select(pruneKeys.map { case (t, s) =>
+        val pruning = new KeyPruning(snap, pruneKeys.map(_._1))
+        if (pruning.aggs.isEmpty) snap.files
+        else pruning.files(src.select(pruneKeys.map { case (t, s) =>
           val f = fields.find(_.name.equalsIgnoreCase(t)).get
           col(s"`$s`").cast(f.dataType).as(f.name)
-        }: _*).distinct()
-        keyPrunedFiles(snap, keyDf, pruneKeys.map(_._1))
+        }: _*).agg(pruning.aggs.head, pruning.aggs.tail: _*).head, 0)
       } else snap.files
 
     val addrCols = Seq(PositionDeleteGroup.FileKeyCol, PositionDeleteGroup.PosCol)
@@ -1097,7 +1116,7 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     }: _*).unionByName(projected.select(joinKeys.map(k => col(s"`$k`")): _*))
       .distinct().localCheckpoint()
     val specs = partitionFields()
-    val partPruned: Seq[DataFile] = keyPrunedFiles(snap, allKeys, joinKeys)
+    val pruning = new KeyPruning(snap, joinKeys)
     // Zone-map refinement on top of partition pruning, the deleteByKeys
     // shape: a matching row needs EVERY key component inside the key
     // frame's [min, max], so files whose stats exclude any component
@@ -1107,15 +1126,16 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     // Bounds ignore null key components (a null never equals, so null
     // tuples match nothing); an all-null/empty component means no row
     // can match at all.
-    // the trailing count(*) rides the same aggregation pass; it feeds
-    // the kept-join broadcast decision below (one fewer action per
-    // keyed apply)
+    // count(*) and the partition pruning's derived values ride the same
+    // aggregation pass; the count feeds the kept-join broadcast decision
+    // below (one fewer action per keyed apply)
     val boundsRow = {
       val aggs = joinKeys.flatMap(k => Seq(min(col(s"`$k`")), max(col(s"`$k`")),
-        sum(when(col(s"`$k`").isNull, 1L).otherwise(0L)))) :+ count(lit(1))
+        sum(when(col(s"`$k`").isNull, 1L).otherwise(0L)))) ++ (count(lit(1)) +: pruning.aggs)
       allKeys.agg(aggs.head, aggs.tail: _*).head
     }
     val nAllKeys = boundsRow.getLong(3 * joinKeys.size)
+    val partPruned: Seq[DataFile] = pruning.files(boundsRow, 3 * joinKeys.size + 1)
     def componentHasNull(i: Int): Boolean =
       !boundsRow.isNullAt(3 * i + 2) && boundsRow.getLong(3 * i + 2) > 0
     val anyNullKey = nullSafeKeys && joinKeys.indices.exists(componentHasNull)
@@ -2055,37 +2075,46 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
   }
 
   /** Partition pruning for keyed rewrites (upsert / deleteByKeys /
-    * net-apply): a target file is CARRIED when any partition field
-    * sourced from a key column proves its stored value absent from the
-    * key frame's derived set — with a multi-field spec every
-    * key-sourced field prunes independently (day(ts) AND bucket(n,id)
-    * both cut). Unknown/absent values and Hive's null-vs-'' string
-    * conflation always rewrite (sound side).
+    * mergeRows / net-apply): a target file is CARRIED when any
+    * partition field sourced from a key column proves its stored value
+    * absent from the key frame's derived set — with a multi-field spec
+    * every key-sourced field prunes independently (day(ts) AND
+    * bucket(n,id) both cut). Unknown/absent values and Hive's
+    * null-vs-'' string conflation always rewrite (sound side).
+    *
+    * Pruning runs no action of its own: the caller folds [[aggs]] into
+    * an aggregation it already runs over the key frame, then hands the
+    * result row to [[files]].
     */
-  private def keyPrunedFiles(snap: Snapshot, keyDf: DataFrame,
-                             joinKeys: Seq[String]): Seq[DataFile] = {
-    val pfs = partitionFields().filter(pf =>
-      joinKeys.exists(_.equalsIgnoreCase(pf.sourceCol)) &&
-        snap.schema.fields.exists(_.name.equalsIgnoreCase(pf.sourceCol)))
-    if (pfs.isEmpty) return snap.files
-    val deriveds = pfs.map { pf =>
-      val srcField = snap.schema.fields.find(_.name.equalsIgnoreCase(pf.sourceCol)).get
-      val derived = keyDf
-        .select(pf.derive(col(s"`${srcField.name}`"), srcField.dataType).as("v"))
-        .distinct().collect()
-        .map(r => Option(r.getString(0))).toSet
-      (pf, srcField.dataType, derived)
+  private final class KeyPruning(snap: Snapshot, joinKeys: Seq[String]) {
+    private val fields: Seq[(PartitionField, StructField)] = partitionFields()
+      .filter(pf => joinKeys.exists(_.equalsIgnoreCase(pf.sourceCol)))
+      .flatMap(pf => snap.schema.fields.find(_.name.equalsIgnoreCase(pf.sourceCol)).map(pf -> _))
+
+    /** One derived-value set per key-sourced field — struct-wrapped
+      * because collect_set drops NULLs, and a NULL key's NULL derived
+      * value must still reach [[files]].
+      */
+    val aggs: Seq[Column] = fields.map { case (pf, f) =>
+      collect_set(struct(pf.derive(col(s"`${f.name}`"), f.dataType)))
     }
-    snap.files.filter(f => deriveds.forall { case (pf, srcType, derived) =>
-      f.partitionValues.flatMap(_.get(pf.fieldName)) match {
-        // Hive default-partition encoding conflates null and '' for
-        // string sources: a null stored value may hide ''-keyed rows,
-        // so such files must always be rewritten
-        case Some(None) if srcType == StringType => true
-        case Some(v) => derived.contains(v)
-        case None    => true // unpartitioned / unknown ⇒ must rewrite
+
+    /** The rewrite set, given the [[aggs]] values at `row(at)` onward. */
+    def files(row: Row, at: Int): Seq[DataFile] = {
+      val deriveds = fields.zipWithIndex.map { case ((pf, f), i) =>
+        (pf, f.dataType, row.getSeq[Row](at + i).map(r => Option(r.getString(0))).toSet)
       }
-    })
+      snap.files.filter(f => deriveds.forall { case (pf, srcType, derived) =>
+        f.partitionValues.flatMap(_.get(pf.fieldName)) match {
+          // Hive default-partition encoding conflates null and '' for
+          // string sources: a null stored value may hide ''-keyed rows,
+          // so such files must always be rewritten
+          case Some(None) if srcType == StringType => true
+          case Some(v) => derived.contains(v)
+          case None    => true // unpartitioned / unknown ⇒ must rewrite
+        }
+      })
+    }
   }
 
   private def morMode(snap: Snapshot): String =
@@ -3515,11 +3544,17 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
         // hash-distribute on the partition-value TUPLE (Iceberg's
         // write.distribution-mode=hash): each combination lands in one
         // task, so a commit writes one file per partition combination
-        // instead of (tasks × partitions) small files. Callers that
-        // pre-arranged a distribution (clustering rewrite) keep it.
+        // instead of (tasks × partitions) small files. The partition
+        // count is explicit because AQE coalesces a count-less shuffle
+        // of a small write into ONE task, which then writes every
+        // tuple's file in series; a shuffle with an explicit count is
+        // never coalesced, so distinct tuples write in parallel tasks.
+        // Callers that pre-arranged a distribution (clustering rewrite)
+        // keep it.
         val arranged =
           if (preserveDistribution) derived
-          else derived.repartition(keyCols: _*)
+          else derived.repartition(
+            spark.conf.get("spark.sql.shuffle.partitions").toInt, keyCols: _*)
         val sorted =
           if (sortCols.isEmpty) arranged
           else arranged.sortWithinPartitions(keyCols ++ sortCols: _*)

@@ -636,6 +636,53 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
     t.scan().count() shouldBe 2 // nothing committed
   }
 
+  test("partitioned write shape: one file per tuple, tuples written in parallel tasks") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    val s = spark
+    import s.implicits._
+    val sc = spark.sparkContext
+    val t = cat().ensure(TableIdent("ns", "wshape"), Some("bucket(8, id)"))
+    t.append((0L until 400L).map(i => (i, "2024-01-01", s"v$i")).toDF("id", "day", "name"))
+    val before = t.currentOrFail().files.map(_.path).toSet
+    before.size shouldBe 8
+
+    // the tasks that wrote rows for jobs tagged as the upsert's
+    val upsertStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val writers = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.op") == "upsert"))
+          e.stageIds.foreach(upsertStages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (upsertStages.contains(e.stageId) && e.taskMetrics != null &&
+            e.taskMetrics.outputMetrics.recordsWritten > 0)
+          writers.add(e.taskInfo.taskId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.op", "upsert")
+      // copy-on-write (a tiny rewrite stays under the MoR threshold):
+      // every bucket holds a key, so all 8 files rewrite
+      try t.upsert((0L until 400L by 2).map(i => (i, "2024-01-02", s"u$i"))
+        .toDF("id", "day", "name"), Seq("id"))
+      finally sc.setLocalProperty("graft.test.op", null)
+      eventually(timeout(Span(30, Seconds))) { writers.size should be > 1 }
+    } finally sc.removeSparkListener(listener)
+    val after = t.currentOrFail().files
+    after.map(_.path).toSet.intersect(before) shouldBe empty
+    after.size shouldBe 8
+    t.scan().count() shouldBe 400
+    t.scan().where("name LIKE 'u%'").count() shouldBe 200
+
+    // one partition tuple still lands in one task: one file
+    val d = cat().ensure(TableIdent("ns", "wshape_day"), Some("day(ts)"))
+    d.append(spark.range(0, 200, 1, 4).select(col("id"),
+      lit(java.sql.Timestamp.valueOf("2024-03-05 10:00:00")).as("ts")))
+    d.currentOrFail().files.size shouldBe 1
+  }
+
   test("schema evolution: scan null-fills files written before the new column") {
     val s = spark
     import s.implicits._

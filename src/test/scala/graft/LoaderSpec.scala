@@ -8,7 +8,7 @@ import graft.loader.{Loader, WriteStrategy}
 import graft.table.{GraftCatalog, TableIdent}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, explode, lit, udf}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -216,4 +216,38 @@ class LoaderSpec extends AnyFunSuite with Matchers {
     t.scan().orderBy("amt").collect().map(_.getDecimal(0).toPlainString).toSeq shouldBe
       Seq("12.3400", "123456789012.3456")
   }
+
+  test("upsert evaluates a nondeterministic source once: no duplicate keys, rowsLoaded = rows committed") {
+    val c = cat()
+    val id = TableIdent("ns", "ups_nondet")
+    def cfg(ts: Instant) = LoaderConfig(writeMode = WriteMode.Upsert,
+      joinCols = Some(Seq("id")), partitionCol = Some("bucket(8, id)"),
+      loadTimestamp = Some(ts))
+    val (t0, t1) = (Instant.parse("2024-01-01T00:00:00Z"), Instant.parse("2024-01-02T00:00:00Z"))
+    new Loader(c, cfg(t0)).loadData(spark.range(0, 100).select(col("id"), lit("base").as("name")), id)
+    // each evaluation of the source yields another key set of another
+    // size; a source read once per pass (duplicate check, pruning, anti
+    // join, write) carries or keeps a file holding a key it then inserts
+    NondetKeys.evals.set(0)
+    val src = spark.range(0, 1, 1, 1)
+      .select(explode(NondetKeys.ids()).as("id"), lit("new").as("name"))
+    val res = new Loader(c, cfg(t1)).loadData(src, id)
+    val rows = c.load(id).scan()
+    rows.groupBy("id").count().where(col("count") > 1).count() shouldBe 0
+    rows.count() shouldBe 100 // every source key already existed
+    res.rowsLoaded shouldBe
+      rows.where(col("_load_dttm") === lit(java.sql.Timestamp.from(t1))).count()
+  }
+}
+
+/** A source that changes on every evaluation: evaluation k returns k
+  * distinct ids of the 0..99 range. The counter lives on the driver,
+  * which runs the tasks under local mode.
+  */
+object NondetKeys {
+  val evals = new java.util.concurrent.atomic.AtomicInteger
+  val ids = udf { () =>
+    val k = evals.incrementAndGet()
+    (0 until k).map(i => ((k * 13 + i * 29) % 100).toLong)
+  }.asNondeterministic()
 }
