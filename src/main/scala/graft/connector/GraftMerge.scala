@@ -252,12 +252,10 @@ case class GraftMergeDeleteCommand(table: GraftV2Table, source: LogicalPlan,
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
 
   override def run(spark: SparkSession): Seq[Row] = {
+    // deleteByKeys checkpoints the key frame itself, so a
+    // nondeterministic USING subquery is evaluated once
     val keyDf = org.apache.spark.sql.GraftSqlShim.ofRows(spark, source)
       .select(keys.map(k => org.apache.spark.sql.functions.col(s"`$k`")): _*)
-      // one evaluation: deleteByKeys derives partitions and anti-joins
-      // from this frame; a nondeterministic USING subquery must not
-      // produce different keys per pass
-      .localCheckpoint()
     table.underlying.deleteByKeys(keyDf, keys)
     Nil
   }
@@ -328,11 +326,8 @@ case class GraftMergeCommand(table: GraftV2Table, source: LogicalPlan,
       // (MERGE INSERT * semantics; the analyzer already proved coercibility)
       .select(table.underlying.schema.fields.map(f =>
         org.apache.spark.sql.functions.col(s"`${f.name}`").cast(f.dataType).as(f.name)): _*)
-      // pin ONE evaluation: upsert reads the source several times
-      // (dup-key check, partition derivation, anti-join, final write) —
-      // a nondeterministic USING subquery must not produce different
-      // rows per pass
-      .localCheckpoint()
+    // upsert checkpoints the source itself, so a nondeterministic
+    // USING subquery is evaluated once
     table.underlying.upsert(sourceDf, keys)
     Nil
   }

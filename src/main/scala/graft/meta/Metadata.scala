@@ -16,6 +16,31 @@ final case class ColumnStats(
     max: Option[String],
     nullCount: Option[Long])
 
+object ColumnStats {
+
+  /** The order of string stats: Unicode code point order, which is the
+    * unsigned UTF-8 byte order Parquet footers and Spark's `min`/`max`
+    * and comparisons use. `String.compareTo` orders UTF-16 code units
+    * instead, and the two disagree once a supplementary character
+    * (U+10000 and up, e.g. emoji) meets one in U+E000–U+FFFF: pruning
+    * with it would rule out files that hold the value.
+    */
+  val StringOrdering: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int = {
+      var i = 0
+      var j = 0
+      while (i < a.length && j < b.length) {
+        val ca = a.codePointAt(i)
+        val cb = b.codePointAt(j)
+        if (ca != cb) return Integer.compare(ca, cb)
+        i += Character.charCount(ca)
+        j += Character.charCount(cb)
+      }
+      Integer.compare(a.length - i, b.length - j)
+    }
+  }
+}
+
 /** One data file tracked by a snapshot.
   *
   * `path` is relative to the table root (files are immutable and uniquely
@@ -101,7 +126,8 @@ object ManifestSummary {
               Some((Some(ns.min.bigDecimal.toPlainString),
                 Some(xs.max.bigDecimal.toPlainString)))
             } catch { case _: NumberFormatException => None }
-          } else Some((Some(mins.min), Some(maxes.max)))
+          } else Some((Some(mins.min(ColumnStats.StringOrdering)),
+            Some(maxes.max(ColumnStats.StringOrdering))))
         val nulls = ss.map(_.nullCount).foldLeft(Option(0L)) {
           case (Some(a), Some(b)) => Some(a + b)
           case _ => None

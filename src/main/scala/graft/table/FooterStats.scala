@@ -209,12 +209,12 @@ object FooterStats extends Serializable {
   private final case class StrCmp(v: String) extends Cmp
   private def minOf(a: Cmp, b: Cmp): Cmp = (a, b) match {
     case (NumCmp(x), NumCmp(y)) => NumCmp(x.min(y))
-    case (StrCmp(x), StrCmp(y)) => StrCmp(if (x <= y) x else y)
+    case (StrCmp(x), StrCmp(y)) => StrCmp(ColumnStats.StringOrdering.min(x, y))
     case _                      => a
   }
   private def maxOf(a: Cmp, b: Cmp): Cmp = (a, b) match {
     case (NumCmp(x), NumCmp(y)) => NumCmp(x.max(y))
-    case (StrCmp(x), StrCmp(y)) => StrCmp(if (x >= y) x else y)
+    case (StrCmp(x), StrCmp(y)) => StrCmp(ColumnStats.StringOrdering.max(x, y))
     case _                      => a
   }
   private def render(c: Cmp): String = c match {

@@ -185,23 +185,8 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
               "compact() to migrate the layout first")
       }
     }
-    val newGroup = writeDataFiles(projected, snap.schema, specs)
-    val removedPaths = removed.map(_.path).toSet
-    log.commit { parent =>
-      val p = parent.getOrElse(snap)
-      requireNoConflict(p, removedPaths, "overwrite")
-      requireNoNewDeletes(p, snap, "overwrite")
-      val ns = p.lastSeq + 1
-      val groups = pruneGroups(p.schema, p.fileGroups, removedPaths) :+
-        newGroup.withSeq(ns)
-      p.copy(
-        snapshotId = newSnapshotId(),
-        operation = "overwrite-dynamic",
-        properties = p.properties ++ props,
-        fileGroups = groups,
-        deleteGroups = purgeDeletes(groups, p.deleteGroups),
-        lastSeq = ns)
-    }
+    commitRewrite(snap, "overwrite-dynamic", removed.map(_.path).toSet,
+      Some(writeDataFiles(projected, snap.schema, specs)), props = props)
   }
 
   /** Copy-on-write delete (backs W3, `core/strategies.py:51-66`):
@@ -253,25 +238,8 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
           .filter(!coalesce(expr(predicateSql), lit(false)))
         Some(writeDataFiles(rewriteDf, snap.schema, partitionFields()))
       }
-    val removed = (dropped ++ mayMatch).map(_.path).toSet
-    val untouched = skipGroups.map(_.manifest).toSet
-    log.commit { parent =>
-      val p = parent.getOrElse(snap)
-      requireNoConflict(p, removed, "delete")
-      requireNoNewDeletes(p, snap, "delete")
-      // groups untouched by this delete (incl. any committed concurrently)
-      // carry their manifests verbatim; partially-affected groups get a
-      // pruned manifest (metadata-only, no data rewrite)
-      val ns = if (rewritten.isDefined) p.lastSeq + 1 else p.lastSeq
-      val groups = pruneGroups(p.schema, p.fileGroups, removed, untouched) ++
-        rewritten.map(_.withSeq(ns)).toSeq
-      p.copy(
-        snapshotId = newSnapshotId(),
-        operation = "delete",
-        fileGroups = groups,
-        deleteGroups = purgeDeletes(groups, p.deleteGroups),
-        lastSeq = ns)
-    }
+    commitRewrite(snap, "delete", (dropped ++ mayMatch).map(_.path).toSet, rewritten,
+      untouched = skipGroups.map(_.manifest).toSet)
   }
 
   /** Copy-on-write UPDATE (`UPDATE ... SET ... WHERE ...`): files that
@@ -388,23 +356,9 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     }
     val rewriteDf = applySet(readFilesMoR(snap, affected, snap.schema),
       snap.schema, set, cond = Some(cond))
-    val rewritten = writeDataFiles(rewriteDf, snap.schema, partitionFields())
-    val removed = affected.map(_.path).toSet
-    val untouched = skipGroups.map(_.manifest).toSet
-    log.commit { parent =>
-      val p = parent.getOrElse(snap)
-      requireNoConflict(p, removed, "update")
-      requireNoNewDeletes(p, snap, "update")
-      val ns = p.lastSeq + 1
-      val groups = pruneGroups(p.schema, p.fileGroups, removed, untouched) :+
-        rewritten.withSeq(ns)
-      p.copy(
-        snapshotId = newSnapshotId(),
-        operation = "update",
-        fileGroups = groups,
-        deleteGroups = purgeDeletes(groups, p.deleteGroups),
-        lastSeq = ns)
-    }
+    commitRewrite(snap, "update", affected.map(_.path).toSet,
+      Some(writeDataFiles(rewriteDf, snap.schema, partitionFields())),
+      untouched = skipGroups.map(_.manifest).toSet)
   }
 
   /** Integrity audit of the CURRENT snapshot — the `fsck` every table
@@ -552,202 +506,79 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
           s"no longer current (e.g. ${gone.head}); re-run against the latest snapshot")
   }
 
-  /** Upsert / MERGE (W4+J1, `core/strategies.py:69-81`): rows in
-    * `source` replace target rows with equal `keys`; unmatched source
-    * rows are inserted. Target files in partitions the source cannot
-    * touch are carried over untouched — at scale an upsert into one
-    * day's partition rewrites one day, not 100 TB.
+  /** The copy-on-write commit every file-replacing write ends in. Each
+    * attempt of [[MetadataLog]]'s optimistic publish, against the
+    * latest parent:
+    *  - checks that the parent still holds each `requireParentProps`
+    *    value (the marker CAS), that every `removed` file is still live,
+    *    and that no delete group and no column rename/drop landed since
+    *    `snap` was analyzed — a rewrite computed from stale inputs would
+    *    resurrect or duplicate rows;
+    *  - gives `added` the next sequence number (none is taken when the
+    *    commit only drops files);
+    *  - reuses every manifest the commit does not touch, and writes a
+    *    pruned manifest only for a group that loses some files;
+    *    `untouched` manifests, ruled out at planning time, are not even
+    *    parsed;
+    *  - drops delete groups that no older data group needs any more.
     */
-  def upsert(source: DataFrame, keys: Seq[String], props: Map[String, String] = Map.empty): Snapshot = {
-    require(keys.nonEmpty, "upsert requires join columns")
-    val snap = currentOrFail()
-    // one evaluation: the source feeds the duplicate check, partition
-    // pruning, the anti join and the write — a nondeterministic source
-    // must not give each pass different rows, or a key only the write
-    // saw could land beside a carried file that still holds it (the
-    // deleteByKeys / mergeRows guard)
-    val projected = Projection.project(source, snap.schema).localCheckpoint()
-    val keyCols = keys.map(k => col(s"`$k`"))
-    val nonNull = keyCols.map(_.isNotNull).reduce(_ && _)
-    val pruning = new KeyPruning(snap, keys)
-
-    // One grouped aggregation over the (small) source side, never the
-    // target, answers three questions:
-    //   - duplicate source keys make the merge ambiguous (which version
-    //     wins?) — reject like PyIceberg's upsert does (SURVEY §7.4).
-    //     NULL keys are exempt: SQL equality never matches them, so two
-    //     NULL-keyed rows are two independent inserts, not a conflict;
-    //   - the non-null key count, for the anti join's broadcast;
-    //   - the derived partition values, for rewrite-set pruning.
-    val stats = {
-      val perKey = projected.groupBy(keyCols: _*).agg(count(lit(1)).as("_graft_n"))
-      val aggs = Seq(
-        first(when(nonNull && col("_graft_n") > 1, struct(keyCols: _*)), ignoreNulls = true),
-        count(when(nonNull, lit(1)))) ++ pruning.aggs
-      perKey.agg(aggs.head, aggs.tail: _*).head
-    }
-    if (!stats.isNullAt(0))
-      throw new IllegalArgumentException(
-        s"upsert source contains duplicate keys on (${keys.mkString(", ")}), " +
-          s"e.g. ${stats.getStruct(0).toSeq.mkString("/")}")
-    val nKeys = stats.getLong(1)
-    val specs = partitionFields()
-
-    // Partition pruning for the rewrite set: a target file whose
-    // partition value is not among the source's derived values cannot
-    // contain a matched key *if* the partition source column is a key
-    // (common case: upsert keyed on the partition column's source).
-    // Multi-field specs prune on EVERY key-sourced field.
-    val rewriteSet: Seq[DataFile] = pruning.files(stats, 2)
-    val srcKeys = projected.select(keyCols: _*).where(nonNull)
-
-    // Merge-on-read upsert (the Iceberg MoR MERGE shape): past the
-    // threshold the upsert becomes ONE commit of an append group plus
-    // an equality-delete group on the source keys — cost O(source),
-    // zero target files rewritten. The delete's sequence equals the
-    // new group's, so it masks only OLDER rows: matched rows are
-    // replaced, unmatched source rows are plain inserts, and a later
-    // upsert's delete group supersedes this one's rows the same way.
-    if (rewriteSet.nonEmpty && chooseMor(snap, rewriteSet.map(_.sizeBytes).sum))
-      return morMergeCommit(snap, projected, srcKeys.distinct(), keys, "upsert", props)
-
-    // no distinct(): duplicate keys were rejected above, and an anti
-    // join is indifferent to them anyway. The checkpointed keys carry
-    // no size stats, so broadcast them below the merge bound or the
-    // anti join shuffles every rewritten file (see deleteByKeys).
-    val kept = readFilesMoR(snap, rewriteSet, snap.schema).join(
-      if (nKeys <= GraftTable.MergeBroadcastRowBound) broadcast(srcKeys) else srcKeys,
-      keys, "left_anti")
-    val merged = kept.unionByName(projected)
-    val newGroup = writeDataFiles(merged, snap.schema, specs)
-    val rewrittenPaths = rewriteSet.map(_.path).toSet
+  private def commitRewrite(snap: Snapshot, op: String, removed: Set[String],
+                            added: Option[FileGroup],
+                            untouched: Set[String] = Set.empty,
+                            props: Map[String, String] = Map.empty,
+                            requireParentProps: Map[String, String] = Map.empty): Snapshot =
     log.commit { parent =>
       val p = parent.getOrElse(snap)
-      requireNoConflict(p, rewrittenPaths, "upsert")
-      requireNoNewDeletes(p, snap, "upsert")
-      val ns = p.lastSeq + 1
-      val groups = pruneGroups(p.schema, p.fileGroups, rewrittenPaths) :+
-        newGroup.withSeq(ns)
+      requireParentPropsUnchanged(p, requireParentProps)
+      requireNoConflict(p, removed, op)
+      requireNoNewDeletes(p, snap, op)
+      val ns = if (added.isDefined) p.lastSeq + 1 else p.lastSeq
+      val groups = pruneGroups(p.schema, p.fileGroups, removed, untouched) ++
+        added.map(_.withSeq(ns))
       p.copy(
         snapshotId = newSnapshotId(),
-        operation = "upsert",
+        operation = op,
         properties = p.properties ++ props,
         fileGroups = groups,
         deleteGroups = purgeDeletes(groups, p.deleteGroups),
         lastSeq = ns)
     }
+
+  /** Upsert / MERGE (W4+J1, `core/strategies.py:69-81`): rows in
+    * `source` replace target rows with equal `keys`; unmatched source
+    * rows are inserted. Duplicate source keys make the merge ambiguous
+    * (which version wins?) and are rejected like PyIceberg's upsert
+    * (SURVEY §7.4); NULL keys are exempt — SQL equality never matches
+    * them, so two NULL-keyed rows are two independent inserts. Target
+    * files the keys provably miss (partition values, zone maps) carry
+    * over untouched — at scale an upsert into one day's partition
+    * rewrites one day, not 100 TB.
+    */
+  def upsert(source: DataFrame, keys: Seq[String], props: Map[String, String] = Map.empty): Snapshot = {
+    require(keys.nonEmpty, "upsert requires join columns")
+    applyKeyed(planKeyed(currentOrFail(), "upsert", keys, None, Some(source),
+      nullSafe = false), props)
   }
 
   /** Bulk keyed delete: target rows whose `keys` tuple appears in
     * `source` are removed — [[upsert]]'s rewrite machinery without the
     * insert side, which is the GDPR/opt-out deletion shape: delete a
     * million user ids from a 100 TB table rewriting only the files
-    * that can contain them. Partition pruning carries files the
-    * source's derived partition values cannot touch (when the
-    * partition source column is a key), and removal inside the
-    * rewrite set is an anti join on the key columns — the source is
-    * key-tuples only, so it broadcasts long before the corpus would.
-    * NULL source keys never match (SQL equality), like upsert.
-    * Duplicate source keys are fine here (deleting twice is deleting
-    * once), and re-running the same delete converges to the same
-    * state — CDC appliers can replay it under at-least-once delivery.
+    * that can contain them. NULL source keys never match (SQL
+    * equality), like upsert. Duplicate source keys are fine here
+    * (deleting twice is deleting once), and re-running the same delete
+    * converges to the same state — CDC appliers can replay it under
+    * at-least-once delivery. Past the merge-on-read threshold the keys
+    * land as an equality-delete group instead — commit cost O(keys),
+    * zero data files rewritten. When no file can hold a matched key,
+    * nothing is committed.
     */
   def deleteByKeys(source: DataFrame, keys: Seq[String]): Snapshot = {
     require(keys.nonEmpty, "deleteByKeys requires key columns")
-    val snap = currentOrFail()
-    def targetField(k: String) = snap.schema.fields
-      .find(_.name.equalsIgnoreCase(k)).getOrElse(
-        throw new IllegalArgumentException(s"unknown key column '$k'"))
-    // one evaluation: the key frame feeds three separate passes
-    // (partition derivation, zone-map bounds, anti join) — a
-    // nondeterministic caller source (sample, rand filter, shuffled
-    // limit) must not produce different key sets per pass, or pruning
-    // computed from one pass could carry files whose matches only the
-    // anti-join pass saw
-    val keyDf = source.select(keys.map { k =>
-      val f = targetField(k)
-      col(s"`$k`").cast(f.dataType).as(f.name)
-    }: _*).distinct().localCheckpoint()
-    val joinKeys = keys.map(targetField(_).name)
-    val specs = partitionFields()
-    val pruning = new KeyPruning(snap, joinKeys)
-    // Zone-map pruning on top of partition pruning: a matching row
-    // needs EVERY key component inside the key frame's [min, max], so
-    // a file whose stats exclude any component's range cannot contain
-    // a match and carries over unrewritten — on an unpartitioned but
-    // key-clustered table this is what keeps a recent-ids delete from
-    // rewriting years of history. One tiny agg over the (small) key
-    // frame; a key column with a NULL bound means no tuple can match
-    // at all (empty frame, or an all-null component) — no-op commit.
-    // count(*) and the partition pruning's derived values ride the
-    // bounds pass — the count feeds the kept-join broadcast decision
-    val boundsRow = {
-      val aggs = joinKeys.flatMap(k =>
-        Seq(min(col(s"`$k`")), max(col(s"`$k`")))) ++ (count(lit(1)) +: pruning.aggs)
-      keyDf.agg(aggs.head, aggs.tail: _*).head
-    }
-    val nKeyRows = boundsRow.getLong(2 * joinKeys.size)
-    if (joinKeys.indices.exists(i => boundsRow.isNullAt(2 * i))) return snap
-    // carried files are implicit: only rewriteSet paths are pruned
-    val rewriteSet: Seq[DataFile] = pruning.files(boundsRow, 2 * joinKeys.size + 1)
-    val rangePred: org.apache.spark.sql.catalyst.expressions.Expression =
-      joinKeys.zipWithIndex.map { case (k, i) =>
-        import org.apache.spark.sql.catalyst.expressions._
-        val dt = targetField(k).dataType
-        val attr = org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(k)
-        And(
-          GreaterThanOrEqual(attr, Literal.create(boundsRow.get(2 * i), dt)),
-          LessThanOrEqual(attr, Literal.create(boundsRow.get(2 * i + 1), dt)))
-      }.reduce(org.apache.spark.sql.catalyst.expressions.And(_, _))
-    val (statRewrite, statCarry) = rewriteSet.partition(f =>
-      StatsPruner.evaluate(f, snap.schema, rangePred).may)
-    val _2 = statCarry
-    if (statRewrite.isEmpty) return snap // no file can contain a matched key
-    // Merge-on-read path: instead of rewriting every may-contain file,
-    // the key frame itself is written as a small parquet manifest and
-    // recorded as an equality-delete group — commit cost is O(keys),
-    // scans anti-join it against older-seq groups, compaction purges
-    // it. This is what keeps a scattered keyed delete (GDPR/opt-out
-    // lists) from rewriting a 100 TB table.
-    if (chooseMor(snap, statRewrite.map(_.sizeBytes).sum)) {
-      val keyGroup = writeDataFiles(
-        keyDf.select(joinKeys.map(k => col(s"`$k`")): _*),
-        deleteKeySchema(snap, joinKeys), Nil)
-      return log.commit { parent =>
-        val p = parent.getOrElse(snap)
-        requireStableNames(p, snap, "delete") // delete keys name columns
-        val ns = p.lastSeq + 1
-        p.copy(
-          snapshotId = newSnapshotId(),
-          operation = "delete",
-          deleteGroups = purgeDeletes(p.fileGroups, p.deleteGroups) :+
-            EqualityDeleteGroup(ns, joinKeys, keyGroup.withSeq(ns)),
-          lastSeq = ns)
-      }
-    }
-    // checkpointed key frame = no size stats, no AQE: broadcast it
-    // below the merge bound or the anti join shuffles every rewritten
-    // file (see applyNetChanges)
-    val keyJ = if (nKeyRows <= GraftTable.MergeBroadcastRowBound)
-      broadcast(keyDf) else keyDf
-    val kept = readFilesMoR(snap, statRewrite, snap.schema)
-      .join(keyJ, joinKeys, "left_anti")
-    val newGroup = writeDataFiles(kept, snap.schema, specs)
-    val rewrittenPaths = statRewrite.map(_.path).toSet
-    log.commit { parent =>
-      val p = parent.getOrElse(snap)
-      requireNoConflict(p, rewrittenPaths, "delete")
-      requireNoNewDeletes(p, snap, "delete")
-      val ns = p.lastSeq + 1
-      val groups = pruneGroups(p.schema, p.fileGroups, rewrittenPaths) :+
-        newGroup.withSeq(ns)
-      p.copy(
-        snapshotId = newSnapshotId(),
-        operation = "delete",
-        fileGroups = groups,
-        deleteGroups = purgeDeletes(groups, p.deleteGroups),
-        lastSeq = ns)
-    }
+    val plan = planKeyed(currentOrFail(), "delete", keys, Some(source), None,
+      nullSafe = false)
+    if (plan.rewriteSet.isEmpty) plan.snap
+    else applyKeyed(plan)
   }
 
   /** General `MERGE INTO` — arbitrary WHEN clauses beyond the canonical
@@ -906,7 +737,8 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
           case Some(ins) =>
             val chk = ins.localCheckpoint()
             if (chk.isEmpty) return snap
-            return appendMergeCommit(snap, chk, specs, Set.empty)
+            return commitRewrite(snap, "merge", Set.empty,
+              Some(writeDataFiles(chk, snap.schema, specs)))
         }
       }
       // every matched row CARRYING an affected key re-emits (clause
@@ -980,9 +812,11 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
       // insert-only outcome: skip the commit when nothing inserts
       val chk = merged.localCheckpoint()
       if (chk.isEmpty) return snap
-      return appendMergeCommit(snap, chk, specs, Set.empty)
+      return commitRewrite(snap, "merge", Set.empty,
+        Some(writeDataFiles(chk, snap.schema, specs)))
     }
-    appendMergeCommit(snap, merged, specs, rewriteSet.map(_.path).toSet)
+    commitRewrite(snap, "merge", rewriteSet.map(_.path).toSet,
+      Some(writeDataFiles(merged, snap.schema, specs)))
   }
 
   /** NOT MATCHED BY SOURCE clause-id offset: past the matched clause
@@ -1033,53 +867,24 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     }: _*)
   }
 
-  /** Shared commit tail of [[mergeRows]] — prune the rewritten paths,
-    * append the new group, standard CoW conflict checks.
-    */
-  private def appendMergeCommit(snap: Snapshot, rows: DataFrame,
-                                specs: Seq[PartitionField],
-                                removed: Set[String]): Snapshot = {
-    val newGroup = writeDataFiles(rows, snap.schema, specs)
-    log.commit { parent =>
-      val p = parent.getOrElse(snap)
-      requireNoConflict(p, removed, "merge")
-      requireNoNewDeletes(p, snap, "merge")
-      val ns = p.lastSeq + 1
-      val groups = pruneGroups(p.schema, p.fileGroups, removed) :+
-        newGroup.withSeq(ns)
-      p.copy(
-        snapshotId = newSnapshotId(),
-        operation = "merge",
-        fileGroups = groups,
-        deleteGroups = purgeDeletes(groups, p.deleteGroups),
-        lastSeq = ns)
-    }
-  }
-
   /** Apply the NET effect of a CDC batch — a set of keyed deletes and a
     * set of keyed upserts, disjoint per key — in ONE commit:
     * target rows matching ANY key (delete or upsert) are removed and
     * the upsert rows inserted, so a reader never observes the
     * intermediate "deletes applied, inserts missing" state a
     * deleteByKeys-then-upsert sequence exposes between its two
-    * snapshots. Partition pruning carries files the combined key set
-    * cannot touch (when the partition source column is a key), exactly
-    * like [[upsert]]; the rewrite reads the pruned set once. Upsert
-    * rows follow upsert's duplicate-key contract; delete keys may
-    * repeat ([[deleteByKeys]]' contract). Idempotent under replay:
-    * re-deleting absent keys is a no-op and re-upserting the same rows
-    * converges — at-least-once CDC appliers can re-run a batch safely.
+    * snapshots. Upsert rows follow upsert's duplicate-key contract;
+    * delete keys may repeat ([[deleteByKeys]]' contract). Idempotent
+    * under replay: re-deleting absent keys is a no-op and re-upserting
+    * the same rows converges — at-least-once CDC appliers can re-run a
+    * batch safely. An empty batch still commits, so `props` (a CDC or
+    * refresh marker) always advances.
     *
     * `nullSafeKeys` switches key matching from SQL equality to
     * null-safe equality (`<=>`): a NULL key component addresses the
     * row whose stored component is NULL, instead of matching nothing.
     * The materialized-view refresh path needs this — a GROUP BY over a
     * nullable expression legitimately owns a NULL-keyed group row.
-    * When a batch actually carries a NULL component the zone-map
-    * refinement drops that component's conjunct (a range never admits
-    * NULL) and the commit stays copy-on-write (equality-delete groups
-    * apply with SQL equality on read, which would never mask the NULL
-    * tuple); batches without NULLs keep the exact default-path pruning.
     */
   def applyNetChanges(deleteKeys: DataFrame, upserts: DataFrame,
                       keys: Seq[String],
@@ -1087,141 +892,133 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
                       requireParentProps: Map[String, String] = Map.empty,
                       nullSafeKeys: Boolean = false): Snapshot = {
     require(keys.nonEmpty, "applyNetChanges requires key columns")
-    val snap = currentOrFail()
-    def targetField(k: String) = snap.schema.fields
-      .find(_.name.equalsIgnoreCase(k)).getOrElse(
+    applyKeyed(planKeyed(currentOrFail(), "merge", keys, Some(deleteKeys), Some(upserts),
+      nullSafeKeys), props, requireParentProps)
+  }
+
+  /** A planned keyed write under operation `op`: the checkpointed
+    * upsert rows, the key frame the rewrite anti-joins (and a
+    * merge-on-read commit masks) with and its row count, and the pruned
+    * rewrite set. `keys` are the target's column names.
+    */
+  private final class KeyedPlan(val snap: Snapshot, val op: String, val keys: Seq[String],
+                                val rows: Option[DataFrame], val keyDf: DataFrame,
+                                val nKeys: Long, val rewriteSet: Seq[DataFile],
+                                val nullSafe: Boolean, val anyNullKey: Boolean)
+
+  /** Plan step of the one keyed write behind [[upsert]], [[deleteByKeys]]
+    * and [[applyNetChanges]]. Both input frames are checkpointed first,
+    * so every later pass (aggregation, anti join, write) sees ONE
+    * evaluation: a nondeterministic caller source (sample, rand filter,
+    * shuffled limit) must not let pruning computed from one evaluation
+    * carry a file whose matches only another evaluation saw, nor leave
+    * a key twice in the table.
+    *
+    * Then one grouped aggregation over the union of delete keys and
+    * upsert keys — the small side, never the target — yields:
+    *  - an example duplicate upsert key, which is rejected;
+    *  - the count of key rows that can match, for the anti join's
+    *    broadcast;
+    *  - each key component's [min, max] and NULL count, for zone maps;
+    *  - the derived partition values of [[KeyPruning]].
+    *
+    * A matching row needs EVERY key component inside the key frame's
+    * [min, max], so files whose stats exclude any component carry over
+    * unrewritten — on an unpartitioned but key-clustered table (the
+    * replica and materialized-view layout) a batch costs O(affected
+    * files), not O(table). Under SQL equality a tuple with a NULL
+    * component matches nothing and is neither a match candidate nor a
+    * duplicate. Under `nullSafe` NULL is a key value: a component that
+    * holds one gives no range conjunct (a range never admits NULL), and
+    * the other components still refine.
+    */
+  private def planKeyed(snap: Snapshot, op: String, keys: Seq[String],
+                        deleteKeys: Option[DataFrame], upserts: Option[DataFrame],
+                        nullSafe: Boolean): KeyedPlan = {
+    val joinKeys = keys.map(k =>
+      snap.schema.fields.find(_.name.equalsIgnoreCase(k)).fold(k)(_.name))
+    val dels = deleteKeys.map(src => src.select(keys.map { k =>
+      val f = snap.schema.fields.find(_.name.equalsIgnoreCase(k)).getOrElse(
         throw new IllegalArgumentException(s"unknown key column '$k'"))
-    val joinKeys = keys.map(targetField(_).name)
-    // one evaluation each: both frames feed several passes (dup-key
-    // check, partition derivation, anti join, final write) — same
-    // determinism guard as the MERGE command path
-    val projected = Projection.project(upserts, snap.schema).localCheckpoint()
-    val dupKeys = {
-      // under null-safe keys a NULL tuple addresses a row, so two
-      // upserts with the same NULL-containing tuple are duplicates too
-      // (groupBy buckets NULLs together — exactly <=> semantics)
-      val base = if (nullSafeKeys) projected
-                 else projected.where(
-                   joinKeys.map(k => col(s"`$k`").isNotNull).reduce(_ && _))
-      base.groupBy(joinKeys.map(k => col(s"`$k`")): _*)
-        .agg(count(lit(1)).as("_n")).where(col("_n") > 1).limit(1).collect()
-    }
-    if (dupKeys.nonEmpty)
-      throw new IllegalArgumentException(
-        s"applyNetChanges upserts contain duplicate keys on (${keys.mkString(", ")}), " +
-          s"e.g. ${dupKeys.head.toSeq.init.mkString("/")}")
-    val allKeys = deleteKeys.select(keys.map { k =>
-      val f = targetField(k)
       col(s"`$k`").cast(f.dataType).as(f.name)
-    }: _*).unionByName(projected.select(joinKeys.map(k => col(s"`$k`")): _*))
-      .distinct().localCheckpoint()
-    val specs = partitionFields()
+    }: _*).localCheckpoint())
+    val rows = upserts.map(Projection.project(_, snap.schema).localCheckpoint())
+    val keyCols = joinKeys.map(k => col(s"`$k`"))
+    val allKeys = (dels.map(_.withColumn("_graft_up", lit(0))).toSeq ++
+      rows.map(_.select(keyCols :+ lit(1).as("_graft_up"): _*)).toSeq)
+      .reduce(_.unionByName(_))
+    val matchable = if (nullSafe) lit(true) else keyCols.map(_.isNotNull).reduce(_ && _)
     val pruning = new KeyPruning(snap, joinKeys)
-    // Zone-map refinement on top of partition pruning, the deleteByKeys
-    // shape: a matching row needs EVERY key component inside the key
-    // frame's [min, max], so files whose stats exclude any component
-    // carry over unrewritten. On an UNPARTITIONED but key-clustered
-    // target (the common replica/materialized-view layout) this is what
-    // keeps per-batch apply cost at O(affected files), not O(table).
-    // Bounds ignore null key components (a null never equals, so null
-    // tuples match nothing); an all-null/empty component means no row
-    // can match at all.
-    // count(*) and the partition pruning's derived values ride the same
-    // aggregation pass; the count feeds the kept-join broadcast decision
-    // below (one fewer action per keyed apply)
-    val boundsRow = {
-      val aggs = joinKeys.flatMap(k => Seq(min(col(s"`$k`")), max(col(s"`$k`")),
-        sum(when(col(s"`$k`").isNull, 1L).otherwise(0L)))) ++ (count(lit(1)) +: pruning.aggs)
-      allKeys.agg(aggs.head, aggs.tail: _*).head
+    val stats = {
+      val perKey = allKeys.groupBy(keyCols: _*)
+        .agg(sum("_graft_up").as("_graft_up"), count(lit(1)).as("_graft_n"))
+      val aggs = Seq(
+        first(when(matchable && col("_graft_up") > 1, struct(keyCols: _*)), ignoreNulls = true),
+        coalesce(sum(when(matchable, col("_graft_n"))), lit(0L))) ++
+        keyCols.flatMap(c => Seq(min(c), max(c), count(when(c.isNull, 1)))) ++
+        pruning.aggs
+      perKey.agg(aggs.head, aggs.tail: _*).head
     }
-    val nAllKeys = boundsRow.getLong(3 * joinKeys.size)
-    val partPruned: Seq[DataFile] = pruning.files(boundsRow, 3 * joinKeys.size + 1)
-    def componentHasNull(i: Int): Boolean =
-      !boundsRow.isNullAt(3 * i + 2) && boundsRow.getLong(3 * i + 2) > 0
-    val anyNullKey = nullSafeKeys && joinKeys.indices.exists(componentHasNull)
-    val rewriteSet: Seq[DataFile] = {
-      import org.apache.spark.sql.catalyst.expressions._
-      def rangeOf(k: String, i: Int): Expression = {
-        val dt = targetField(k).dataType
-        val attr = org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(k)
-        And(
-          GreaterThanOrEqual(attr, Literal.create(boundsRow.get(3 * i), dt)),
-          LessThanOrEqual(attr, Literal.create(boundsRow.get(3 * i + 1), dt)))
-      }
-      if (!nullSafeKeys) {
-        // a component with no non-null values means no tuple can match
-        // under SQL equality at all
-        if (joinKeys.indices.exists(i => boundsRow.isNullAt(3 * i))) Nil
-        else {
-          val rangePred = joinKeys.zipWithIndex.map { case (k, i) => rangeOf(k, i) }
-            .reduce(And(_, _): Expression)
-          partPruned.filter(f => StatsPruner.evaluate(f, snap.schema, rangePred).may)
+    if (!stats.isNullAt(0))
+      throw new IllegalArgumentException(
+        s"$op rows contain duplicate keys on (${keys.mkString(", ")}), " +
+          s"e.g. ${stats.getStruct(0).toSeq.mkString("/")}")
+    val nKeys = stats.getLong(1)
+    def hasNull(i: Int) = stats.getLong(4 + 3 * i) > 0
+    val rewriteSet: Seq[DataFile] =
+      if (nKeys == 0) Nil // no key tuple can match a stored row
+      else {
+        import org.apache.spark.sql.catalyst.expressions._
+        val conjuncts = joinKeys.indices.filterNot(i => nullSafe && hasNull(i)).map { i =>
+          val attr = org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(joinKeys(i))
+          val dt = snap.schema(joinKeys(i)).dataType
+          And(GreaterThanOrEqual(attr, Literal.create(stats.get(2 + 3 * i), dt)),
+            LessThanOrEqual(attr, Literal.create(stats.get(3 + 3 * i), dt)))
         }
-      } else if (joinKeys.indices.forall(i =>
-          boundsRow.isNullAt(3 * i) && !componentHasNull(i))) {
-        Nil // empty key frame: nothing can match
-      } else {
-        // a NULL-containing component contributes no conjunct — its
-        // NULL tuples can live in any file, and a [min,max] range never
-        // admits them. Remaining components still refine.
-        val conjuncts = joinKeys.zipWithIndex.collect {
-          case (k, i) if !componentHasNull(i) && !boundsRow.isNullAt(3 * i) =>
-            rangeOf(k, i)
-        }
+        val partPruned = pruning.files(stats, 2 + 3 * joinKeys.size)
         if (conjuncts.isEmpty) partPruned
         else {
-          val rangePred = conjuncts.reduce(And(_, _): Expression)
+          val rangePred = conjuncts.reduce[Expression](And(_, _))
           partPruned.filter(f => StatsPruner.evaluate(f, snap.schema, rangePred).may)
         }
       }
-    }
-    // Merge-on-read net-apply: the batch's upserts land as an append
-    // group and ALL net keys (deletes + upserts) as one equality-delete
-    // group at the same sequence — replication cost O(change volume)
-    // with zero target rewrites (see [[morMergeCommit]]). Disabled when
-    // a null-safe batch actually carries a NULL key component: the
-    // equality-delete group applies with SQL equality on read and would
-    // never mask the stored NULL-keyed row.
-    if (rewriteSet.nonEmpty && !anyNullKey &&
-        chooseMor(snap, rewriteSet.map(_.sizeBytes).sum))
-      return morMergeCommit(snap, projected,
-        allKeys.where(joinKeys.map(k => col(s"`$k`").isNotNull).reduce(_ && _)),
-        joinKeys, "merge", props, requireParentProps)
-    val kept = {
+    new KeyedPlan(snap, op, joinKeys, rows, allKeys.where(matchable).select(keyCols: _*),
+      nKeys, rewriteSet, nullSafe, anyNullKey = nullSafe && joinKeys.indices.exists(hasNull))
+  }
+
+  /** Apply step of the keyed write. Past [[chooseMor]] the rows land
+    * as an append group masked by an equality-delete group on the keys
+    * ([[morMergeCommit]]) — unless a null-safe batch carries a NULL
+    * component: equality deletes apply with SQL equality on read and
+    * would never mask the stored NULL-keyed row. Otherwise the rewrite
+    * set is read once, anti-joined against the key frame and written
+    * back with the upsert rows in one [[commitRewrite]]. The
+    * checkpointed key frame carries no size stats and compiles without
+    * AQE, so it is broadcast explicitly below the merge bound — else
+    * the planner sort-merge-joins it, shuffling every rewritten file to
+    * anti-join a batch-sized key list.
+    */
+  private def applyKeyed(plan: KeyedPlan,
+                         props: Map[String, String] = Map.empty,
+                         requireParentProps: Map[String, String] = Map.empty): Snapshot = {
+    import plan._
+    if (rewriteSet.nonEmpty && !anyNullKey && chooseMor(snap, rewriteSet.map(_.sizeBytes).sum))
+      return morMergeCommit(snap, rows, keyDf, keys, op, props, requireParentProps)
+    val kept = if (rewriteSet.isEmpty) None else Some {
       val base = readFilesMoR(snap, rewriteSet, snap.schema)
-      // the checkpointed key frame compiles without AQE and carries no
-      // size stats, so the planner sort-merge-joins it against the
-      // rewrite set — shuffling every rewritten file to anti-join a
-      // batch-sized key list. Broadcast below the merge bound (count
-      // came with the bounds aggregation), same stance as mergeRows.
-      val keysJ = if (nAllKeys <= GraftTable.MergeBroadcastRowBound)
-        broadcast(allKeys) else allKeys
-      if (nullSafeKeys) {
-        val renamed = keysJ.toDF(joinKeys.map("_graft_nk_" + _): _*)
+      val keysJ =
+        if (nKeys <= GraftTable.MergeBroadcastRowBound) broadcast(keyDf) else keyDf
+      if (nullSafe) {
+        val renamed = keysJ.toDF(keys.map("_graft_nk_" + _): _*)
         base.join(renamed,
-          joinKeys.map(k => col(s"`$k`") <=> col(s"`_graft_nk_$k`")).reduce(_ && _),
+          keys.map(k => col(s"`$k`") <=> col(s"`_graft_nk_$k`")).reduce(_ && _),
           "left_anti")
-      } else base.join(keysJ, joinKeys, "left_anti")
+      } else base.join(keysJ, keys, "left_anti")
     }
-    val merged = kept.unionByName(projected)
-    val newGroup = writeDataFiles(merged, snap.schema, specs)
-    val rewrittenPaths = rewriteSet.map(_.path).toSet
-    log.commit { parent =>
-      val p = parent.getOrElse(snap)
-      requireParentPropsUnchanged(p, requireParentProps)
-      requireNoConflict(p, rewrittenPaths, "merge")
-      requireNoNewDeletes(p, snap, "merge")
-      val ns = p.lastSeq + 1
-      val groups = pruneGroups(p.schema, p.fileGroups, rewrittenPaths) :+
-        newGroup.withSeq(ns)
-      p.copy(
-        snapshotId = newSnapshotId(),
-        operation = "merge",
-        properties = p.properties ++ props,
-        fileGroups = groups,
-        deleteGroups = purgeDeletes(groups, p.deleteGroups),
-        lastSeq = ns)
-    }
+    val written = writeDataFiles((kept.toSeq ++ rows.toSeq).reduce(_.unionByName(_)),
+      snap.schema, partitionFields())
+    commitRewrite(snap, op, rewriteSet.map(_.path).toSet, Some(written),
+      props = props, requireParentProps = requireParentProps)
   }
 
   /** Compare-and-set guard for marker-carrying commits (CDC replication,
@@ -1764,7 +1561,8 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     stats.get(PositionDeleteGroup.FileKeyCol) match {
       case Some(cs) => (cs.min, cs.max) match {
         case (Some(mn), Some(mx)) =>
-          val k = fileKeyOf(f.path); k >= mn && k <= mx
+          val k = fileKeyOf(f.path); val o = ColumnStats.StringOrdering
+          o.gteq(k, mn) && o.lteq(k, mx)
         case _ => true
       }
       case None => true
@@ -1820,7 +1618,9 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
                   (for { a <- num(fmin); b <- num(fmax)
                          c <- num(dmin); d <- num(dmax) }
                     yield !(b < c || a > d)).getOrElse(true)
-                case StringType => !(fmax < dmin || fmin > dmax)
+                case StringType =>
+                  val o = ColumnStats.StringOrdering
+                  !(o.lt(fmax, dmin) || o.gt(fmin, dmax))
                 case _ => true
               }
             case _ => true
@@ -2037,39 +1837,36 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
           s"(${broken.mkString(", ")}); re-run against the latest snapshot")
   }
 
-  /** Merge-on-read MERGE commit: `rows` land as a fresh data group and
-    * `keyDf`'s tuples as an equality-delete group AT THE SAME sequence
-    * — the delete masks only strictly older data, so the new rows are
-    * visible and every older row with a matching key is logically
-    * replaced, all in one O(source) commit with zero rewrites. NULL
+  /** Merge-on-read MERGE commit: `rows` (none for a keyed delete) land
+    * as a fresh data group and `keyDf`'s distinct tuples as an
+    * equality-delete group AT THE SAME sequence — the delete masks only
+    * strictly older data, so the new rows are visible and every older
+    * row with a matching key is logically replaced, all in one
+    * O(source) commit with zero rewrites. NULL
     * key tuples are excluded by the caller (SQL equality never matches
     * them; such rows are plain inserts). Pure addition — no conflict
     * with concurrent commits (a racing delete lands at a lower seq and
     * never touches this data).
     */
-  private def morMergeCommit(snap: Snapshot, rows: DataFrame, keyDf: DataFrame,
+  private def morMergeCommit(snap: Snapshot, rows: Option[DataFrame], keyDf: DataFrame,
                              keys: Seq[String], op: String,
                              props: Map[String, String],
-                             requireParentProps: Map[String, String] = Map.empty): Snapshot = {
-    val joinKeys = keys.map(k => snap.schema.fields
-      .find(_.name.equalsIgnoreCase(k)).get.name)
-    val dataGroup = writeDataFiles(rows, snap.schema, partitionFields())
-    val keyGroup = writeDataFiles(
-      keyDf.select(joinKeys.map(k => col(s"`$k`")): _*),
-      deleteKeySchema(snap, joinKeys), Nil)
+                             requireParentProps: Map[String, String]): Snapshot = {
+    val dataGroup = rows.map(writeDataFiles(_, snap.schema, partitionFields()))
+    val keyGroup = writeDataFiles(keyDf.distinct(), deleteKeySchema(snap, keys), Nil)
     log.commit { parent =>
       val p = parent.getOrElse(snap)
       requireParentPropsUnchanged(p, requireParentProps)
       requireStableNames(p, snap, op) // data + key files carry analyzed names
       val ns = p.lastSeq + 1
-      val groups = p.fileGroups :+ dataGroup.withSeq(ns)
+      val groups = p.fileGroups ++ dataGroup.map(_.withSeq(ns))
       p.copy(
         snapshotId = newSnapshotId(),
         operation = op,
         properties = p.properties ++ props,
         fileGroups = groups,
         deleteGroups = purgeDeletes(groups, p.deleteGroups) :+
-          EqualityDeleteGroup(ns, joinKeys, keyGroup.withSeq(ns)),
+          EqualityDeleteGroup(ns, keys, keyGroup.withSeq(ns)),
         lastSeq = ns)
     }
   }
@@ -2669,20 +2466,8 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     val df = scanSnapshot(snap)
       .repartitionByRange(targetFiles, keyCols: _*)
       .sortWithinPartitions(keyCols: _*)
-    val newGroup = writeDataFiles(df, snap.schema, specs, preserveDistribution = true)
-    val clustered = snap.files.map(_.path).toSet
-    log.commit { parent =>
-      val p = parent.getOrElse(snap)
-      requireNoConflict(p, clustered, "cluster")
-      requireNoNewDeletes(p, snap, "cluster")
-      val ns = p.lastSeq + 1
-      val groups = pruneGroups(p.schema, p.fileGroups, clustered) :+
-        newGroup.withSeq(ns)
-      p.copy(snapshotId = newSnapshotId(), operation = "cluster",
-        fileGroups = groups,
-        deleteGroups = purgeDeletes(groups, p.deleteGroups),
-        lastSeq = ns)
-    }
+    commitRewrite(snap, "cluster", snap.files.map(_.path).toSet,
+      Some(writeDataFiles(df, snap.schema, specs, preserveDistribution = true)))
   }
 
   /** Register this table's current snapshot as a temp view so plain
@@ -3076,26 +2861,14 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     val df =
       if (partKeys.nonEmpty) df0.repartition(math.max(1, targetFiles), partKeys: _*)
       else df0.repartition(math.max(1, targetFiles))
-    val newGroup = writeDataFiles(df, snap.schema, specs)
-    val compacted = snap.files.map(_.path).toSet
-    log.commit { parent =>
-      val p = parent.getOrElse(snap)
-      requireNoConflict(p, compacted, "compact")
-      requireNoNewDeletes(p, snap, "compact")
-      // groups committed concurrently (e.g. a racing append) carry over;
-      // only the files this compaction actually read are replaced. The
-      // compacted rows had every pending MoR delete applied (the scan
-      // did it), land at a fresh top seq, and purgeDeletes then drops
-      // delete groups nothing older references — compaction is the
-      // delete-file GC.
-      val ns = p.lastSeq + 1
-      val groups = pruneGroups(p.schema, p.fileGroups, compacted) :+
-        newGroup.withSeq(ns)
-      p.copy(snapshotId = newSnapshotId(), operation = "compact",
-        fileGroups = groups,
-        deleteGroups = purgeDeletes(groups, p.deleteGroups),
-        lastSeq = ns)
-    }
+    // groups committed concurrently (e.g. a racing append) carry over;
+    // only the files this compaction actually read are replaced. The
+    // compacted rows had every pending MoR delete applied (the scan
+    // did it) and land at a fresh top seq, so the commit's delete purge
+    // drops delete groups nothing older references — compaction is the
+    // delete-file GC.
+    commitRewrite(snap, "compact", snap.files.map(_.path).toSet,
+      Some(writeDataFiles(df, snap.schema, specs)))
   }
 
   /** Coalesce accumulated merge-on-read delete groups WITHOUT touching

@@ -3,7 +3,7 @@ package graft.table
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
 
-import graft.meta.DataFile
+import graft.meta.{ColumnStats, DataFile}
 import graft.partitioning.{PartitionField, Transform}
 
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -220,7 +220,7 @@ object PartitionPruner {
         dt match {
           case StringType =>
             val lv = v.toString.take(w)
-            val c = p.compareTo(lv)
+            val c = ColumnStats.StringOrdering.compare(p, lv)
             op match {
               case "="  => Tri(may = c == 0, all = false)
               case ">" | ">=" => Tri(may = c >= 0, all = c > 0)
@@ -263,7 +263,7 @@ object PartitionPruner {
     val cOpt: Option[Int] = dt match {
       case IntegerType | LongType | FloatType | DoubleType | _: DecimalType =>
         try Some(BigDecimal(p).compare(BigDecimal(v.toString))) catch { case _: Exception => None }
-      case StringType => Some(p.compareTo(v.toString))
+      case StringType => Some(ColumnStats.StringOrdering.compare(p, v.toString))
       case DateType =>
         Some(p.compareTo(LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong).toString))
       case TimestampType | TimestampNTZType =>

@@ -1,6 +1,6 @@
 package graft.table
 
-import graft.meta.DataFile
+import graft.meta.{ColumnStats, DataFile}
 import graft.table.PartitionPruner.{Tri, Unknown}
 
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
@@ -121,7 +121,7 @@ object StatsPruner {
 
   private def compare(a: Cmp, b: Cmp): Int = (a, b) match {
     case (Num(x), Num(y)) => x.compare(y)
-    case (Str(x), Str(y)) => x.compareTo(y)
+    case (Str(x), Str(y)) => ColumnStats.StringOrdering.compare(x, y)
     case _                => 0 // mixed domains never happen for one column
   }
 
@@ -153,7 +153,7 @@ object StatsPruner {
           Some(Num(BigDecimal(cv.asInstanceOf[Number].longValue())))
         case FloatType | DoubleType =>
           val d = cv.asInstanceOf[Number].doubleValue()
-          if (d.isNaN) None else Some(Num(BigDecimal(d)))
+          if (d.isNaN || d.isInfinite) None else Some(Num(BigDecimal(d)))
         case d: DecimalType => cv match {
           case dec: org.apache.spark.sql.types.Decimal => Some(Num(dec.toBigDecimal))
           case dec: java.math.BigDecimal               => Some(Num(BigDecimal(dec)))

@@ -110,4 +110,97 @@ class CdcRandomSpec extends AnyFunSuite with Matchers {
     val seeds = sys.env.get("GRAFT_CDC_SEEDS").map(_.toInt).getOrElse(10)
     (1 to seeds).foreach(runOne)
   }
+
+  private type Key = (Option[Long], Option[String])
+
+  /** One random keyed history on a composite-key table (a BIGINT, b
+    * STRING; both nullable) against a Scala model: key → the values of
+    * the rows stored under it. Under SQL equality a key with a NULL
+    * component matches nothing, so such rows pile up; under null-safe
+    * equality NULL is an ordinary key value.
+    */
+  private def runKeyed(seed: Int): Unit = {
+    val s = spark
+    import s.implicits._
+    val rnd = new Random(seed)
+    val mode = if (seed % 2 == 0) "cow" else "mor"
+    val spec = if (rnd.nextBoolean()) Some("bucket(4, a)") else None
+    val dir = java.nio.file.Files.createTempDirectory("graft-keyed").toString
+    val tbl = GraftCatalog(s, dir).ensure(TableIdent("ns", "k"), spec)
+    val keys = Seq("a", "b")
+    var model = Map.empty[Key, Vector[String]]
+    def complete(k: Key) = k._1.isDefined && k._2.isDefined
+
+    def randKey(): Key = (
+      if (rnd.nextInt(8) == 0) None else Some(1L + rnd.nextInt(12)),
+      if (rnd.nextInt(6) == 0) None else Some(Seq("x", "y")(rnd.nextInt(2))))
+    // upsert rows: complete keys unique (the duplicate-key contract),
+    // NULL-keyed rows may repeat unless null-safe matching treats NULL
+    // as a value
+    def randUpserts(step: Int, n: Int, nullSafe: Boolean, avoid: Set[Key]): Seq[(Key, String)] = {
+      val ks = Seq.fill(n)(randKey()).filterNot(avoid)
+      val uniq = if (nullSafe) ks.distinct
+        else ks.filter(complete).distinct ++ ks.filterNot(complete)
+      uniq.zipWithIndex.map { case (k, i) => (k, s"s$step-$i") }
+    }
+    def rowsDf(rows: Seq[(Key, String)]): DataFrame =
+      rows.map { case ((a, b), v) => (a, b, v) }.toDF("a", "b", "v")
+    def keysDf(ks: Seq[Key]): DataFrame = ks.toDF("a", "b")
+    def put(rows: Seq[(Key, String)]): Unit = rows.foreach { case (k, v) =>
+      model = model.updated(k, model.getOrElse(k, Vector.empty) :+ v)
+    }
+
+    val seedRows = randUpserts(0, 10, nullSafe = false, Set.empty)
+    tbl.append(rowsDf(seedRows))
+    put(seedRows)
+    tbl.updateProperties(Map(graft.table.GraftTable.DeleteModeProp -> mode))
+
+    (1 to 8).foreach { step =>
+      val nullSafe = rnd.nextBoolean()
+      val op = rnd.nextInt(4)
+      val clue = s"seed=$seed mode=$mode spec=$spec step=$step op=$op nullSafe=$nullSafe"
+      withClue(clue + " ") {
+        op match {
+          case 0 => // upsert: SQL equality
+            val ups = randUpserts(step, 1 + rnd.nextInt(5), nullSafe = false, Set.empty)
+            tbl.upsert(rowsDf(ups), keys)
+            tbl.currentOrFail().operation shouldBe "upsert"
+            ups.filter(r => complete(r._1)).foreach(r => model -= r._1)
+            put(ups)
+          case 1 => // keyed delete; keys repeat and may hold NULLs
+            val base = Seq.fill(1 + rnd.nextInt(4))(randKey())
+            val dels = base ++ base.take(rnd.nextInt(base.size + 1))
+            tbl.deleteByKeys(keysDf(dels), keys)
+            dels.filter(complete).foreach(model -= _)
+          case 2 => // net apply, deletes and upserts disjoint per key
+            val dels = Seq.fill(rnd.nextInt(4))(randKey())
+            val ups = randUpserts(step, rnd.nextInt(4), nullSafe, dels.toSet)
+            tbl.applyNetChanges(keysDf(dels), rowsDf(ups), keys, nullSafeKeys = nullSafe)
+            tbl.currentOrFail().operation shouldBe "merge"
+            (dels ++ ups.map(_._1)).filter(k => nullSafe || complete(k)).foreach(model -= _)
+            put(ups)
+          case _ => // a duplicate complete key is rejected and commits nothing
+            val v = tbl.currentOrFail().version
+            val k: Key = (Some(1L + rnd.nextInt(12)), Some("x"))
+            val ex = the[IllegalArgumentException] thrownBy {
+              if (rnd.nextBoolean()) tbl.upsert(rowsDf(Seq(k -> "d1", k -> "d2")), keys)
+              else tbl.applyNetChanges(keysDf(Nil), rowsDf(Seq(k -> "d1", k -> "d2")),
+                keys, nullSafeKeys = nullSafe)
+            }
+            ex.getMessage should include("duplicate keys")
+            tbl.currentOrFail().version shouldBe v
+        }
+        val got = tbl.scan().select("a", "b", "v").as[(Option[Long], Option[String], String)]
+          .collect().toSeq.map(r => (r._1, r._2, r._3)).sortBy(_.toString)
+        val want = model.toSeq.flatMap { case ((a, b), vs) => vs.map(v => (a, b, v)) }
+          .sortBy(_.toString)
+        got shouldBe want
+      }
+    }
+  }
+
+  test("random keyed batches: upsert / deleteByKeys / applyNetChanges == map model") {
+    val seeds = sys.env.get("GRAFT_CDC_SEEDS").map(_.toInt).getOrElse(4)
+    (1 to seeds).map(100 + _).foreach(runKeyed)
+  }
 }

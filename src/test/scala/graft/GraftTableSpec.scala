@@ -61,6 +61,13 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
     t.applyNetChanges(df().limit(0), df((10L, "2024-03-02", "ok")), Seq("id"),
       props = Map("marker" -> "9"), requireParentProps = Map("marker" -> "8"))
     t.scan().count() shouldBe 4
+    // an empty batch still advances the marker: it commits, changes no row
+    val v = t.currentOrFail().version
+    t.applyNetChanges(df().limit(0), df().limit(0), Seq("id"),
+      props = Map("marker" -> "10"), requireParentProps = Map("marker" -> "9"))
+    t.currentOrFail().version shouldBe v + 1
+    t.currentOrFail().properties("marker") shouldBe "10"
+    t.scan().count() shouldBe 4
   }
 
   test("keyed-apply kept-rows join broadcasts the key frame (round-19 plan pin)") {
@@ -130,6 +137,40 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
     t.scan().where(col("id") === 1001L).count() shouldBe 0
     t.scan().where(col("id") === 1050L).select("name").head.getString(0) shouldBe "updated"
     t.scan().count() shouldBe 200 // 100 low + 101 high - 1 deleted
+
+    // upsert runs the same keyed rewrite: an update of the 1000s plus a
+    // fresh id above them leaves the low file byte-identical too
+    val u = cat().ensure(TableIdent("ns", "upzone"))
+    u.append((1L to 100L).map(i => (i, s"n$i")).toDF("id", "name").coalesce(1))
+    u.append((1000L to 1100L).map(i => (i, s"n$i")).toDF("id", "name").coalesce(1))
+    val uLow = u.currentOrFail().files.find(_.stats("id").max.exists(_.toLong <= 100)).get.path
+    u.upsert(Seq((1050L, "updated"), (1200L, "new")).toDF("id", "name"), Seq("id"))
+    u.currentOrFail().files.map(_.path) should contain(uLow)
+    u.scan().where(col("id") === 1050L).select("name").head.getString(0) shouldBe "updated"
+    u.scan().count() shouldBe 202
+  }
+
+  test("string zone maps order by code point: keyed writes never prune away a supplementary-character key") {
+    val s = spark
+    import s.implicits._
+    // U+1F600 sorts after U+FF21 in UTF-8 byte order (footers, Spark's
+    // min/max), but its UTF-16 lead surrogate sorts before U+FF21
+    val (fw, emoji) = ("\uFF21", "\uD83D\uDE00")
+    def seeded(name: String) = {
+      val t = cat().ensure(TableIdent("ns", name))
+      t.append(Seq((fw, 1L), (emoji, 2L)).toDF("k", "v").coalesce(1))
+      t.currentOrFail().files.head.stats("k") shouldBe
+        graft.meta.ColumnStats(Some(fw), Some(emoji), Some(0))
+      t
+    }
+    val u = seeded("cpupsert")
+    u.upsert(Seq((emoji, 20L)).toDF("k", "v"), Seq("k"))
+    u.scan().orderBy("v").collect().map(r => (r.getString(0), r.getLong(1))).toSeq shouldBe
+      Seq((fw, 1L), (emoji, 20L))
+    u.scan().where(col("k") === emoji).count() shouldBe 1
+    val d = seeded("cpdelete")
+    d.deleteByKeys(Seq(emoji).toDF("k"), Seq("k"))
+    d.scan().collect().map(_.getString(0)).toSeq shouldBe Seq(fw)
   }
 
   test("append accumulates; snapshots chain by parent id") {
@@ -1319,11 +1360,14 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
     import s.implicits._
     val t = morTable("t1")
     val filesBefore = t.currentOrFail().files.map(_.path).toSet
+    val groupsBefore = t.currentOrFail().fileGroups.size
     t.deleteByKeys(Seq(3L, 7L, 15L, 999L).toDF("id"), Seq("id"))
     val snap = t.currentOrFail()
     snap.operation shouldBe "delete"
     // the whole point: not one data file rewritten or dropped
     snap.files.map(_.path).toSet shouldBe filesBefore
+    // and no empty data group rides along with the equality deletes
+    snap.fileGroups.size shouldBe groupsBefore
     snap.deleteGroups.size shouldBe 1
     t.scan().select("id").as[Long].collect().toSet shouldBe
       ((1L to 20L).toSet -- Set(3L, 7L, 15L))
@@ -1377,9 +1421,22 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
     import s.implicits._
     val t = morTable("t4")
     t.deleteByKeys(Seq(2L, 12L).toDF("id"), Seq("id"))
-    // an upsert (CoW rewrite of every file here) must not resurrect 2/12
     t.updateProperties(Map(graft.table.GraftTable.DeleteModeProp -> "cow"))
-    t.upsert(Seq((1L, "d1", "updated")).toDF("id", "day", "name"), Seq("id"))
+    // a CoW upsert of id 1 alone rewrites only the files whose id range
+    // holds 1; the others carry over and still need the pending delete
+    // group, so it is kept and 2/12 stay deleted
+    val high = t.currentOrFail().files
+      .filter(_.stats("id").min.exists(_.toLong >= 11L)).map(_.path).toSet
+    high should not be empty
+    t.upsert(Seq((1L, "d1", "first")).toDF("id", "day", "name"), Seq("id"))
+    t.currentOrFail().files.map(_.path).toSet should contain allElementsOf high
+    t.currentOrFail().deleteGroups should not be empty
+    t.scan().select("id").as[Long].collect().toSet shouldBe
+      ((1L to 20L).toSet -- Set(2L, 12L))
+    // an upsert (CoW rewrite of every file here: its keys span the whole
+    // id range, so zone maps carry no file) must not resurrect 2/12
+    t.upsert(Seq((1L, "d1", "updated"), (20L, "d20", "updated")).toDF("id", "day", "name"),
+      Seq("id"))
     t.scan().select("id").as[Long].collect().toSet shouldBe
       ((1L to 20L).toSet -- Set(2L, 12L))
     // the rewrite covered every older group, so the delete group purged

@@ -6,6 +6,8 @@ import graft.meta.{ColumnStats, DataFile, Snapshot}
 import graft.table.{GraftCatalog, StatsPruner, TableIdent}
 import graft.table.PartitionPruner.{Tri, Unknown}
 
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -68,6 +70,19 @@ class StatsPrunerSpec extends AnyFunSuite with Matchers {
     tri("name > 'zz'", s).may shouldBe false
     tri("name >= 'alpha'", s) shouldBe Tri(may = true, all = true)
     tri("name = 'beta'", s).may shouldBe true
+    // code point (UTF-8 byte) order, the order parquet footers and
+    // Spark use: U+1F600 sorts after U+FF21, though its UTF-16 lead
+    // surrogate (U+D83D) sorts before it
+    val (fw, emoji) = ("\uFF21", "\uD83D\uDE00")
+    val mixed = Map("name" -> ColumnStats(Some(fw), Some(emoji), Some(0)))
+    StatsPruner.evaluate(file(mixed), schema, EqualTo(
+      UnresolvedAttribute("name"), Literal(emoji))).may shouldBe true
+    StatsPruner.evaluate(file(mixed), schema, LessThanOrEqual(
+      UnresolvedAttribute("name"), Literal(emoji))).may shouldBe true
+    // the manifest summary merges file ranges in the same order
+    val files = Seq(fw, emoji).map(v => file(Map("name" -> ColumnStats(Some(v), Some(v), Some(0)))))
+    graft.meta.ManifestSummary.build(files, schema).stats("name") shouldBe
+      ColumnStats(Some(fw), Some(emoji), Some(0))
   }
 
   test("timestamp column vs string literal coerces through Catalyst cast") {
@@ -84,6 +99,12 @@ class StatsPrunerSpec extends AnyFunSuite with Matchers {
     tri("id > 5", Map.empty) shouldBe Unknown
     tri("nope > 5", Map("id" -> ColumnStats(Some("1"), Some("2"), Some(0)))) shouldBe Unknown
     tri("id > 5", Map("id" -> ColumnStats(None, None, Some(0)))) shouldBe Unknown
+    // an infinite bound (a keyed write's max over a double key) has no
+    // place in the stats domain either
+    val score = Map("score" -> ColumnStats(Some("1.0"), Some("2.0"), Some(0)))
+    StatsPruner.evaluate(file(score), schema, LessThanOrEqual(
+      UnresolvedAttribute("score"),
+      Literal(Double.PositiveInfinity))) shouldBe Unknown
   }
 
   test("write path harvests min/max/nulls from parquet footers") {
