@@ -1982,29 +1982,14 @@ object GraftMaterializedView {
     specFromJson(props(AggProp)).map { case Seq(n, k, s) => AggSpec(n, k, s) },
     props.get(GroupSetsProp).map(specFromJson(_).map(_.map(_.toInt))))
 
-  /** Per-column [lo, hi] range conjuncts over `keyFrame`'s group
-    * columns, for narrowing a scan to rows that can belong to an
-    * affected group. A column is skipped (sound: skipping only WIDENS
-    * the scan) when the frame holds a NULL in it — a range never admits
-    * the NULL-keyed group's rows — or when `skip(col)` says so (the
-    * cur-scan path skips binary floats whose bound would re-parse as a
-    * decimal literal). Returns (columnName, lo, hi) triples.
-    */
-  /** Counted broadcast for checkpointed changelog-bounded frames (slices,
-    * touched-key sets, recomputed groups): localCheckpoint compiles
-    * without AQE and reports no size stats, so the planner sort-merge-
-    * joins them against table-scale partners — shuffling the BIG side to
-    * meet a changelog-sized frame. The count is cheap (the frame is
-    * already materialized); below the bound an explicit hint keeps the
-    * big side unshuffled at every scale (guide §3.1, same stance as
-    * GraftTable.mergeRows/dedupTable).
-    */
-  private def bcIfSmall(df: DataFrame): DataFrame =
-    if (df.count() <= graft.table.GraftTable.MergeBroadcastRowBound) broadcast(df)
-    else df
-
-  /** [[bcIfSmall]] when the frame's row count is already known — no
-    * action runs.
+  /** Broadcast for checkpointed changelog-bounded frames (slices,
+    * touched-key sets, recomputed groups) whose row count `n` is already
+    * known: localCheckpoint compiles without AQE and reports no size
+    * stats, so the planner sort-merge-joins them against table-scale
+    * partners — shuffling the BIG side to meet a changelog-sized frame.
+    * Below the bound an explicit hint keeps the big side unshuffled at
+    * every scale (guide §3.1, same stance as
+    * GraftTable.mergeRows/dedupTable). No action runs.
     */
   private def bcIfSmallN(df: DataFrame, n: Long): DataFrame =
     if (n <= graft.table.GraftTable.MergeBroadcastRowBound) broadcast(df) else df
@@ -2025,6 +2010,14 @@ object GraftMaterializedView {
     })
   }
 
+  /** Per-column [lo, hi] range conjuncts over `keyFrame`'s group
+    * columns, for narrowing a scan to rows that can belong to an
+    * affected group. A column is skipped (sound: skipping only WIDENS
+    * the scan) when the frame holds a NULL in it — a range never admits
+    * the NULL-keyed group's rows — or when `skip(col)` says so
+    * ([[rangeSql]] skips binary floats whose bound would re-parse as a
+    * decimal literal). Returns (columnName, lo, hi) triples.
+    */
   private def rangeBounds(keyFrame: DataFrame, names: Seq[String],
                           skip: String => Boolean): Seq[(String, Any, Any)] = {
     if (names.isEmpty) return Nil // global aggregate: no key columns
@@ -2038,24 +2031,35 @@ object GraftMaterializedView {
     }
   }
 
-  /** MV dependency guard for SOURCE-table column evolution (round-16):
-    * an MV pins its definition SQL (and the derived filter/group/agg
-    * shape SQL) in the storage table's properties; renaming or dropping
-    * a source column that SQL references would leave the pinned text
-    * naming a column that no longer exists — the next refresh (or view
-    * read through a full-mode recompute) fails with a raw analysis
-    * error, or an incremental changelog slice silently selects nothing.
-    * This sweep finds every MV whose FACT, dimension, or UNION-ALL leg
-    * is `rel` AND whose pinned SQL references `column`, so DDL can
-    * refuse by name instead. Metadata-scale: one view-store listing per
-    * namespace plus one snapshot-properties read per MV — no job runs.
-    *
-    * The reference check is conservatively by NAME (last part of each
-    * unresolved attribute, case-insensitive): a joined MV whose
-    * dimension has a same-named column refuses too — a false refusal is
-    * a re-create, a false allow is a broken dashboard. A bare `*`
-    * outside COUNT(*) references every column.
+  /** Zone-map filter SQL narrowing a scan of `schema` to the rows that
+    * can join a key of `keyFrame`: per (key, column) pair of `keyCols`,
+    * the conjunct `column BETWEEN` the key's [min, max] in `keyFrame`,
+    * rendered through FilterSql's escaping. A pair contributes nothing
+    * when its column is not a bare column of `schema` (an expression
+    * key) or is a binary float — the bound renders through toString and
+    * re-parses as a decimal literal, and 1.1f != 1.1d under the widened
+    * comparison, so the boundary row would silently drop. Skipping only
+    * widens the scan; every caller joins on the exact keys afterwards.
+    * None when no conjunct lands.
     */
+  private def rangeSql(keyFrame: DataFrame, schema: org.apache.spark.sql.types.StructType,
+                       keyCols: Seq[(String, String)]): Option[String] = {
+    val cols = keyCols.flatMap { case (k, s) =>
+      val c = s.stripPrefix("`").stripSuffix("`")
+      schema.fields.find(_.name.equalsIgnoreCase(c)).map(f => k -> (c, f.dataType))
+    }
+    val byKey = cols.toMap
+    def binaryFloat(k: String) = byKey(k)._2 == org.apache.spark.sql.types.FloatType ||
+      byKey(k)._2 == org.apache.spark.sql.types.DoubleType
+    val sqls = rangeBounds(keyFrame, cols.map(_._1), binaryFloat).flatMap {
+      case (k, lo, hi) =>
+        FilterSql.toSql(org.apache.spark.sql.sources.And(
+          org.apache.spark.sql.sources.GreaterThanOrEqual(byKey(k)._1, lo),
+          org.apache.spark.sql.sources.LessThanOrEqual(byKey(k)._1, hi)))
+    }
+    if (sqls.isEmpty) None else Some(sqls.mkString("(", ") AND (", ")"))
+  }
+
   /** Every registered MV whose storage reads `rel` as its fact, a
     * dimension, or a UNION ALL leg — with the storage props for further
     * inspection. Metadata-scale sweep shared by the column-evolution,
@@ -2172,9 +2176,9 @@ object GraftMaterializedView {
     * (mv-name, marker-version) pairs — the proactive expire guard's
     * input (r17 verdict #3: nothing PREVENTED a retention job from
     * dropping versions a dependent MV's next refresh needs, silently
-    * forcing a 100 TB full recompute that surfaced only later as
-    * `changelogGone`). Covers the fact marker, dimension pins,
-    * UNION-ALL leg pins, MV-over-MV (`rel` = a level-1 storage table),
+    * forcing a 100 TB full recompute that surfaced only later as a
+    * changelog-gone refresh error). Covers the fact marker, dimension
+    * pins, UNION-ALL leg pins, MV-over-MV (`rel` = a level-1 storage table),
     * and COUNT(DISTINCT) dedup-level aux pins (`rel` = an aux table).
     * Metadata-scale, like every other MV guard sweep.
     */
@@ -2197,6 +2201,24 @@ object GraftMaterializedView {
         .map(v => (s"$ns.$vn", v))
     }
 
+  /** MV dependency guard for SOURCE-table column evolution (round-16):
+    * an MV pins its definition SQL (and the derived filter/group/agg
+    * shape SQL) in the storage table's properties; renaming or dropping
+    * a source column that SQL references would leave the pinned text
+    * naming a column that no longer exists — the next refresh (or view
+    * read through a full-mode recompute) fails with a raw analysis
+    * error, or an incremental changelog slice silently selects nothing.
+    * This sweep finds every MV whose FACT, dimension, or UNION-ALL leg
+    * is `rel` AND whose pinned SQL references `column`, so DDL can
+    * refuse by name instead. Metadata-scale: one view-store listing per
+    * namespace plus one snapshot-properties read per MV — no job runs.
+    *
+    * The reference check is conservatively by NAME (last part of each
+    * unresolved attribute, case-insensitive): a joined MV whose
+    * dimension has a same-named column refuses too — a false refusal is
+    * a re-create, a false allow is a broken dashboard. A bare `*`
+    * outside COUNT(*) references every column.
+    */
   def mviewsReferencing(spark: SparkSession, cat: GraftCatalog,
                         rel: String, column: String): Seq[String] =
     mviewsReadingWithProps(cat, rel).collect {
@@ -2567,6 +2589,171 @@ object GraftMaterializedView {
     (mode, cur, storage.currentOrFail().rowCount)
   }
 
+  /** The pinned inputs of one refresh, read once and shared by both
+    * refresh arms (aggregate and window).
+    *
+    * Pin policy: every relation's version is read ONCE, here — the
+    * fact's head `to`, each dimension's and each UNION ALL leg's current
+    * version. Every scan of the refresh (slices, recomputes, probes)
+    * uses that read, and the pins the refresh records ([[newPins]]) are
+    * exactly those reads. A relation committing between two reads would
+    * otherwise record a version the stored rows were not built with, a
+    * desync no moved check can see: every later increment would be
+    * silently wrong.
+    */
+  private final class RefreshInputs(cat: GraftCatalog, ns: String, name: String,
+                                    val storage: GraftTable,
+                                    val props: Map[String, String]) {
+    private def ident(r: String, what: String): TableIdent = r.split("/") match {
+      case Array(rns, rt) => TableIdent(rns, rt)
+      case other => sys.error(s"bad mview $what: ${other.mkString("/")}")
+    }
+    val applied: Int = props(AppliedProp).toInt
+    val factRel: String = props(SourceProp)
+    val src: GraftTable = cat.load(ident(factRel, "source"))
+    val to: Int = src.currentOrFail().version
+
+    /** Dimension joins as (rel, table, join type, condition). The stored
+      * rows were built with each dim AS OF its pin, so every incremental
+      * slice joins the signed fact rows to exactly the dim rows their
+      * original apply saw — which is what makes retraction exact.
+      */
+    val dimTbls: Seq[(String, GraftTable, String, String)] =
+      props.get(DimsProp).map(specFromJson(_).map {
+        case Seq(r, jt, c) => (r, cat.load(ident(r, "dim")), jt, c)
+      }).getOrElse(Nil)
+    private val dimPins: Map[String, Int] =
+      props.get(DimVersProp).map(dimVersFromJson).getOrElse(Map.empty)
+    def pinnedVer(r: String): Int = dimPins.getOrElse(r, sys.error(
+      s"materialized view $ns.$name: dimension $r carries no pinned version"))
+    val curVers: Map[String, Int] = dimTbls.map { case (r, t, _, _) =>
+      r -> t.currentOrFail().version
+    }.toMap
+
+    /** UNION ALL legs beyond the first (the fact), each with its own pin. */
+    val legTbls: Seq[(String, GraftTable)] =
+      props.get(UFactsProp).map(specFromJson(_).map { case Seq(r, _) =>
+        (r, cat.load(ident(r, "union leg")))
+      }).getOrElse(Nil)
+    private val legPins: Map[String, Int] =
+      props.get(UFactsProp).map(dimVersFromJson).getOrElse(Map.empty)
+    def legPin(r: String): Int = legPins.getOrElse(r, sys.error(
+      s"materialized view $ns.$name: union leg $r carries no pinned version"))
+    val legCur: Map[String, Int] = legTbls.map { case (r, t) =>
+      r -> t.currentOrFail().version
+    }.toMap
+
+    // per-leg WHERE (first leg keyed by the fact's rel, '' = none)
+    private val legFilters: Map[String, String] =
+      props.get(UFilterProp).map(specFromJson(_).map {
+        case Seq(r, f) => r -> f
+      }.toMap).getOrElse(Map.empty)
+    // per-leg SELECT (first leg keyed by the fact's rel; a bare [rel]
+    // row = identity)
+    private val legProjs: Map[String, Seq[String]] =
+      props.get(UProjProp).map(specFromJson(_).collect {
+        case r +: exprs if exprs.nonEmpty => r -> exprs
+      }.toMap).getOrElse(Map.empty)
+    /** A leg's scan or slice through its own WHERE, then its SELECT
+      * projecting the scan columns onto the union's output names;
+      * changelog metadata columns pass through untouched. Identity for
+      * a fact without union legs.
+      */
+    def legWhere(r: String)(df: DataFrame): DataFrame = {
+      val filtered = legFilters.get(r).filter(_.nonEmpty)
+        .fold(df)(f => df.where(expr(f)))
+      legProjs.get(r).fold(filtered) { pj =>
+        val meta = Seq("_change_type", "_commit_version", "_sign")
+          .filter(filtered.columns.contains).map(c => s"`$c`")
+        filtered.selectExpr(pj ++ meta: _*)
+      }
+    }
+
+    /** The data-only changelog of relation `r` (the fact or a leg)
+      * between two versions, through its leg WHERE/SELECT. Maintenance
+      * commits (compaction, z-order, delete coalescing) preserve every
+      * visible row, so the data-only feed keeps their file churn out of
+      * the refresh: a nightly compaction must not make it O(table).
+      */
+    def sliceOf(r: String, t: GraftTable, from: Int, until: Int): DataFrame =
+      legWhere(r)(t.scanDataChangesBetween(from, until).drop("_commit_version"))
+
+    /** `factDf` joined to every dim AS OF `vers(dim)`. */
+    def pinnedJoin(factDf: DataFrame, vers: String => Int): DataFrame =
+      joinBase(factDf, dimTbls.map { case (r, t, jt, c) =>
+        (t.scanAsOfVersion(vers(r)), jt, c)
+      })
+
+    /** The whole union'd fact: the first leg at `factVersion`, every
+      * other leg at `legVers`, each through its own WHERE/SELECT. With
+      * `prune` set, legs WITHOUT a projection also zone-prune by the
+      * filter SQL it returns for their table (a projected leg's scan
+      * columns differ from the union's output names, so it reads whole).
+      */
+    def headScan(factVersion: Int = to, legVers: String => Int = legCur,
+                 prune: GraftTable => Option[String] = _ => None): DataFrame = {
+      def one(r: String, t: GraftTable, v: Int): DataFrame =
+        legWhere(r)(
+          if (legProjs.contains(r)) t.scanAsOfVersion(v)
+          else prune(t).fold(t.scanAsOfVersion(v))(t.scanVersionWhere(v, _)))
+      legTbls.foldLeft(one(factRel, src, factVersion)) {
+        case (acc, (r, t)) => acc.unionByName(one(r, t, legVers(r)))
+      }
+    }
+
+    val dimsMoved: Boolean = dimTbls.exists { case (r, _, _, _) =>
+      curVers(r) != pinnedVer(r)
+    }
+    val legsMoved: Boolean = legTbls.exists { case (r, _) => legCur(r) != legPin(r) }
+    /** A relation rolled BACK behind its pin has no forward changelog
+      * slice: a telescope would read an empty changelog over rewound
+      * state and REGRESS the marker, silently keeping retracted commits
+      * in the stored rows. Only a full recompute re-pins it. A dim or
+      * leg that moved FORWARD maintains incrementally: a union is linear
+      * in every leg, an inner dim by multilinearity, a LEFT dim via its
+      * matched part plus the NULL-extension flip terms.
+      */
+    val mustRepin: Boolean = applied > to ||
+      dimTbls.exists { case (r, _, _, _) => curVers(r) < pinnedVer(r) } ||
+      legTbls.exists { case (r, _) => legCur(r) < legPin(r) }
+
+    /** The pins this refresh records: every dim and leg at its read. */
+    val newPins: Map[String, String] =
+      (if (dimTbls.isEmpty) Map.empty[String, String]
+       else Map(DimVersProp -> specJson(dimTbls.map { case (r, _, _, _) =>
+         Seq(r, curVers(r).toString)
+       }))) ++
+        (if (legTbls.isEmpty) Map.empty[String, String]
+         else Map(UFactsProp -> specJson(legTbls.map { case (r, _) =>
+           Seq(r, legCur(r).toString)
+         })))
+    /** CAS scope of an incremental commit: the applied marker AND the
+      * dim/leg pins — a concurrent refresh that re-pinned them must
+      * abort this one at commit, not merge stale deltas over its rows.
+      */
+    val casProps: Map[String, String] =
+      Map(AppliedProp -> applied.toString) ++
+        props.get(DimVersProp).map(DimVersProp -> _) ++
+        props.get(UFactsProp).map(UFactsProp -> _)
+
+    /** Runs `body`, which reads the `what` changelog over (from, until];
+      * a changelog expire_snapshots removed surfaces as an error naming
+      * the range and the force_full remedy.
+      */
+    def replaying[T](what: String, from: Int, until: Int)(body: => T): T =
+      try body
+      catch {
+        case e @ (_: java.io.FileNotFoundException |
+                  _: java.nio.file.NoSuchFileException |
+                  _: IllegalStateException | _: IllegalArgumentException) =>
+          throw new IllegalStateException(
+            s"materialized view $ns.$name cannot replay the $what changelog " +
+              s"($from, $until] — expire_snapshots may have removed versions " +
+              "the marker still needs. Rebuild with refresh_mview(..., " +
+              "force_full => true)", e)
+      }
+  }
+
   /** REFRESH: apply the source changelog since the marker (incremental)
     * or recompute (full / forced). Returns (from, to, action).
     */
@@ -2583,7 +2770,6 @@ object GraftMaterializedView {
     val sql = props.getOrElse(SqlProp,
       throw new IllegalArgumentException(s"$ns.$name is not a materialized view"))
     val mode = props(ModeProp)
-    val applied = props(AppliedProp).toInt
     // aggregate-over-window cascade: refresh the hidden inner window MV
     // FIRST, so the inner-storage changelog this refresh consumes
     // reflects the base table's current state — one CALL maintains the
@@ -2594,124 +2780,22 @@ object GraftMaterializedView {
         case other => sys.error(s"bad mview cascade: ${other.mkString("/")}")
       }
     }
-    val srcRel = props(SourceProp).split("/") match {
-      case Array(sns, st) => TableIdent(sns, st)
-      case other => sys.error(s"bad mview source: ${other.mkString("/")}")
-    }
-    val src = cat.load(srcRel)
-    val to = src.currentOrFail().version
+    val in = new RefreshInputs(cat, ns, name, storage, props)
+    import in._
 
-    // rank-per-group window MVs maintain by affected-group recompute —
-    // no signed-delta algebra, no dims/legs — in their own arm
-    if (mode == "window")
-      return refreshWindow(spark, cat, ns, name, storage, props, src,
-        applied, to, forceFull)
-
-    // dimension joins: pinned AS OF the versions the stored rows were
-    // built with. A dim that moved invalidates the pinning — one full
-    // recompute re-pins it; until then every incremental slice joins
-    // the signed fact rows to exactly the dim rows their original
-    // apply saw, which is what makes retraction exact.
-    val dimTbls: Seq[(String, GraftTable, String, String)] =
-      props.get(DimsProp).map(specFromJson(_).map {
-        case Seq(r, jt, c) =>
-          val ident = r.split("/") match {
-            case Array(dns, dt) => TableIdent(dns, dt)
-            case other => sys.error(s"bad mview dim: ${other.mkString("/")}")
-          }
-          (r, cat.load(ident), jt, c)
-      }).getOrElse(Nil)
-    val dimVers: Map[String, Int] =
-      props.get(DimVersProp).map(dimVersFromJson).getOrElse(Map.empty)
-    def pinnedVer(r: String): Int = dimVers.getOrElse(r, sys.error(
-      s"materialized view $ns.$name: dimension $r carries no pinned version"))
-    // UNION ALL legs beyond the first, each with its own applied pin
-    val legTbls: Seq[(String, GraftTable)] =
-      props.get(UFactsProp).map(specFromJson(_).map { case Seq(r, _) =>
-        val ident = r.split("/") match {
-          case Array(lns, lt) => TableIdent(lns, lt)
-          case other => sys.error(s"bad mview union leg: ${other.mkString("/")}")
-        }
-        (r, cat.load(ident))
-      }).getOrElse(Nil)
-    val legPins: Map[String, Int] =
-      props.get(UFactsProp).map(dimVersFromJson).getOrElse(Map.empty)
-    val legCur: Map[String, Int] = legTbls.map { case (r, t) =>
-      r -> t.currentOrFail().version
-    }.toMap
-    // per-leg WHERE (first leg keyed by the fact's rel, '' = none):
-    // every leg scan AND slice below runs through its own filter
-    val legFilters: Map[String, String] =
-      props.get(UFilterProp).map(specFromJson(_).map {
-        case Seq(r, f) => r -> f
-      }.toMap).getOrElse(Map.empty)
-    // per-leg SELECT (first leg keyed by the fact's rel; a bare [rel]
-    // row = identity): applied AFTER the leg WHERE, projecting the
-    // leg's scan columns onto the union's output names — changelog
-    // metadata columns pass through untouched
-    val legProjs: Map[String, Seq[String]] =
-      props.get(UProjProp).map(specFromJson(_).collect {
-        case r +: exprs if exprs.nonEmpty => r -> exprs
-      }.toMap).getOrElse(Map.empty)
-    def legWhere(r: String)(df: DataFrame): DataFrame = {
-      val filtered = legFilters.get(r).filter(_.nonEmpty)
-        .fold(df)(f => df.where(expr(f)))
-      legProjs.get(r).fold(filtered) { pj =>
-        val meta = Seq("_change_type", "_commit_version", "_sign")
-          .filter(filtered.columns.contains).map(c => s"`$c`")
-        filtered.selectExpr(pj ++ meta: _*)
-      }
-    }
-    val factRelStr = props(SourceProp)
-    val legsMoved = legTbls.exists { case (r, _) => legCur(r) != legPins(r) }
-    // union is linear in every leg — a moved leg always maintains
-    // incrementally; only a ROLLBACK (no forward slice) forces full
-    val legsIncremental = legTbls.forall { case (r, _) =>
-      legCur(r) >= legPins(r)
-    }
-    // read each dim's version ONCE and pin the refresh's every read —
-    // the recompute/telescope scans AND the recorded DimVersProp — to
-    // it; a dim committing between two reads would otherwise record a
-    // version the stored rows were not built with, and the desync is
-    // invisible to the dimsMoved check (silent wrong increments forever
-    // after)
-    val curVers = dimTbls.map { case (r, t, _, _) =>
-      r -> t.currentOrFail().version
-    }.toMap
-    val dimsMoved = dimTbls.exists { case (r, _, _, _) =>
-      curVers(r) != pinnedVer(r)
-    }
-    // A moved dimension maintains INCREMENTALLY whenever it moved
-    // FORWARD: an inner dim by multilinearity (a left join distributes
-    // over its signed LEFT side, so later left dims don't break the
-    // linearity); a LEFT dim via its matched (inner) part PLUS the
-    // NULL-extension flip terms — see the telescope below. Only a
-    // rolled-BACK dim (no forward changelog slice) forces a full
-    // re-pin.
-    val dimsIncremental = dimTbls.forall { case (r, _, _, _) =>
-      curVers(r) >= pinnedVer(r)
-    }
     // a FORCED rebuild must rebuild even with the marker at the head —
     // the negative-count / storage-surgery errors name force_full as
     // the remedy precisely when the data is wrong at an applied marker
     // strict equality: a marker AHEAD of the head (out-of-band rewind)
     // is inconsistent state, not idleness — it falls through to the
-    // full re-pin below instead of reporting noop forever
+    // full re-pin instead of reporting noop forever
     if (applied == to && !dimsMoved && !legsMoved && !forceFull)
       return (applied, to, "noop")
 
-    def pinnedJoin(factDf: DataFrame, vers: String => Int): DataFrame =
-      joinBase(factDf, dimTbls.map { case (r, t, jt, c) =>
-        (t.scanAsOfVersion(vers(r)), jt, c)
-      })
+    // rank-per-group window MVs maintain by affected-group recompute —
+    // no signed-delta algebra — in their own arm
+    if (mode == "window") return refreshWindow(in, forceFull)
 
-    /** The whole union'd fact at the refresh head: first leg at `to`,
-      * every other leg at the version read once this refresh. */
-    def unionScanHead: DataFrame =
-      legTbls.foldLeft(legWhere(factRelStr)(src.scanAsOfVersion(to))) {
-        case (acc, (r, t)) =>
-          acc.unionByName(legWhere(r)(t.scanAsOfVersion(legCur(r))))
-      }
     /** The FACT side's fields as the shape SQL sees them: the bare
       * fact's schema, or the union's OUTPUT fields (per-leg projections
       * rename/retype) — what the FULL algebra NULL-casts when it builds
@@ -2719,24 +2803,8 @@ object GraftMaterializedView {
       */
     lazy val factSideFields: Seq[org.apache.spark.sql.types.StructField] =
       if (legTbls.isEmpty) src.schema.fields.toSeq
-      else legWhere(factRelStr)(src.scanAsOfVersion(to)).schema.fields.toSeq
+      else legWhere(factRel)(src.scanAsOfVersion(to)).schema.fields.toSeq
 
-    /** Telescoped signed changelog of the JOINED shape between the
-      * recorded state (fact at `factFrom`, dims at `pins`) and the
-      * refresh head (fact at `to`, dims at `curVers`). One term per
-      * changed relation, changing them left to right:
-      *
-      *   ΔF ⋈ D1@old ⋈ … ⋈ Dk@old                      (fact term)
-      *   F@to ⋈ D1@new ⋈ … ⋈ D(i-1)@new ⋈ ΔDi ⋈ D(i+1)@old ⋈ … (dim i)
-      *
-      * Each term holds every other relation fixed, so inner-join
-      * multilinearity makes its signed rows the exact difference of
-      * the two join products; `_change_type` flows from the single
-      * changed side and [[signedSlice]] signs it downstream. Cost is
-      * O(ΔF ⋈ dims) + Σ O(F ⋈ ΔDi) — the fact is SCANNED only for
-      * moved dims and only joined against their (small) slices, never
-      * recomputed against whole dimensions.
-      */
     /** Fact scan for a dim term, zone-pruned by the dim slice's
       * equi-join key bounds: a fact row outside [min, max] of the
       * slice's join-key values cannot EqualTo-match any slice row, so
@@ -2748,34 +2816,27 @@ object GraftMaterializedView {
       * range/equality agreement) just skip pruning; all-NULL slice
       * keys can match nothing, emptying the term.
       */
-    // bounds memo per (slice frame identity, join condition): the FULL
-    // from/to fact probes call prunedFactFor twice with the SAME
+    // bounds memo per (slice frame identity, bounded slice columns): the
+    // FULL from/to fact probes call prunedFactFor twice with the SAME
     // checkpointed slice, and the slice bounds agg is an action — one
-    // driver round-trip per repeat saved at identical semantics (the
-    // bounds depend only on the slice and the condition, never on the
-    // fact version)
+    // driver round-trip per repeat saved. The cached row holds the
+    // [min, max] of exactly those slice columns in that order, so they
+    // are the key; the fact version only decides which columns pair up.
     val sliceBoundsCache =
       new java.util.IdentityHashMap[DataFrame,
-        scala.collection.mutable.Map[String, org.apache.spark.sql.Row]]()
+        scala.collection.mutable.Map[Seq[String], org.apache.spark.sql.Row]]()
 
     def prunedFactFor(slice: DataFrame, condSql: String,
                       factVersion: Int = to,
                       legVers: String => Int = legCur): DataFrame = {
       import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
       import org.apache.spark.sql.catalyst.expressions.{And => CAnd, EqualTo}
-      // a union'd fact reads every leg through its own WHERE/SELECT at
-      // the requested versions (head by default; the FULL-outer
-      // from-version probes pass the per-leg FROM pins — round 18);
-      // range conjuncts on computed leg projections stay frame-level,
-      // on pass-through columns they push to each leg's parquet scan
-      // through the Union
-      val full =
-        if (legTbls.isEmpty) src.scanAsOfVersion(factVersion)
-        else legTbls.foldLeft(
-            legWhere(factRelStr)(src.scanAsOfVersion(factVersion))) {
-          case (acc, (r, t)) =>
-            acc.unionByName(legWhere(r)(t.scanAsOfVersion(legVers(r))))
-        }
+      // a union'd fact reads every leg at the requested versions (head
+      // by default; the FULL-outer from-version probes pass the per-leg
+      // FROM pins — round 18); range conjuncts on computed leg
+      // projections stay frame-level, on pass-through columns they push
+      // to each leg's parquet scan through the Union
+      val full = headScan(factVersion, legVers)
       val factCols = full.schema.fields.map(f => f.name.toLowerCase -> f.name).toMap
       val sliceT = slice.schema.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
       val cond =
@@ -2805,7 +2866,7 @@ object GraftMaterializedView {
           m = scala.collection.mutable.Map.empty
           sliceBoundsCache.put(slice, m)
         }
-        m.getOrElseUpdate(condSql, slice.agg(aggs.head, aggs.tail: _*).head)
+        m.getOrElseUpdate(pairs.map(_._2), slice.agg(aggs.head, aggs.tail: _*).head)
       }
       pairs.zipWithIndex.foldLeft(full) { case (f, ((fc, _), i)) =>
         if (b.isNullAt(2 * i)) f.where(lit(false))
@@ -2814,25 +2875,33 @@ object GraftMaterializedView {
       }
     }
 
+    /** Telescoped signed changelog of the JOINED shape between the
+      * recorded state (fact at `factFrom`, dims at `pins`) and the
+      * refresh head (fact at `to`, dims at `curVers`). One term per
+      * changed relation, changing them left to right:
+      *
+      *   ΔF ⋈ D1@old ⋈ … ⋈ Dk@old                      (fact term)
+      *   F@to ⋈ D1@new ⋈ … ⋈ D(i-1)@new ⋈ ΔDi ⋈ D(i+1)@old ⋈ … (dim i)
+      *
+      * Each term holds every other relation fixed, so inner-join
+      * multilinearity makes its signed rows the exact difference of
+      * the two join products; `_change_type` flows from the single
+      * changed side and [[signedSlice]] signs it downstream. Cost is
+      * O(ΔF ⋈ dims) + Σ O(F ⋈ ΔDi) — the fact is SCANNED only for
+      * moved dims and only joined against their (small) slices, never
+      * recomputed against whole dimensions.
+      */
     def telescopedChanges(factFrom: Int, pins: String => Int,
                           legFrom: String => Int): DataFrame = {
       // UNION ALL legs: linear, so each moved leg simply ADDS its own
       // signed slice (no cross-terms; legs and dims never coexist)
-      // the data-only feed: maintenance commits (compaction, z-order,
-      // delete coalescing/folding) preserve every visible row, so their
-      // file churn would net to zero here at O(compacted bytes) cost —
-      // a nightly compaction must not make MV refresh O(table)
       val hasFull = dimTbls.exists(_._3 == "full_outer")
       val factTerm =
-        if (!hasFull) legTbls.foldLeft(pinnedJoin(
-          legWhere(factRelStr)(
-            src.scanDataChangesBetween(factFrom, to).drop("_commit_version")), pins)) {
-          case (acc, (r, t)) =>
-            acc.unionByName(pinnedJoin(
-              legWhere(r)(t.scanDataChangesBetween(legFrom(r), legCur(r))
-                .drop("_commit_version")),
-              pins))
-        }
+        if (!hasFull)
+          legTbls.foldLeft(pinnedJoin(sliceOf(factRel, src, factFrom, to), pins)) {
+            case (acc, (r, t)) =>
+              acc.unionByName(pinnedJoin(sliceOf(r, t, legFrom(r), legCur(r)), pins))
+          }
         else {
           // A FULL OUTER dim (single join — enforced at analysis).
           // FULL = LEFT ∪ dim-side NULL-extensions, and LEFT is linear
@@ -2853,14 +2922,10 @@ object GraftMaterializedView {
           // zone-pruned by its keys: O(affected ⋈ F-rowgroups), never
           // O(F ⋈ D).
           val (r, t, _, c) = dimTbls.head
-          val factSlice = legWhere(factRelStr)(
-            src.scanDataChangesBetween(factFrom, to).drop("_commit_version"))
           val (slice, nSlice) = checkpointCounted(
-            legTbls.foldLeft(factSlice) {
+            legTbls.foldLeft(sliceOf(factRel, src, factFrom, to)) {
               case (acc, (lr, lt)) =>
-                acc.unionByName(legWhere(lr)(
-                  lt.scanDataChangesBetween(legFrom(lr), legCur(lr))
-                    .drop("_commit_version")))
+                acc.unionByName(sliceOf(lr, lt, legFrom(lr), legCur(lr)))
             })
           val d0 = t.scanAsOfVersion(pins(r))
           val linear = slice.join(d0, expr(c), "left_outer")
@@ -3001,29 +3066,13 @@ object GraftMaterializedView {
       dimTerms.foldLeft(factTerm)(_ unionByName _)
     }
 
-    // a rolled-back FACT has no forward slice — the telescope would
-    // read an empty changelog over rewound state and then REGRESS the
-    // marker, silently keeping retracted commits in the stored rows.
-    // One full recompute re-pins everything.
-    val factRolledBack = applied > to
-    if (mode == "full" || forceFull || factRolledBack ||
-        (dimsMoved && !dimsIncremental) ||
-        (legsMoved && !legsIncremental)) {
-      val dimProp =
-        (if (dimTbls.isEmpty) Map.empty[String, String]
-         else Map(DimVersProp -> specJson(dimTbls.map { case (r, _, _, _) =>
-           Seq(r, curVers(r).toString)
-         }))) ++
-          (if (legTbls.isEmpty) Map.empty[String, String]
-           else Map(UFactsProp -> specJson(legTbls.map { case (r, _) =>
-             Seq(r, legCur(r).toString)
-           })))
+    if (mode == "full" || forceFull || mustRepin) {
       var dlProps = Map.empty[String, String]
       val frame =
         if (mode == "full") spark.sql(sql)
         else {
           val shape = shapeFromProps(props)
-          val base0 = pinnedJoin(unionScanHead, curVers)
+          val base0 = pinnedJoin(headScan(), curVers)
           val based = shape.filter.fold(base0)(base0.where)
           // rebuild each dedup-level aux table from the same pinned
           // base the rows are rebuilt from, re-point the folded marker
@@ -3031,60 +3080,29 @@ object GraftMaterializedView {
           dlProps = dlGroups(shape.aggs).map { case (ci, vsql, _) =>
             val aux = cat.load(TableIdent(ns, name + StorageSuffix + dlSuffix(ci)))
             aux.overwrite(dlPairs(based, shape, vsql),
-              props = Map(AppliedProp -> to.toString) ++ dimProp)
+              props = Map(AppliedProp -> to.toString) ++ newPins)
             dlVerProp(ci) -> aux.currentOrFail().version.toString
           }.toMap
           grouped(based, shape)
         }
       storage.overwrite(frame,
-        props = props ++ Map(AppliedProp -> to.toString) ++ dimProp ++ dlProps)
+        props = props ++ Map(AppliedProp -> to.toString) ++ newPins ++ dlProps)
       return (applied, to, "full")
     }
 
     val shape = shapeFromProps(props)
     val dlg = dlGroups(shape.aggs)
-    // CAS scope for the incremental commit: the applied marker, the dim
-    // pins, AND the dedup-level folded markers. A concurrent full
-    // re-pin (dim moved) rewrites the rows against NEW dim versions —
-    // and rebuilds the aux tables — while leaving AppliedProp possibly
-    // unchanged; an in-flight incremental built on the OLD state must
-    // abort at commit, not merge stale deltas over rebuilt rows.
-    val casProps: Map[String, String] =
-      Map(AppliedProp -> applied.toString) ++
-        props.get(DimVersProp).map(DimVersProp -> _) ++
-        props.get(UFactsProp).map(UFactsProp -> _) ++
-        dlg.flatMap { case (ci, _, _) =>
-          props.get(dlVerProp(ci)).map(dlVerProp(ci) -> _)
-        }
-    // the pins this refresh writes — unchanged relations keep their
-    // pin, moved dims/legs advance to the versions read this refresh
-    val newDimProp: Map[String, String] =
-      (if (dimTbls.isEmpty) Map.empty[String, String]
-       else Map(DimVersProp -> specJson(dimTbls.map { case (r, _, _, _) =>
-         Seq(r, curVers(r).toString)
-       }))) ++
-        (if (legTbls.isEmpty) Map.empty[String, String]
-         else Map(UFactsProp -> specJson(legTbls.map { case (r, _) =>
-           Seq(r, legCur(r).toString)
-         })))
-    def legPin(r: String): Int = legPins.getOrElse(r, sys.error(
-      s"materialized view $ns.$name: union leg $r carries no pinned version"))
-    val d =
-      try delta(telescopedChanges(applied, pinnedVer, legPin), shape)
-        // one evaluation: the delta feeds the bounds probe, the merge
-        // join, and both applyNetChanges sides
-        .localCheckpoint()
-      catch {
-        case e @ (_: java.io.FileNotFoundException |
-                  _: java.nio.file.NoSuchFileException |
-                  _: IllegalStateException | _: IllegalArgumentException) =>
-          throw new IllegalStateException(
-            s"materialized view $ns.$name cannot replay the source changelog " +
-              s"($applied, $to] (or a moved dimension's slice) — " +
-              "expire_snapshots may have removed versions " +
-              "the marker still needs. Rebuild with refresh_mview(..., " +
-              "force_full => true)", e)
-      }
+    // the incremental commit's CAS scope adds the dedup-level folded
+    // markers: a concurrent full re-pin rebuilds the aux tables too,
+    // possibly leaving AppliedProp unchanged
+    val cas: Map[String, String] = casProps ++ dlg.flatMap { case (ci, _, _) =>
+      props.get(dlVerProp(ci)).map(dlVerProp(ci) -> _)
+    }
+    // one evaluation: the delta feeds the bounds probe, the merge join,
+    // and both applyNetChanges sides
+    val d = replaying("source or moved-dimension", applied, to) {
+      delta(telescopedChanges(applied, pinnedVer, legPin), shape).localCheckpoint()
+    }
     val groupNames = shape.groups.map(_._1)
     // GLOBAL aggregates merge on the synthetic constant key: the
     // storage table holds exactly ONE row (a global aggregate over an
@@ -3131,42 +3149,20 @@ object GraftMaterializedView {
           auxProps.get(DimVersProp).map(DimVersProp -> _) ++
           auxProps.get(UFactsProp).map(UFactsProp -> _)
         val pairKeys = mergeKeys :+ DlVCol
-        val pd =
-          try {
-            val slice = signedSlice(
-              telescopedChanges(auxApplied, auxPin, auxLegPin), shape)
-            dlAggregate(slice, shape, vsql, sum(col("_sign")).as("_mv_net"))
-              .localCheckpoint()
-          } catch {
-            case e @ (_: java.io.FileNotFoundException |
-                      _: java.nio.file.NoSuchFileException |
-                      _: IllegalStateException | _: IllegalArgumentException) =>
-              throw new IllegalStateException(
-                s"materialized view $ns.$name cannot replay the source " +
-                  s"changelog ($auxApplied, $to] for its COUNT(DISTINCT) " +
-                  "pair table — expire_snapshots may have removed versions " +
-                  "the marker still needs. Rebuild with refresh_mview(..., " +
-                  "force_full => true)", e)
-          }
+        val pd = replaying("COUNT(DISTINCT) pair table's source", auxApplied, to) {
+          val slice = signedSlice(
+            telescopedChanges(auxApplied, auxPin, auxLegPin), shape)
+          dlAggregate(slice, shape, vsql, sum(col("_sign")).as("_mv_net"))
+            .localCheckpoint()
+        }
         if (pd.isEmpty)
-          aux.updateProperties(Map(AppliedProp -> to.toString) ++ newDimProp,
+          aux.updateProperties(Map(AppliedProp -> to.toString) ++ newPins,
             requireParentProps = auxCas)
         else {
           // zone-pruned keyed read of only the pairs that can be hit —
           // same rectangle trick as the main merge, over group+value
-          def isBinaryFloatA(k: String) =
-            aux.schema.fields.find(_.name == k).map(_.dataType)
-              .exists(t => t == org.apache.spark.sql.types.FloatType ||
-                t == org.apache.spark.sql.types.DoubleType)
-          val sqls = rangeBounds(pd, pairKeys, isBinaryFloatA).flatMap {
-            case (k, lo, hi) =>
-              FilterSql.toSql(org.apache.spark.sql.sources.And(
-                org.apache.spark.sql.sources.GreaterThanOrEqual(k, lo),
-                org.apache.spark.sql.sources.LessThanOrEqual(k, hi)))
-          }
-          val curA =
-            if (sqls.isEmpty) aux.scan()
-            else aux.scanWhere(sqls.mkString("(", ") AND (", ")"))
+          val curA = rangeSql(pd, aux.schema, pairKeys.map(k => k -> k))
+            .fold(aux.scan())(aux.scanWhere)
           def pc(n: String) = col(s"p.`$n`")
           def cc(n: String) = col(s"c.`$n`")
           val mergedA = pd.alias("p").join(curA.alias("c"),
@@ -3185,7 +3181,7 @@ object GraftMaterializedView {
               .select(pairKeys.map(n => col(s"`$n`")): _*),
             mergedA.where(col(RowsCol) > 0),
             pairKeys,
-            props = Map(AppliedProp -> to.toString) ++ newDimProp,
+            props = Map(AppliedProp -> to.toString) ++ newPins,
             requireParentProps = auxCas,
             nullSafeKeys = true)
         }
@@ -3202,9 +3198,9 @@ object GraftMaterializedView {
       // pins advance too: a net-empty telescope still CONSUMED the dim
       // slices — leaving the old pins would replay them next refresh.
       storage.updateProperties(
-        Map(AppliedProp -> to.toString) ++ newDimProp ++
+        Map(AppliedProp -> to.toString) ++ newPins ++
           dlVerNow.map { case (i, v) => dlVerProp(i) -> v.toString },
-        requireParentProps = casProps)
+        requireParentProps = cas)
       return (applied, to, "empty")
     }
 
@@ -3261,23 +3257,14 @@ object GraftMaterializedView {
         folds.foldLeft(acc) { case (f, (n, zero, _, _)) => f.withColumn(n, zero) }
       else {
         val aux = cat.load(TableIdent(ns, name + StorageSuffix + dlSuffix(ci)))
-        val dd =
-          try aux.scanChangesBetween(fromV, nowV)
+        val dd = replaying("distinct-aggregate pair", fromV, nowV) {
+          aux.scanChangesBetween(fromV, nowV)
             .withColumn("_mv_s", when(col("_change_type") === "insert", lit(1L))
               .otherwise(lit(-1L)))
             .groupBy(mergeKeys.map(n => col(s"`$n`")): _*)
             .agg(folds.head._3.as(folds.head._1),
               folds.tail.map { case (n, _, e, _) => e.as(n) }: _*)
-          catch {
-            case e @ (_: java.io.FileNotFoundException |
-                      _: java.nio.file.NoSuchFileException |
-                      _: IllegalStateException | _: IllegalArgumentException) =>
-              throw new IllegalStateException(
-                s"materialized view $ns.$name cannot replay its " +
-                  s"distinct-aggregate pair changelog ($fromV, $nowV] — " +
-                  "expire_snapshots on the pair table may have removed " +
-                  "versions. Rebuild with refresh_mview(..., force_full => true)", e)
-          }
+        }
         val dk = mergeKeys.map("_mvdk_" + _)
         val renamed = dd.toDF(dk ++ folds.map(_._1): _*)
         val joined0 = acc.join(renamed,
@@ -3298,38 +3285,18 @@ object GraftMaterializedView {
 
     // read only the storage files that can hold an affected group: a
     // matching row needs every group component inside the delta's
-    // [min, max], so a per-column BETWEEN conjunction (rendered through
-    // FilterSql's escaping) lets scanWhere's zone maps skip the rest —
-    // rows outside the rectangle match no delta key and would only have
-    // idled through the join. At MV scale this keeps refresh reads at
-    // O(affected groups), not O(all groups). Columns where the delta
-    // holds a NULL key contribute no conjunct (a range never admits the
-    // NULL-keyed group); binary-float keys are skipped outright — the
-    // bound renders through toString and re-parses as a decimal
-    // literal, and 1.1f != 1.1d under the widened comparison, so the
-    // boundary group would silently drop from `cur`. Skipping only
-    // widens `cur`: the merge left-joins from the delta, so extra
-    // current rows are inert.
+    // [min, max], so the range filter lets scanWhere's zone maps skip
+    // the rest. At MV scale this keeps refresh reads at O(affected
+    // groups), not O(all groups). A skipped column only widens `cur`:
+    // the merge left-joins from the delta, so extra current rows are
+    // inert. Under grouping sets most delta rows carry NULL keys
+    // (rolled-up components contribute no conjunct), so the grouping id
+    // — never NULL — is the one bound that always lands.
     val cur = {
-      def isBinaryFloat(k: String) =
-        storage.schema.fields.find(_.name == k).map(_.dataType)
-          .exists(t => t == org.apache.spark.sql.types.FloatType ||
-            t == org.apache.spark.sql.types.DoubleType)
-      // under grouping sets most delta rows carry NULL keys (rolled-up
-      // components contribute no conjunct), so the grouping id — never
-      // NULL — is the one bound that always lands
       val boundKeys =
         if (shape.sets.isDefined) groupNames :+ GidCol else groupNames
-      val sqls = rangeBounds(d, boundKeys, isBinaryFloat).flatMap {
-        case (k, lo, hi) =>
-          FilterSql.toSql(org.apache.spark.sql.sources.And(
-            org.apache.spark.sql.sources.GreaterThanOrEqual(k, lo),
-            org.apache.spark.sql.sources.LessThanOrEqual(k, hi)))
-      }
-      val rangeSql =
-        if (sqls.isEmpty) None
-        else Some(sqls.mkString("(", ") AND (", ")"))
-      rangeSql.fold(storage.scan())(storage.scanWhere)
+      rangeSql(d, storage.schema, boundKeys.map(k => k -> k))
+        .fold(storage.scan())(storage.scanWhere)
     }
     // null-safe merge join: a NULL group key addresses the stored
     // NULL-keyed row exactly like any other key
@@ -3520,7 +3487,7 @@ object GraftMaterializedView {
           // recompute against the state this refresh WRITES — fact
           // legs at the head, dims at the versions the telescope
           // advanced them to
-          val b = pinnedJoin(unionScanHead, curVers)
+          val b = pinnedJoin(headScan(), curVers)
           shape.filter.fold(b)(b.where)
         }
         // parquet-pushdown narrowing on the group expressions (Column
@@ -3538,9 +3505,7 @@ object GraftMaterializedView {
         // bounded: broadcast below the counted bound (guide §3.1),
         // keeping the big sides unshuffled at every scale.
         val nRecKeys = keyRows.count()
-        val keyRenamed0 = keyRows.toDF(mergeKeys.map("_mvk_" + _): _*)
-        val keyRenamed = if (nRecKeys <= graft.table.GraftTable.MergeBroadcastRowBound)
-          broadcast(keyRenamed0) else keyRenamed0
+        val keyRenamed = bcIfSmallN(keyRows.toDF(mergeKeys.map("_mvk_" + _): _*), nRecKeys)
         val recRenamed = shape.sets match {
           case Some(_) =>
             // grouping sets: a source ROW feeds one subtotal row per
@@ -3579,8 +3544,7 @@ object GraftMaterializedView {
               mergeKeys.map("_mvk_" + _) ++
                 minMaxAggs.map { case (_, i) => s"_mv_rec_$i" }: _*)
         }
-        val recJ = if (nRecKeys <= graft.table.GraftTable.MergeBroadcastRowBound)
-          broadcast(recRenamed) else recRenamed
+        val recJ = bcIfSmallN(recRenamed, nRecKeys)
         val withRec = merged.join(recJ,
           mergeKeys.map(n => col(s"`$n`") <=> col(s"`_mvk_$n`")).reduce(_ && _),
           "left")
@@ -3611,9 +3575,9 @@ object GraftMaterializedView {
     // makes this one abort at commit instead of double-applying a
     // delta both derived from the same marker
     storage.applyNetChanges(delKeys, upserts, mergeKeys,
-      props = props ++ Map(AppliedProp -> to.toString) ++ newDimProp ++
+      props = props ++ Map(AppliedProp -> to.toString) ++ newPins ++
         dlVerNow.map { case (i, v) => dlVerProp(i) -> v.toString },
-      requireParentProps = casProps,
+      requireParentProps = cas,
       nullSafeKeys = true)
     (applied, to, "incremental")
   }
@@ -3631,11 +3595,8 @@ object GraftMaterializedView {
     * carrying the marker CAS — exactly-once under retries, and a reader
     * never sees a group half-replaced.
     */
-  private def refreshWindow(spark: SparkSession, cat: GraftCatalog,
-                            ns: String, name: String,
-                            storage: GraftTable, props: Map[String, String],
-                            src: GraftTable, applied: Int, to: Int,
-                            forceFull: Boolean): (Int, Int, String) = {
+  private def refreshWindow(in: RefreshInputs, forceFull: Boolean): (Int, Int, String) = {
+    import in._
     val parts = specFromJson(props(WinPartProp)).map { case Seq(n, s) => (n, s) }
     val proj = specFromJson(props(WinProjProp)).map { case Seq(n, s) => (n, s) }
     val innerFilter = props.get(FilterProp).filter(_.nonEmpty)
@@ -3643,36 +3604,6 @@ object GraftMaterializedView {
     def replay(base: DataFrame): DataFrame =
       windowReplay(base, innerFilter, proj, rankFilter)
 
-    // rank-over-join dims: pinned AS OF like agg mode. Versions are read
-    // ONCE per refresh and every scan (key derivation, head recompute,
-    // recorded pins) uses that read — a dim committing mid-refresh would
-    // otherwise desync the recorded pin from the stored rows.
-    val dimTbls: Seq[(String, GraftTable, String, String)] =
-      props.get(DimsProp).map(specFromJson(_).map {
-        case Seq(r, jt, c) =>
-          val ident = r.split("/") match {
-            case Array(dns, dt) => TableIdent(dns, dt)
-            case other => sys.error(s"bad mview dim: ${other.mkString("/")}")
-          }
-          (r, cat.load(ident), jt, c)
-      }).getOrElse(Nil)
-    val dimVers: Map[String, Int] =
-      props.get(DimVersProp).map(dimVersFromJson).getOrElse(Map.empty)
-    def pinnedVer(r: String): Int = dimVers.getOrElse(r, sys.error(
-      s"materialized view $ns.$name: dimension $r carries no pinned version"))
-    val curVers: Map[String, Int] = dimTbls.map { case (r, t, _, _) =>
-      r -> t.currentOrFail().version
-    }.toMap
-    val dimsMoved = dimTbls.exists { case (r, _, _, _) =>
-      curVers(r) != pinnedVer(r)
-    }
-    val dimsIncremental = dimTbls.forall { case (r, _, _, _) =>
-      curVers(r) >= pinnedVer(r)
-    }
-    def joinAt(factDf: DataFrame, vers: String => Int): DataFrame =
-      joinBase(factDf, dimTbls.map { case (r, t, jt, c) =>
-        (t.scanAsOfVersion(vers(r)), jt, c)
-      })
     // FULL dim (round 18): analysis admits exactly one FULL, as the
     // FIRST join (round 19: suffix inner/left dims now compose after
     // it), no union legs
@@ -3684,145 +3615,42 @@ object GraftMaterializedView {
     // rows, exactly as the defining query's NULL-extended rows do)
     // before its partition keys are taken
     val suffixDims = if (fullIdx < 0) Nil else dimTbls.drop(fullIdx + 1)
-    def joinSuffix(df: DataFrame, vers: String => Int): DataFrame =
-      suffixDims.foldLeft(df) { case (acc, (r, t, jt, c)) =>
-        acc.join(t.scanAsOfVersion(vers(r)), expr(c),
-          if (jt == "full_outer") "left_outer" else jt)
-      }
-    // key derivation joins a fact-side frame to the dims — a FULL dim
-    // downgrades to LEFT there (the frame's own rows and their matched
-    // or NULL dim columns yield exactly its keys; the dim-side
+    // key derivation joins a frame to the dims `ds` AS OF `vers` — a
+    // FULL dim downgrades to LEFT there (the frame's own rows and their
+    // matched or NULL dim columns yield exactly its keys; the dim-side
     // extension keys come from the dedicated extension terms below, so
     // FULL here would only drag the entire unmatched dim side through
     // every slice)
-    def joinAtKeys(factDf: DataFrame, vers: String => Int): DataFrame =
-      joinBase(factDf, dimTbls.map { case (r, t, jt, c) =>
-        (t.scanAsOfVersion(vers(r)),
-          if (jt == "full_outer") "left_outer" else jt, c)
+    def keyJoin(df: DataFrame, ds: Seq[(String, GraftTable, String, String)],
+                vers: String => Int): DataFrame =
+      joinBase(df, ds.map { case (r, t, jt, c) =>
+        (t.scanAsOfVersion(vers(r)), if (jt == "full_outer") "left_outer" else jt, c)
       })
-    // UNION ALL legs (sharded window dashboards — never combined with
-    // dims, enforced at analysis): per-leg pins, filters, projections,
-    // exactly the aggregate path's contract
-    val legTbls: Seq[(String, GraftTable)] =
-      props.get(UFactsProp).map(specFromJson(_).map { case Seq(r, _) =>
-        val ident = r.split("/") match {
-          case Array(lns, lt) => TableIdent(lns, lt)
-          case other => sys.error(s"bad mview union leg: ${other.mkString("/")}")
-        }
-        (r, cat.load(ident))
-      }).getOrElse(Nil)
-    val legPins: Map[String, Int] =
-      props.get(UFactsProp).map(dimVersFromJson).getOrElse(Map.empty)
-    val legCur: Map[String, Int] = legTbls.map { case (r, t) =>
-      r -> t.currentOrFail().version
-    }.toMap
-    val legFilters: Map[String, String] =
-      props.get(UFilterProp).map(specFromJson(_).map {
-        case Seq(r, f) => r -> f
-      }.toMap).getOrElse(Map.empty)
-    val legProjs: Map[String, Seq[String]] =
-      props.get(UProjProp).map(specFromJson(_).collect {
-        case r +: exprs if exprs.nonEmpty => r -> exprs
-      }.toMap).getOrElse(Map.empty)
-    def legWhere(r: String)(df: DataFrame): DataFrame = {
-      val filtered = legFilters.get(r).filter(_.nonEmpty)
-        .fold(df)(f => df.where(expr(f)))
-      legProjs.get(r).fold(filtered) { pj =>
-        val meta = Seq("_change_type", "_commit_version", "_sign")
-          .filter(filtered.columns.contains).map(c => s"`$c`")
-        filtered.selectExpr(pj ++ meta: _*)
-      }
-    }
-    val factRelStr = props(SourceProp)
-    val legsMoved = legTbls.exists { case (r, _) => legCur(r) != legPins(r) }
-    val legsIncremental = legTbls.forall { case (r, _) =>
-      legCur(r) >= legPins(r)
-    }
-    def legPin(r: String): Int = legPins.getOrElse(r, sys.error(
-      s"materialized view $ns.$name: union leg $r carries no pinned version"))
-    val newDimProp: Map[String, String] =
-      (if (dimTbls.isEmpty) Map.empty[String, String]
-       else Map(DimVersProp -> specJson(dimTbls.map { case (r, _, _, _) =>
-         Seq(r, curVers(r).toString)
-       }))) ++
-        (if (legTbls.isEmpty) Map.empty[String, String]
-         else Map(UFactsProp -> specJson(legTbls.map { case (r, _) =>
-           Seq(r, legCur(r).toString)
-         })))
-    // CAS scope: the applied marker AND the dim/leg pins — a concurrent
-    // refresh that re-pinned them must abort this one at commit
-    val casProps: Map[String, String] =
-      Map(AppliedProp -> applied.toString) ++
-        props.get(DimVersProp).map(DimVersProp -> _) ++
-        props.get(UFactsProp).map(UFactsProp -> _)
-
-    if (applied == to && !dimsMoved && !legsMoved && !forceFull)
-      return (applied, to, "noop")
-    /** The whole union'd fact at the refresh head (first leg at `to`,
-      * other legs at the versions read this refresh), each leg through
-      * its own WHERE/SELECT. With `pruneSql` set, legs WITHOUT a
-      * projection additionally zone-prune on bare-column partition
-      * keys (a projected leg's scan columns differ from the union's
-      * output names, so its pruning stays the exact semi join).
-      */
-    def unionHeadScan(pruneFor: GraftTable => Option[String]): DataFrame = {
-      def one(r: String, t: GraftTable, v: Int): DataFrame = {
-        val sc =
-          if (legProjs.contains(r)) t.scanAsOfVersion(v)
-          else pruneFor(t) match {
-            case Some(p) => t.scanVersionWhere(v, p)
-            case None => t.scanAsOfVersion(v)
-          }
-        legWhere(r)(sc)
-      }
-      legTbls.foldLeft(one(factRelStr, src, to)) {
-        case (acc, (r, t)) => acc.unionByName(one(r, t, legCur(r)))
-      }
-    }
+    def joinSuffix(df: DataFrame, vers: String => Int): DataFrame =
+      keyJoin(df, suffixDims, vers)
+    def joinAtKeys(factDf: DataFrame, vers: String => Int): DataFrame =
+      keyJoin(factDf, dimTbls, vers)
     // forced rebuild, a rolled-back source, or a rolled-back dim/leg
     // (no forward slice to bound the touched groups with): one full
     // replay over the joined head, overwritten with marker + pins in
     // the same commit
-    if (forceFull || applied > to || (dimsMoved && !dimsIncremental) ||
-        (legsMoved && !legsIncremental)) {
-      storage.overwrite(replay(joinAt(unionHeadScan(_ => None), curVers)),
-        props = props ++ Map(AppliedProp -> to.toString) ++ newDimProp)
+    if (forceFull || mustRepin) {
+      storage.overwrite(replay(pinnedJoin(headScan(), curVers)),
+        props = props ++ Map(AppliedProp -> to.toString) ++ newPins)
       return (applied, to, "full")
     }
 
-    def changelogGone(rel: String, from: Int, until: Int, e: Throwable): Nothing =
-      throw new IllegalStateException(
-        s"materialized view $ns.$name cannot replay the $rel changelog " +
-          s"($from, $until] — expire_snapshots may have removed versions " +
-          "the marker still needs. Rebuild with refresh_mview(..., " +
-          "force_full => true)", e)
-    // the DATA-ONLY feed: maintenance commits (compaction, z-order)
-    // preserve every visible row — including them would touch every
-    // rewritten group and turn a nightly compaction into an O(table)
-    // recompute
     val changes =
       if (applied == to) None
-      else Some(legWhere(factRelStr)(
-        try src.scanDataChangesBetween(applied, to).drop("_commit_version")
-        catch {
-          case e @ (_: java.io.FileNotFoundException |
-                    _: java.nio.file.NoSuchFileException |
-                    _: IllegalStateException | _: IllegalArgumentException) =>
-            changelogGone("source", applied, to, e)
-        }))
+      else Some(replaying("source", applied, to) { sliceOf(factRel, src, applied, to) })
     // a moved leg's slice touches its rows' partition keys exactly like
-    // the fact slice (legs never combine with dims, so no join terms)
+    // the fact slice (UNION ALL legs never combine with dims, enforced
+    // at analysis, so no join terms)
     val legChanges: Seq[DataFrame] = legTbls.collect {
       case (r, t) if legCur(r) != legPin(r) =>
-        legWhere(r)(
-          try t.scanDataChangesBetween(legPin(r), legCur(r))
-            .drop("_commit_version")
-          catch {
-            case e @ (_: java.io.FileNotFoundException |
-                      _: java.nio.file.NoSuchFileException |
-                      _: IllegalStateException | _: IllegalArgumentException) =>
-              changelogGone(s"union leg $r", legPin(r), legCur(r), e)
-          })
+        replaying(s"union leg $r", legPin(r), legCur(r)) {
+          sliceOf(r, t, legPin(r), legCur(r))
+        }
     }
 
     // touched groups: every changelog row passing the inner WHERE
@@ -3867,22 +3695,17 @@ object GraftMaterializedView {
     val dimTerms = dimTbls.zipWithIndex.filter { case ((r, _, _, _), _) =>
       curVers(r) != pinnedVer(r)
     }.flatMap { case ((r, t, jt, c), j) =>
-      val (slice, nSlice) =
-        try checkpointCounted(t.scanDataChangesBetween(pinnedVer(r), curVers(r))
+      val (slice, nSlice) = replaying(s"dimension $r", pinnedVer(r), curVers(r)) {
+        checkpointCounted(t.scanDataChangesBetween(pinnedVer(r), curVers(r))
           .drop("_commit_version"))
-        catch {
-          case e @ (_: java.io.FileNotFoundException |
-                    _: java.nio.file.NoSuchFileException |
-                    _: IllegalStateException | _: IllegalArgumentException) =>
-            changelogGone(s"dimension $r", pinnedVer(r), curVers(r), e)
-        }
+      }
       val sliceJ = bcIfSmallN(slice, nSlice)
       if (fullIdx < 0) {
         // no FULL in the chain: affected rows derive from the whole
         // head (every union leg through its own WHERE/SELECT) semi-
         // joined to the slice, keys under BOTH dim states (a dim update
         // moves fact rows between groups)
-        val affected = unionHeadScan(_ => None).join(sliceJ, expr(c), "left_semi")
+        val affected = headScan().join(sliceJ, expr(c), "left_semi")
         Seq(keysOf(joinAtKeys(affected, pinnedVer)),
           keysOf(joinAtKeys(affected, curVers)))
       } else {
@@ -3897,15 +3720,10 @@ object GraftMaterializedView {
         // a prior dim's state. Fact-origin paths start at the head;
         // with a FULL dim before j, extension-origin paths (no fact
         // row) start at the anti-probed extension set.
-        val factHead = legWhere(factRelStr)(src.scanAsOfVersion(to))
-        def downTyp(jt: String): String =
-          if (jt == "full_outer") "left_outer" else jt
+        val factHead = legWhere(factRel)(src.scanAsOfVersion(to))
         def foldDims(df: DataFrame, from: Int, until: Int,
                      vers: String => Int): DataFrame =
-          (from until until).foldLeft(df) { case (acc, i) =>
-            val (r2, t2, jt2, c2) = dimTbls(i)
-            acc.join(t2.scanAsOfVersion(vers(r2)), expr(c2), downTyp(jt2))
-          }
+          keyJoin(df, dimTbls.slice(from, until), vers)
         val states: Seq[String => Int] = Seq(pinnedVer, curVers)
         // state-combo dedup: a term's pathState (or keyState) only
         // changes its frame when a dim the fold actually TOUCHES moved
@@ -3970,50 +3788,20 @@ object GraftMaterializedView {
       // all-filtered slice / no affected groups: advance the marker and
       // pins metadata-only, CAS-guarded
       storage.updateProperties(
-        Map(AppliedProp -> to.toString) ++ newDimProp,
+        Map(AppliedProp -> to.toString) ++ newPins,
         requireParentProps = casProps)
       return (applied, to, "empty")
     }
 
     // zone-pruned reads on both sides of the replacement: a row of an
     // untouched group outside the touched keys' [min, max] rectangle
-    // cannot join and would only idle through the semi join
-    def rangeSqlFor(schema: org.apache.spark.sql.types.StructType,
-                    names: Seq[String], sqls: Seq[String]): Option[String] = {
-      def isBinaryFloat(k: String) = {
-        val i = names.indexOf(k)
-        val colName = sqls(i)
-        schema.fields.find(_.name.equalsIgnoreCase(colName)).map(_.dataType)
-          .exists(t => t == org.apache.spark.sql.types.FloatType ||
-            t == org.apache.spark.sql.types.DoubleType)
-      }
-      // bounds only for keys whose source sql IS a bare column of the
-      // scanned schema — expression keys skip (still exact via the
-      // semi join; pruning is a pure optimization)
-      val colKeys = names.zip(sqls).filter { case (_, s) =>
-        schema.fields.exists(_.name.equalsIgnoreCase(s.stripPrefix("`").stripSuffix("`")))
-      }
-      val bounds = rangeBounds(touched, colKeys.map(_._1), isBinaryFloat)
-      val rendered = bounds.flatMap { case (k, lo, hi) =>
-        val colName = {
-          val i = names.indexOf(k)
-          sqls(i).stripPrefix("`").stripSuffix("`")
-        }
-        FilterSql.toSql(org.apache.spark.sql.sources.And(
-          org.apache.spark.sql.sources.GreaterThanOrEqual(colName, lo),
-          org.apache.spark.sql.sources.LessThanOrEqual(colName, hi)))
-      }
-      if (rendered.isEmpty) None else Some(rendered.mkString("(", ") AND (", ")"))
-    }
+    // cannot join and would only idle through the semi join (expression
+    // keys skip pruning and stay exact through it)
     val tk = parts.indices.map(i => s"_mvtk_$i")
     // touched keys are changelog-bounded: broadcast below the counted
     // bound so neither the recompute join nor the stored-slice semi
     // join shuffles its big side
-    val touchedR = {
-      val t0 = touched.toDF(tk: _*)
-      if (nTouched <= graft.table.GraftTable.MergeBroadcastRowBound)
-        broadcast(t0) else t0
-    }
+    val touchedR = bcIfSmallN(touched.toDF(tk: _*), nTouched)
 
     // range pruning applies to keys that are bare FACT columns (the
     // schema check skips dim-side keys — still exact via the semi join);
@@ -4039,9 +3827,8 @@ object GraftMaterializedView {
         touched.where(factKeyNames.map(n => col(s"`$n`").isNull)
           .reduce(_ && _)).isEmpty
     }
-    val srcScan = unionHeadScan(t =>
-      if (factPruneOk) rangeSqlFor(t.schema, keyNames, parts.map(_._2))
-      else None)
+    val srcScan = headScan(prune = t =>
+      if (factPruneOk) rangeSql(touched, t.schema, parts) else None)
     // DIM-side zone pruning (round 19): when the partition key lives on
     // a dimension (the dim-keyed rank dashboard), the recompute join
     // used to read the WHOLE dim — at scale a full fact x full dim
@@ -4065,7 +3852,7 @@ object GraftMaterializedView {
               .reduce(_ && _)).isEmpty)
         val scan =
           if (!sound) t.scanAsOfVersion(curVers(r))
-          else rangeSqlFor(dSchema, keyNames, parts.map(_._2)) match {
+          else rangeSql(touched, dSchema, parts) match {
             case Some(p) => t.scanVersionWhere(curVers(r), p)
             case None => t.scanAsOfVersion(curVers(r))
           }
@@ -4076,7 +3863,7 @@ object GraftMaterializedView {
         .reduce(_ && _), "left_semi")
     val (recomputed, nRecomputed) = checkpointCounted(replay(srcTouched))
 
-    val storedScan = rangeSqlFor(storage.schema, keyNames, keyNames) match {
+    val storedScan = rangeSql(touched, storage.schema, keyNames.map(k => k -> k)) match {
       case Some(p) => storage.scanWhere(p)
       case None => storage.scan()
     }
@@ -4095,7 +3882,7 @@ object GraftMaterializedView {
         mergeKeys.zip(rk).map { case (n, k) => col(s"`$n`") <=> col(s"`$k`") }
           .reduce(_ && _), "left_anti")
     storage.applyNetChanges(delKeys, recomputed, mergeKeys,
-      props = props ++ Map(AppliedProp -> to.toString) ++ newDimProp,
+      props = props ++ Map(AppliedProp -> to.toString) ++ newPins,
       requireParentProps = casProps,
       nullSafeKeys = true)
     (applied, to, "incremental")

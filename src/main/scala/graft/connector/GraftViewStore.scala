@@ -26,10 +26,6 @@ final case class StoredView(
     columnComments: Seq[Option[String]],
     properties: Map[String, String],
     schemaMode: String) {
-
-  /** Final output names: aliases when given, else the query's own. */
-  def outputAliases: Seq[String] =
-    if (columnAliases.nonEmpty) columnAliases else queryColumnNames
 }
 
 object StoredView {

@@ -56,10 +56,6 @@ final class Loader(catalog: GraftCatalog, defaultConfig: LoaderConfig = LoaderCo
                     config: Option[LoaderConfig] = None): LoadResult =
     loadBatches(graft.sources.ArrowIpcSource.read(catalog.spark, source), ident, config)
 
-  def loadIpcFile(path: String, ident: TableIdent,
-                  config: Option[LoaderConfig] = None): LoadResult =
-    loadBatches(graft.sources.ArrowIpcSource.readFile(catalog.spark, path), ident, config)
-
   /** S6: ingest a REST endpoint — each fetched JSON batch becomes one
     * micro-batch through the messy-dict pipeline (`examples/
     * rest_adapter.py:9-35` feeding `load_data_batches`).

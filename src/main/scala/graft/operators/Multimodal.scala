@@ -32,16 +32,6 @@ object Multimodal {
     StructField("payload_bytes", LongType, nullable = false),
     StructField("feature", ArrayType(FloatType), nullable = true)))
 
-  /** Wrap raw binary rows into the canonical asset schema. */
-  def toAssets(df: DataFrame, idCol: String, payloadCol: String,
-               modality: String, mime: String): DataFrame =
-    df.select(
-      col(idCol).cast(LongType).as("asset_id"),
-      lit(modality).as("modality"),
-      lit(mime).as("mime"),
-      col(payloadCol).cast(BinaryType).as("payload"),
-      map(lit("source"), lit("graft")).as("meta"))
-
   /** STUB decode kernel: a real deployment would decode the payload
     * (JPEG → pixels, WAV → PCM) inside this per-partition loop using a
     * native codec. The container has none, so the "feature" is a

@@ -247,9 +247,4 @@ object PartitionExpr {
         names.diff(names.distinct).distinct.mkString(", "))
     fields
   }
-
-  /** Canonical string form of a multi-field spec (round-trips through
-    * [[parseSpec]]).
-    */
-  def specString(fields: Seq[PartitionField]): String = fields.mkString(", ")
 }

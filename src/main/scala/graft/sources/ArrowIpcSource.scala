@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, InputStream}
-import java.nio.file.{Files, Paths}
+import java.io.InputStream
 import java.time.{Instant, LocalDateTime, ZoneOffset}
 import scala.jdk.CollectionConverters._
 
@@ -27,9 +26,6 @@ import org.apache.spark.sql.types._
   * Timestamp, naive → TimestampNTZ, null → String.
   */
 object ArrowIpcSource {
-
-  def readFile(spark: SparkSession, path: String): Iterator[DataFrame] =
-    read(spark, new BufferedInputStream(Files.newInputStream(Paths.get(path))))
 
   /** Iterate the stream's record batches as DataFrames. The iterator
     * owns the stream and closes it (and the allocator) at exhaustion.

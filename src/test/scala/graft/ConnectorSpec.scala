@@ -573,6 +573,73 @@ class ConnectorSpec extends AnyFunSuite with Matchers {
       .head.getString(2) shouldBe "incremental"
     spark.sql("SELECT total FROM graft.mv5.m WHERE g = 'b'").head.getDouble(0) shouldBe 16.0
     spark.sql("CALL graft.system.drop_mview('mv5', 'm')")
+
+    import graft.table.{GraftCatalog, TableIdent}
+    val cat = GraftCatalog(spark, spark.conf.get("spark.sql.catalog.graft.warehouse"))
+    def rows(q: String): Seq[String] = spark.sql(q).collect().map(_.toString).toSeq.sorted
+    // Strands one MV behind an expired changelog: refresh to the head,
+    // expire, commit `move`, then rewind the pin property `pinProp` to
+    // `stale` (storage surgery). The refresh must name force_full; a
+    // forced rebuild equals the defining query and incremental
+    // maintenance resumes.
+    def stranded(mv: String, defSql: String, expireTbl: String, pinProp: String,
+                 stale: String, move: String, next: String): Unit = withClue(s"$mv ") {
+      spark.sql(s"CALL graft.system.refresh_mview('mv5', '$mv', false)")
+      spark.sql(s"CALL graft.system.expire_snapshots('mv5', '$expireTbl', 1)")
+        .head.getInt(0) should be > 0
+      spark.sql(move)
+      cat.load(TableIdent("mv5", mv + "__rows")).updateProperties(Map(pinProp -> stale))
+      val e = intercept[Exception] {
+        spark.sql(s"CALL graft.system.refresh_mview('mv5', '$mv', false)")
+      }
+      e.getMessage should include("force_full")
+      spark.sql(s"CALL graft.system.refresh_mview('mv5', '$mv', true)")
+        .head.getString(2) shouldBe "full"
+      rows(s"SELECT * FROM graft.mv5.$mv") shouldBe rows(defSql)
+      spark.sql(next)
+      spark.sql(s"CALL graft.system.refresh_mview('mv5', '$mv', false)")
+        .head.getString(2) shouldBe "incremental"
+      rows(s"SELECT * FROM graft.mv5.$mv") shouldBe rows(defSql)
+      spark.sql(s"CALL graft.system.drop_mview('mv5', '$mv')")
+    }
+
+    // a window MV whose source changelog was expired
+    val winSql = """SELECT g, id, v, rn FROM (
+                   |  SELECT g, id, v, ROW_NUMBER() OVER (PARTITION BY g ORDER BY v DESC, id) AS rn
+                   |  FROM graft.mv5.src) WHERE rn <= 2""".stripMargin
+    spark.sql(s"CALL graft.system.create_mview('mv5', 'w', '$winSql')")
+      .head.getString(0) shouldBe "window"
+    spark.sql("INSERT INTO graft.mv5.src VALUES (5, 'b', 7.0)")
+    stranded("w", winSql, "src", "graft.mview.applied-version", "1",
+      "INSERT INTO graft.mv5.src VALUES (6, 'z', 3.0)",
+      "INSERT INTO graft.mv5.src VALUES (7, 'b', 9.0)")
+
+    // a join MV whose dimension pin points behind an expired dim changelog
+    spark.sql("CREATE TABLE graft.mv5.dim (dg STRING, cat STRING)")
+    spark.sql("INSERT INTO graft.mv5.dim VALUES ('a', 'x'), ('b', 'y')")
+    val dimV1 = cat.load(TableIdent("mv5", "dim")).currentOrFail().version
+    val joinSql = """SELECT cat, SUM(v) AS t, COUNT(*) AS n
+                    |FROM graft.mv5.src JOIN graft.mv5.dim ON g = dg GROUP BY cat""".stripMargin
+    spark.sql(s"CALL graft.system.create_mview('mv5', 'j', '$joinSql')")
+      .head.getString(0) shouldBe "incremental"
+    spark.sql("INSERT INTO graft.mv5.dim VALUES ('z', 'y')")
+    stranded("j", joinSql, "dim", "graft.mview.dim-versions",
+      s"""[["mv5/dim","$dimV1"]]""",
+      "INSERT INTO graft.mv5.dim VALUES ('c', 'w')",
+      "INSERT INTO graft.mv5.src VALUES (8, 'c', 1.5)")
+    // ... and the same stranded dim pin under a rank-over-join window MV
+    val dimV2 = cat.load(TableIdent("mv5", "dim")).currentOrFail().version
+    val winJoinSql = """SELECT cat, id, v, rn FROM (
+                       |  SELECT cat, id, v, ROW_NUMBER() OVER (PARTITION BY cat ORDER BY v DESC, id) AS rn
+                       |  FROM graft.mv5.src JOIN graft.mv5.dim ON g = dg) WHERE rn <= 2""".stripMargin
+    spark.sql(s"CALL graft.system.create_mview('mv5', 'wj', '$winJoinSql')")
+      .head.getString(0) shouldBe "window"
+    spark.sql("INSERT INTO graft.mv5.dim VALUES ('d', 'x')")
+    stranded("wj", winJoinSql, "dim", "graft.mview.dim-versions",
+      s"""[["mv5/dim","$dimV2"]]""",
+      "INSERT INTO graft.mv5.dim VALUES ('e', 'w')",
+      "INSERT INTO graft.mv5.src VALUES (10, 'e', 2.5)")
+    spark.sql("DROP TABLE graft.mv5.dim")
   }
 
   test("materialized views: a storage partition spec adds refresh pruning") {
