@@ -206,27 +206,10 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     // commit, scans apply `NOT pred` to older-seq groups, and
     // compaction folds it in later. Chosen when the CoW rewrite would
     // exceed the MoR threshold (see [[chooseMor]]).
-    if (mayMatch.nonEmpty && chooseMor(snap, mayMatch.map(_.sizeBytes).sum) &&
-        morSafePredicate(pred)) {
-      val removed = dropped.map(_.path).toSet
-      val untouched = skipGroups.map(_.manifest).toSet
-      return log.commit { parent =>
-        val p = parent.getOrElse(snap)
-        requireNoConflict(p, removed, "delete")
-        requireStableNames(p, snap, "delete") // the stored predicate names columns
-        val ns = p.lastSeq + 1
-        val groups = pruneGroups(p.schema, p.fileGroups, removed, untouched)
-        p.copy(
-          snapshotId = newSnapshotId(),
-          operation = "delete",
-          fileGroups = groups,
-          deleteGroups = purgeDeletes(groups, p.deleteGroups) :+
-            PredicateDeleteGroup(ns, predicateSql),
-          lastSeq = ns)
-      }
-    }
+    val mor = mayMatch.nonEmpty && chooseMor(snap, mayMatch.map(_.sizeBytes).sum) &&
+      morSafePredicate(pred)
     val rewritten: Option[FileGroup] =
-      if (mayMatch.isEmpty) None
+      if (mayMatch.isEmpty || mor) None
       else {
         // SQL DELETE drops only rows where the predicate is TRUE; rows
         // evaluating NULL are kept. A bare `!pred` would evaluate NULL on
@@ -238,20 +221,12 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
           .filter(!coalesce(expr(predicateSql), lit(false)))
         Some(writeDataFiles(rewriteDf, snap.schema, partitionFields()))
       }
-    commitRewrite(snap, "delete", (dropped ++ mayMatch).map(_.path).toSet, rewritten,
-      untouched = skipGroups.map(_.manifest).toSet)
+    commitRewrite(snap, "delete",
+      (if (mor) dropped else dropped ++ mayMatch).map(_.path).toSet, rewritten,
+      mask = if (mor) Some(PredicateDeleteGroup(_, predicateSql)) else None,
+      blind = mor, untouched = skipGroups.map(_.manifest).toSet)
   }
 
-  /** Copy-on-write UPDATE (`UPDATE ... SET ... WHERE ...`): files that
-    * may hold matching rows are rewritten once with
-    * `CASE WHEN pred THEN value ELSE old END` per assigned column;
-    * untouched files carry their manifests over verbatim — an update
-    * touching one partition rewrites one partition. `set` maps column
-    * name → SQL expression text evaluated against the row (so
-    * `v = concat(v, '!')` works). One snapshot, same conflict
-    * validation as delete. SQL three-valued semantics: rows where the
-    * predicate is NULL keep their old values.
-    */
   /** The ONE definition of UPDATE's SET projection, shared by the MoR
     * and CoW branches so assignment resolution can never drift between
     * them: with `cond` each assignment wraps in CASE WHEN (CoW rewrites
@@ -299,6 +274,18 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     }
   }
 
+  /** Copy-on-write UPDATE (`UPDATE ... SET ... WHERE ...`): files that
+    * may hold matching rows are rewritten once with
+    * `CASE WHEN pred THEN value ELSE old END` per assigned column;
+    * untouched files carry their manifests over verbatim — an update
+    * touching one partition rewrites one partition. `set` maps column
+    * name → SQL expression text evaluated against the row (so
+    * `v = concat(v, '!')` works). One snapshot, same conflict
+    * validation as delete. SQL three-valued semantics: rows where the
+    * predicate is NULL keep their old values. Past the merge-on-read
+    * threshold only the matched rows are read, updated and appended,
+    * under a predicate mask that hides their old copies.
+    */
   def updateWhere(predicateSql: String, set: Map[String, String]): Snapshot = {
     val snap = currentOrFail()
     require(set.nonEmpty, "update requires at least one assignment")
@@ -314,45 +301,22 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     // Merge-on-read UPDATE past the threshold: only the MATCHED rows
     // are read (pruned + filtered), updated, and appended at a fresh
     // sequence, with a predicate delete at the SAME sequence masking
-    // the old copies — the morMergeCommit shape with a predicate mask.
-    // Commit cost is O(matched rows), not O(touched files); updated
-    // rows sit at seq ns so the mask (applying to seq < ns only) never
-    // re-deletes them even when they still satisfy the predicate.
-    // Requires a time-stable deterministic predicate (the mask is
-    // re-evaluated at every scan — `ts < now()` would drift and start
-    // swallowing rows the update never touched) and NO concurrent data
-    // commit (a racing append's matching rows would land below the
-    // mask's sequence and vanish un-updated — an outcome no serial
-    // order of the two commits produces); unsafe predicates fall back
-    // to the copy-on-write rewrite below, races abort loudly.
+    // the old copies. Commit cost is O(matched rows), not O(touched
+    // files); updated rows sit at seq ns so the mask (applying to
+    // seq < ns only) never re-deletes them even when they still
+    // satisfy the predicate. Requires a time-stable deterministic
+    // predicate (the mask is re-evaluated at every scan — `ts < now()`
+    // would drift and start swallowing rows the update never touched);
+    // unsafe predicates fall back to the copy-on-write rewrite below.
     if (chooseMor(snap, affected.map(_.sizeBytes).sum) && morSafePredicate(pred)) {
       val updated = applySet(
         readFilesMoR(snap, affected, snap.schema).filter(cond),
         snap.schema, set, cond = None).localCheckpoint()
       if (updated.isEmpty) return snap // zone-range false positive: no-op
-      val dataGroup = writeDataFiles(updated, snap.schema, partitionFields())
-      val analyzed = affected.map(_.path).toSet
-      val knownManifests = snap.fileGroups.map(_.manifest).toSet
-      return log.commit { parent =>
-        val p = parent.getOrElse(snap)
-        // the appended rows DERIVE from the analyzed files: a racing
-        // rewrite or delete of them would be resurrected — conflict
-        requireNoConflict(p, analyzed, "update")
-        requireNoNewDeletes(p, snap, "update")
-        if (p.fileGroups.exists(g => !knownManifests(g.manifest)))
-          throw new java.util.ConcurrentModificationException(
-            "merge-on-read update conflicts with a concurrent data " +
-              "commit; re-run against the latest snapshot")
-        val ns = p.lastSeq + 1
-        val groups = p.fileGroups :+ dataGroup.withSeq(ns)
-        p.copy(
-          snapshotId = newSnapshotId(),
-          operation = "update",
-          fileGroups = groups,
-          deleteGroups = purgeDeletes(groups, p.deleteGroups) :+
-            PredicateDeleteGroup(ns, predicateSql),
-          lastSeq = ns)
-      }
+      return commitRewrite(snap, "update", Set.empty,
+        Some(writeDataFiles(updated, snap.schema, partitionFields())),
+        mask = Some(PredicateDeleteGroup(_, predicateSql)),
+        read = affected.map(_.path).toSet)
     }
     val rewriteDf = applySet(readFilesMoR(snap, affected, snap.schema),
       snap.schema, set, cond = Some(cond))
@@ -498,6 +462,7 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     * re-runs the operation against the new snapshot.
     */
   private def requireNoConflict(parent: Snapshot, analyzed: Set[String], op: String): Unit = {
+    if (analyzed.isEmpty) return // listing the parent's files parses every manifest
     val live = parent.files.map(_.path).toSet
     val gone = analyzed.diff(live)
     if (gone.nonEmpty)
@@ -506,43 +471,76 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
           s"no longer current (e.g. ${gone.head}); re-run against the latest snapshot")
   }
 
-  /** The copy-on-write commit every file-replacing write ends in. Each
-    * attempt of [[MetadataLog]]'s optimistic publish, against the
-    * latest parent:
-    *  - checks that the parent still holds each `requireParentProps`
-    *    value (the marker CAS), that every `removed` file is still live,
-    *    and that no delete group and no column rename/drop landed since
-    *    `snap` was analyzed — a rewrite computed from stale inputs would
-    *    resurrect or duplicate rows;
-    *  - gives `added` the next sequence number (none is taken when the
-    *    commit only drops files);
+  /** The one commit every write that replaces, masks or adds rows ends
+    * in: copy-on-write rewrites, merge-on-read masks, and the keyed
+    * merge-on-read write. Each attempt of [[MetadataLog]]'s optimistic
+    * publish, against the latest parent:
+    *  - checks the marker CAS (each `requireParentProps` value still
+    *    held) and the concurrency policy below;
+    *  - takes the next sequence number when the commit adds a data
+    *    group or a `mask` (a delete group built at that number), and
+    *    gives it to both;
     *  - reuses every manifest the commit does not touch, and writes a
     *    pruned manifest only for a group that loses some files;
     *    `untouched` manifests, ruled out at planning time, are not even
-    *    parsed;
+    *    parsed, and nothing is parsed when no file is removed;
     *  - drops delete groups that no older data group needs any more.
+    *
+    * The concurrency policy, against what `snap` held at analysis.
+    * `read` names the files the output was computed from beyond
+    * `removed`; a `blind` output was not computed from the table's
+    * visible rows (a merge-on-read predicate delete, the keyed
+    * merge-on-read write):
+    *  - every removed or read file must still be live;
+    *  - output computed from visible rows aborts on a new delete
+    *    group: its rows would resurrect what that delete removed;
+    *  - rows computed from visible rows and appended under a mask
+    *    abort on a new data group: the racing rows would fall under
+    *    the mask without being computed;
+    *  - a column rename or drop always aborts: the new files and the
+    *    mask carry the analyzed names.
+    * {{{
+    *   commit                      live files  no new deletes  no new data
+    *   copy-on-write rewrite       removed     yes             -
+    *   merge-on-read deleteWhere   removed     -               -
+    *   merge-on-read update/merge  read        yes             yes
+    *   keyed merge-on-read write   -           -               -
+    *   dedupTable                  read        yes             -
+    * }}}
     */
   private def commitRewrite(snap: Snapshot, op: String, removed: Set[String],
                             added: Option[FileGroup],
+                            mask: Option[Long => DeleteGroup] = None,
+                            read: Set[String] = Set.empty,
+                            blind: Boolean = false,
                             untouched: Set[String] = Set.empty,
                             props: Map[String, String] = Map.empty,
-                            requireParentProps: Map[String, String] = Map.empty): Snapshot =
+                            requireParentProps: Map[String, String] = Map.empty): Snapshot = {
+    val known = snap.fileGroups.map(_.manifest).toSet
     log.commit { parent =>
       val p = parent.getOrElse(snap)
       requireParentPropsUnchanged(p, requireParentProps)
-      requireNoConflict(p, removed, op)
-      requireNoNewDeletes(p, snap, op)
-      val ns = if (added.isDefined) p.lastSeq + 1 else p.lastSeq
-      val groups = pruneGroups(p.schema, p.fileGroups, removed, untouched) ++
-        added.map(_.withSeq(ns))
+      requireNoConflict(p, removed ++ read, op)
+      if (blind) requireStableNames(p, snap, op) else requireNoNewDeletes(p, snap, op)
+      if (!blind && mask.isDefined && added.isDefined &&
+          p.fileGroups.exists(g => !known(g.manifest)))
+        throw new java.util.ConcurrentModificationException(
+          s"merge-on-read $op conflicts with a concurrent data commit; " +
+            "re-run against the latest snapshot")
+      val ns = if (added.isDefined || mask.isDefined) p.lastSeq + 1 else p.lastSeq
+      val kept =
+        if (removed.isEmpty) p.fileGroups
+        else pruneGroups(p.schema, p.fileGroups, removed, untouched)
+      val groups = kept ++ added.map(_.withSeq(ns))
       p.copy(
         snapshotId = newSnapshotId(),
         operation = op,
         properties = p.properties ++ props,
         fileGroups = groups,
-        deleteGroups = purgeDeletes(groups, p.deleteGroups),
+        deleteGroups = purgeDeletes(groups, p.deleteGroups) ++ mask.map(_(ns)),
         lastSeq = ns)
     }
+  }
 
   /** Upsert / MERGE (W4+J1, `core/strategies.py:69-81`): rows in
     * `source` replace target rows with equal `keys`; unmatched source
@@ -713,8 +711,7 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     // carry those untouched rows too or the mask would swallow them
     // (the randomized differential suite caught exactly this). Rows
     // whose key no clause touched anywhere stay out of both the append
-    // and the mask. Updated values may derive from target columns, so
-    // like MoR UPDATE any racing data commit aborts loudly.
+    // and the mask.
     if (equiCondition && notMatchedBySource.isEmpty && matched.nonEmpty &&
         pruneKeys.nonEmpty && rewriteSet.nonEmpty &&
         chooseMor(snap, rewriteSet.map(_.sizeBytes).sum)) {
@@ -752,28 +749,9 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
       val dataGroup = writeDataFiles(morRows, snap.schema, specs)
       val keyGroup = writeDataFiles(affectedKeys,
         deleteKeySchema(snap, keyCols), Nil)
-      val analyzed = rewriteSet.map(_.path).toSet
-      val knownManifests = snap.fileGroups.map(_.manifest).toSet
-      return log.commit { parent =>
-        val p = parent.getOrElse(snap)
-        // appended outcomes DERIVE from the analyzed files: a racing
-        // rewrite/delete of them would be resurrected — conflict
-        requireNoConflict(p, analyzed, "merge")
-        requireNoNewDeletes(p, snap, "merge")
-        if (p.fileGroups.exists(g => !knownManifests(g.manifest)))
-          throw new java.util.ConcurrentModificationException(
-            "merge-on-read merge conflicts with a concurrent data " +
-              "commit; re-run against the latest snapshot")
-        val ns = p.lastSeq + 1
-        val groups = p.fileGroups :+ dataGroup.withSeq(ns)
-        p.copy(
-          snapshotId = newSnapshotId(),
-          operation = "merge",
-          fileGroups = groups,
-          deleteGroups = purgeDeletes(groups, p.deleteGroups) :+
-            EqualityDeleteGroup(ns, keyCols, keyGroup.withSeq(ns)),
-          lastSeq = ns)
-      }
+      return commitRewrite(snap, "merge", Set.empty, Some(dataGroup),
+        mask = Some(ns => EqualityDeleteGroup(ns, keyCols, keyGroup.withSeq(ns))),
+        read = rewriteSet.map(_.path).toSet)
     }
 
     // Rewritten survivors of the touched files, projected back to the
@@ -988,11 +966,13 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
 
   /** Apply step of the keyed write. Past [[chooseMor]] the rows land
     * as an append group masked by an equality-delete group on the keys
-    * ([[morMergeCommit]]) — unless a null-safe batch carries a NULL
-    * component: equality deletes apply with SQL equality on read and
-    * would never mask the stored NULL-keyed row. Otherwise the rewrite
-    * set is read once, anti-joined against the key frame and written
-    * back with the upsert rows in one [[commitRewrite]]. The
+    * at the same sequence, so the new rows stay visible and every older
+    * row with a matching key is replaced with zero rewrites — unless a
+    * null-safe batch carries a NULL component: equality deletes apply
+    * with SQL equality on read and would never mask the stored
+    * NULL-keyed row. Otherwise the rewrite set is read once,
+    * anti-joined against the key frame and written back with the
+    * upsert rows. Both shapes end in [[commitRewrite]]. The
     * checkpointed key frame carries no size stats and compiles without
     * AQE, so it is broadcast explicitly below the merge bound — else
     * the planner sort-merge-joins it, shuffling every rewritten file to
@@ -1002,8 +982,13 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
                          props: Map[String, String] = Map.empty,
                          requireParentProps: Map[String, String] = Map.empty): Snapshot = {
     import plan._
-    if (rewriteSet.nonEmpty && !anyNullKey && chooseMor(snap, rewriteSet.map(_.sizeBytes).sum))
-      return morMergeCommit(snap, rows, keyDf, keys, op, props, requireParentProps)
+    if (rewriteSet.nonEmpty && !anyNullKey && chooseMor(snap, rewriteSet.map(_.sizeBytes).sum)) {
+      val dataGroup = rows.map(writeDataFiles(_, snap.schema, partitionFields()))
+      val keyGroup = writeDataFiles(keyDf.distinct(), deleteKeySchema(snap, keys), Nil)
+      return commitRewrite(snap, op, Set.empty, dataGroup,
+        mask = Some(ns => EqualityDeleteGroup(ns, keys, keyGroup.withSeq(ns))),
+        blind = true, props = props, requireParentProps = requireParentProps)
+    }
     val kept = if (rewriteSet.isEmpty) None else Some {
       val base = readFilesMoR(snap, rewriteSet, snap.schema)
       val keysJ =
@@ -1835,40 +1820,6 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
       throw new java.util.ConcurrentModificationException(
         s"$op conflicts with a concurrent column rename/drop " +
           s"(${broken.mkString(", ")}); re-run against the latest snapshot")
-  }
-
-  /** Merge-on-read MERGE commit: `rows` (none for a keyed delete) land
-    * as a fresh data group and `keyDf`'s distinct tuples as an
-    * equality-delete group AT THE SAME sequence — the delete masks only
-    * strictly older data, so the new rows are visible and every older
-    * row with a matching key is logically replaced, all in one
-    * O(source) commit with zero rewrites. NULL
-    * key tuples are excluded by the caller (SQL equality never matches
-    * them; such rows are plain inserts). Pure addition — no conflict
-    * with concurrent commits (a racing delete lands at a lower seq and
-    * never touches this data).
-    */
-  private def morMergeCommit(snap: Snapshot, rows: Option[DataFrame], keyDf: DataFrame,
-                             keys: Seq[String], op: String,
-                             props: Map[String, String],
-                             requireParentProps: Map[String, String]): Snapshot = {
-    val dataGroup = rows.map(writeDataFiles(_, snap.schema, partitionFields()))
-    val keyGroup = writeDataFiles(keyDf.distinct(), deleteKeySchema(snap, keys), Nil)
-    log.commit { parent =>
-      val p = parent.getOrElse(snap)
-      requireParentPropsUnchanged(p, requireParentProps)
-      requireStableNames(p, snap, op) // data + key files carry analyzed names
-      val ns = p.lastSeq + 1
-      val groups = p.fileGroups ++ dataGroup.map(_.withSeq(ns))
-      p.copy(
-        snapshotId = newSnapshotId(),
-        operation = op,
-        properties = p.properties ++ props,
-        fileGroups = groups,
-        deleteGroups = purgeDeletes(groups, p.deleteGroups) :+
-          EqualityDeleteGroup(ns, keys, keyGroup.withSeq(ns)),
-        lastSeq = ns)
-    }
   }
 
   /** Partition pruning for keyed rewrites (upsert / deleteByKeys /
@@ -3067,21 +3018,11 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
     val delGroup = writeDataFiles(
       victims.repartition(math.max(1, (nVictims / 4000000L).toInt)),
       PositionDeleteGroup.KeySchema, Nil)
-    val analyzed = snap.files.map(_.path).toSet
-    log.commit { parent =>
-      val p = parent.getOrElse(snap)
-      // positions are only valid against the exact files scanned — a
-      // concurrent rewrite (compact/CoW) of any of them dangles them
-      requireNoConflict(p, analyzed, "dedup")
-      requireNoNewDeletes(p, snap, "dedup")
-      val ns = p.lastSeq + 1
-      p.copy(
-        snapshotId = newSnapshotId(),
-        operation = "dedup",
-        deleteGroups = purgeDeletes(p.fileGroups, p.deleteGroups) :+
-          PositionDeleteGroup(ns, delGroup.withSeq(ns)),
-        lastSeq = ns)
-    }
+    // positions are only valid against the exact files scanned — a
+    // concurrent rewrite (compact/CoW) of any of them dangles them
+    commitRewrite(snap, "dedup", Set.empty, None,
+      mask = Some(ns => PositionDeleteGroup(ns, delGroup.withSeq(ns))),
+      read = snap.files.map(_.path).toSet)
   }
 
   /** Rewrite EXACTLY the data files the pending merge-on-read deletes

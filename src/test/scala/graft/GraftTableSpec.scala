@@ -4,12 +4,36 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import graft.table.{GraftCatalog, TableIdent}
+import graft.table.{GraftCatalog, GraftTable, TableIdent}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
+
+/** Local disk under the `racefs` scheme with HDFS rename semantics
+  * (rename fails when the destination exists), so metadata publishes
+  * take [[graft.meta.MetadataLog]]'s write-temp + rename branch. A
+  * one-shot hook runs just before the next version-file publish:
+  * tests arm it to land a racing commit between an operation's
+  * analysis and its publish. The operation's publish then loses, and
+  * its commit re-runs its checks against the racing snapshot.
+  */
+class RaceFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "racefs"
+  override def getUri: java.net.URI = java.net.URI.create("racefs:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean = {
+    if (dst.getName.matches("v\\d{8}\\.json"))
+      RaceFs.beforePublish.getAndSet(None).foreach(_())
+    !exists(dst) && super.rename(src, dst)
+  }
+}
+
+object RaceFs {
+  val beforePublish =
+    new java.util.concurrent.atomic.AtomicReference[Option[() => Unit]](None)
+}
 
 /** Write/read round-trips over a real local-FS warehouse — replaces the
   * reference's MagicMock orchestration tests
@@ -2184,5 +2208,111 @@ class GraftTableSpec extends AnyFunSuite with Matchers {
     // agrees with the unfiltered AS-OF scan + a post-filter
     t.scanVersionWhere(pinned, "v <= 20.0").count() shouldBe
       t.scanAsOfVersion(pinned).where(col("v") <= 20.0).count()
+  }
+
+  test("row-changing commits keep their concurrency policy against each racing commit") {
+    // One operation per row of GraftTable.commitRewrite's policy table.
+    // For each, one racing commit lands between the operation's analysis
+    // and its publish; the operation either aborts or commits as the
+    // policy says, and the table then holds exactly the model's rows.
+    spark.sparkContext.hadoopConfiguration.setClass("fs.racefs.impl",
+      classOf[RaceFs], classOf[org.apache.hadoop.fs.FileSystem])
+    val c = GraftCatalog(spark, "racefs:" + Files.createTempDirectory("graft-race"))
+    type R = (Long, String, String)
+    // each group is written as one file
+    val groupA: Seq[R] = Seq((1L, "2024-01-01", "a"), (2L, "2024-01-01", "b"))
+    val groupB: Seq[R] = Seq((3L, "2024-01-02", "c"), (4L, "2024-01-02", "d"),
+      (5L, "2024-01-02", "e"), (5L, "2024-01-02", "e"))
+    val appended: R = (7L, "2024-01-07", "x")
+    // (name, racing commit, its effect on the rows)
+    val races: Seq[(String, GraftTable => Unit, Seq[R] => Seq[R])] = Seq(
+      ("append", _.append(df(appended)), _ :+ appended),
+      ("mor-delete", _.deleteWhere("id = 2"), _.filterNot(_._1 == 2L)),
+      ("compact", t => { t.compact(); () }, identity),
+      ("rename", t => { t.renameColumn("name", "label"); () }, identity))
+    val upserted: Seq[R] = Seq((4L, "2024-01-02", "up"), (9L, "2024-01-09", "new"))
+    val mergeSrc = {
+      val s = spark
+      import s.implicits._
+      Seq((4L, "m")).toDF("_s_0", "_s_1")
+    }
+    // (name, operation, its effect on the rows, races it commits through)
+    val ops: Seq[(String, GraftTable => Unit, Seq[R] => Seq[R], Set[String])] = Seq(
+      // a time-varying predicate cannot be a stored mask: copy-on-write
+      ("cow-delete", _.deleteWhere("id = 4 AND day < current_date()"),
+        _.filterNot(_._1 == 4L), Set("append")),
+      ("mor-delete", _.deleteWhere("id <= 3"), _.filter(_._1 > 3L),
+        Set("append", "mor-delete")),
+      ("mor-update", _.updateWhere("id >= 4", Map("name" -> "'u'")),
+        _.map(r => if (r._1 >= 4L) r.copy(_3 = "u") else r), Set.empty),
+      ("mor-merge", _.mergeRows(mergeSrc, "_t_id = _s_0",
+          matched = Seq(graft.table.MergeClause("update", None, Seq(("name", "_s_1")))),
+          notMatched = Nil, notMatchedBySource = Nil,
+          pruneKeys = Seq(("id", "_s_0")), equiCondition = true),
+        _.map(r => if (r._1 == 4L) r.copy(_3 = "m") else r), Set.empty),
+      ("keyed-mor", _.upsert(df(upserted: _*), Seq("id")),
+        _.filterNot(_._1 == 4L) ++ upserted,
+        Set("append", "mor-delete", "compact")),
+      ("dedup", t => { t.dedupTable(); () }, _.distinct, Set("append")))
+    def fixture(ident: TableIdent): GraftTable = {
+      val t = c.ensure(ident)
+      t.append(df(groupA: _*).coalesce(1))
+      t.updateProperties(Map(GraftTable.DeleteModeProp -> "mor"))
+      t.append(df(groupB: _*).coalesce(1))
+      t
+    }
+    // unraced, every operation but the copy-on-write delete commits a mask
+    for ((opName, op, opModel, _) <- ops) withClue(s"$opName unraced: ") {
+      val t = fixture(TableIdent("ns", s"solo_$opName".replace('-', '_')))
+      op(t)
+      t.currentOrFail().deleteGroups.nonEmpty shouldBe (opName != "cow-delete")
+      t.scan().collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+        .toSeq.sorted shouldBe opModel(groupA ++ groupB).sorted
+    }
+    for ((opName, op, opModel, commitsThrough) <- ops;
+         (raceName, race, raceModel) <- races) withClue(s"$opName racing $raceName: ") {
+      val ident = TableIdent("ns", s"race_${opName}_$raceName".replace('-', '_'))
+      val t = fixture(ident)
+      val racer = c.load(ident)
+      val before = t.currentOrFail().version
+      RaceFs.beforePublish.set(Some(() => race(racer)))
+      val base = groupA ++ groupB
+      val expected =
+        if (commitsThrough(raceName)) {
+          op(t)
+          t.currentOrFail().version shouldBe before + 2
+          opModel(raceModel(base))
+        } else {
+          intercept[java.util.ConcurrentModificationException](op(t))
+          t.currentOrFail().version shouldBe before + 1
+          raceModel(base)
+        }
+      RaceFs.beforePublish.get shouldBe None // the race landed
+      t.scan().collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+        .toSeq.sorted shouldBe expected.sorted
+    }
+  }
+
+  test("a merge-on-read delete parses only the manifests its planning parsed") {
+    val c = cat()
+    val ident = TableIdent("ns", "morparse")
+    val t = c.ensure(ident)
+    // eight appends of one two-row file each, ids 10i and 10i+1
+    def batch(i: Int) =
+      df((10L * i, "2024-01-01", s"n$i"), (10L * i + 1, "2024-01-01", s"m$i")).coalesce(1)
+    t.append(batch(0))
+    t.updateProperties(Map(GraftTable.DeleteModeProp -> "mor"))
+    (1 until 8).foreach(i => t.append(batch(i)))
+    // fresh handle = cold manifest cache + zeroed parse counter
+    val t2 = c.load(ident)
+    val total = t2.currentOrFail().fileGroups.size
+    total shouldBe 8
+    // summaries rule out every manifest but the one holding ids 30..31;
+    // its file only partly matches, so the delete is a predicate mask
+    val s = t2.deleteWhere("id = 30")
+    s.deleteGroups.size shouldBe 1
+    val parses = t2.log.manifestParses.get()
+    withClue(s"parsed $parses of $total manifests: ") { parses shouldBe 1L }
+    t2.scan().count() shouldBe 15
   }
 }
