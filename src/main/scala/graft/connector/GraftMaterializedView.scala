@@ -40,14 +40,10 @@ import org.json4s.jackson.JsonMethods
   * of a left-deep chain of inner/left-outer joins onto bare graft
   * DIMENSIONS — an optional deterministic WHERE, GROUP BY
   * deterministic expressions, aggregates limited to SUM / COUNT /
-  * COUNT(*) / AVG / MIN / MAX / COUNT|SUM|AVG(DISTINCT x) — decimal
-  * SUM/AVG(DISTINCT) included at EVERY (p,s) (NULL-means-empty vs
-  * overflow disambiguated by the alive-pair count), decimal AVG at
-  * every (p,s) since round 16 (exact running sum via
-  * DecimalAddNoOverflowCheck + Average's own exact division at merge);
-  * MIN/MAX(DISTINCT) ≡
-  * MIN/MAX — each with an optional deterministic FILTER (WHERE p),
-  * folded into the aggregated expression as CASE WHEN p THEN e END.
+  * COUNT(*) / AVG / MIN / MAX / COUNT|SUM|AVG(DISTINCT x), decimals at
+  * every (p,s) (see [[AggKind]]) — each with an optional deterministic
+  * FILTER (WHERE p), folded into the aggregated expression as CASE
+  * WHEN p THEN e END.
   * Window shapes — ANY deterministic window function over a
   * partitioned window (rank top-N with an optional `rn <= N`
   * predicate, running SUM/AVG/MIN/MAX/COUNT OVER any frame, LAG/LEAD
@@ -106,40 +102,23 @@ import org.json4s.jackson.JsonMethods
   * their last match re-extend with NULLs, rows that gained a first
   * match retract the stored NULL-extension — both computed as
   * slice-bounded semi/anti joins, so the cost stays O(affected ⋈ D).
-  * The maintenance algebra per aggregate kind:
+  * The maintenance algebra of each aggregate kind is defined once, by
+  * [[AggKind]]: signed deltas add (SUM, COUNT, COUNT(*), and AVG as a
+  * running sum `_mv_as_<i>` over a non-null count `_mv_nn_<i>`), and
+  * MIN/MAX merge inserts in closed form, recomputing from the source
+  * AS OF the refresh head only the groups whose extreme a delete
+  * retracted. `_mv_rows` = COUNT(*) per group; a group vanishes when it
+  * hits zero.
   *
-  *  - SUM/COUNT/COUNT(*): exactly retraction-safe — signed deltas add.
-  *    Bookkeeping: `_mv_rows` = COUNT(*) per group (a group vanishes
-  *    when it hits zero) and `_mv_nn_<i>` = per-SUM non-null input
-  *    counts (a SUM over only-null inputs stays NULL, matching SQL,
-  *    instead of drifting to 0).
-  *  - AVG: decomposed into the bookkeeping the table already carries —
-  *    `_mv_as_<i>` holds the running double sum and `_mv_nn_<i>` the
-  *    non-null count; the public column is their quotient (NULL at
-  *    zero count). Spark's own non-decimal Average accumulates in
-  *    double and divides by the count, so the decomposition is
-  *    bit-identical to a recompute, not an approximation. Decimal AVG
-  *    keeps an exact decimal running sum (DecimalAddNoOverflowCheck at
-  *    the stored sum type — the Column `+` would re-round at precision
-  *    38) and divides at merge with the identical
-  *    DecimalDivideWithOverflowCheck expression Average evaluates —
-  *    bit-identical to a recompute at every (p,s).
-  *  - MIN/MAX: inserts maintain closed-form (`least`/`greatest`); a
-  *    delete can retract the stored extreme, so groups whose retracted
-  *    values tie-or-beat the stored extreme are recomputed from the
-  *    source AS OF the refresh head — O(affected groups), never
-  *    O(table): the recompute scan is narrowed to the retracted
-  *    groups' key range and semi-joined to exactly those keys.
-  *  - COUNT/SUM/AVG(DISTINCT x): the counting algorithm — a
-  *    dedup-level aux graft table `<storage>__dl<i>` holds one row per
-  *    (group, value) pair with its net source-row count; refresh first
-  *    applies the signed pair deltas to the aux table (its OWN applied
-  *    marker + CAS makes the two-table update crash-safe and
-  *    exactly-once), then folds the aux table's resulting changelog —
-  *    pair births +1 (+value for SUM/AVG), deaths −1 (−value) — into
-  *    the main merge as the distinct aggregate's exact delta. Aggs
-  *    over the SAME distinct expression share one pair table.
-  *    Retraction-exact, O(changed pairs) per refresh.
+  * COUNT/SUM/AVG(DISTINCT x) use the counting algorithm: a dedup-level
+  * aux graft table `<storage>__dl<i>` holds one row per (group, value)
+  * pair with its net source-row count; refresh first applies the
+  * signed pair deltas to the aux table (its OWN applied marker + CAS
+  * makes the two-table update crash-safe and exactly-once), then folds
+  * the aux table's resulting changelog — pair births +1 (+value for
+  * SUM/AVG), deaths −1 (−value) — into the main merge as the distinct
+  * aggregate's exact delta. Aggs over the SAME distinct expression
+  * share one pair table. Retraction-exact, O(changed pairs) per refresh.
   *
   * Refresh reads the source changelog `(applied, head]`, signs rows
   * (+1 insert / -1 delete pre-image), re-evaluates the stored
@@ -237,12 +216,228 @@ object GraftMaterializedView {
   val DlVCol = "_mv_dlv" // the distinct expression's value in the aux table
   def dlVerProp(i: Int): String = s"graft.mview.dl-version.$i" // aux version folded into main
 
-  final case class AggSpec(name: String, kind: String, sql: String)
-  // kind: sum | count | count_star | avg | davg (exact decimal) | min |
-  // max | cdistinct / sdistinct / adistinct / dadistinct
-  // (COUNT/SUM/AVG(DISTINCT x) via the dedup-level aux table;
-  // dadistinct = decimal AVG(DISTINCT), exact decimal pair-value sum
-  // under the davg precision gate)
+  final case class AggSpec(name: String, kind: AggKind, sql: String)
+
+  /** How one maintained aggregate is stored, signed, folded and merged:
+    * the one definition every create, full-rebuild and refresh site
+    * reads. The kinds form five families (count, running sum, double
+    * AVG, decimal AVG, extreme); all but the extreme have a plain and a
+    * DISTINCT form. A DISTINCT form keeps no delta of its own: phase B
+    * folds its pair table's changelog into the columns its plain form's
+    * delta carries, so the merge treats both forms alike. `id` is the
+    * kind's name in [[AggProp]].
+    */
+  sealed abstract class AggKind(val id: String, val distinct: Boolean) {
+    /** The public column over a grouped base (create, full rebuild). */
+    def public(a: AggSpec): Column
+    /** Hidden bookkeeping (storage column, aggregate over a grouped
+      * base), in stored order; each merges by [[mergeAdd]]. */
+    def hidden(a: AggSpec, i: Int): Seq[(String, Column)] = Nil
+    /** The signed per-group delta over a `_sign`ed slice. */
+    protected def signed(a: AggSpec, i: Int): Seq[Column]
+    final def delta(a: AggSpec, i: Int): Seq[Column] = if (distinct) Nil else signed(a, i)
+    /** Phase B, DISTINCT forms: (delta column, zero when the pair table
+      * did not move, fold over its `_mv_s`-signed changelog, the
+      * column whose non-NULL fold flags a NULL value fold as overflow).
+      */
+    def fold(a: AggSpec, i: Int, t: String => DataType): Seq[AggKind.Fold] = Nil
+    /** The public value merged from the merge join's two sides. */
+    def merged(a: AggSpec, i: Int, t: String => DataType): Column
+    /** The running sum whose NULL at a positive non-null count can only
+      * be DECIMAL(38) overflow: the guard families name it.
+      */
+    protected def guarded(a: AggSpec, i: Int): Option[String] = None
+    def extreme: Option[AggKind.Extreme] = None
+
+    /** Overflow seen on the merge join's sides. Spark's non-ANSI
+      * decimal `+` returns NULL past DECIMAL(38), and the merge's
+      * coalesce would resurrect a NULL sum as 0, a confidently wrong
+      * value forever. So abort when the stored sum is NULL at a positive
+      * stored count (corrupt storage, or a full refresh that stored the
+      * SQL overflow answer), or when a plain form's delta sum is NULL at
+      * a nonzero delta count (it overflowed inside the delta
+      * aggregation; a DISTINCT form's fold flags that itself).
+      */
+    final def overflowed(a: AggSpec, i: Int): Seq[Column] = guarded(a, i).toSeq.flatMap { s =>
+      val stored = curExists && coalesce(curCol(nnCol(i)), lit(0L)) > 0L && curCol(s).isNull
+      if (distinct) Seq(stored)
+      else Seq(stored, deltaCol(s).isNull && deltaCol(nnCol(i)) =!= 0L)
+    }
+    /** Overflow in the merge itself, over the merged frame: every
+      * legitimate merged sum is non-NULL (the coalesces see to that).
+      */
+    final def overflowedMerge(a: AggSpec, i: Int): Option[Column] =
+      guarded(a, i).map(s => col(s"`${nnCol(i)}`") > 0L && col(s"`$s`").isNull)
+  }
+
+  object AggKind {
+    type Fold = (String, Column, Column, Option[String])
+    private def count1(e: Column, distinct: Boolean) =
+      if (distinct) count_distinct(e) else count(e)
+    private def sum1(e: Column, distinct: Boolean) =
+      if (distinct) sum_distinct(e) else sum(e)
+    private def nnDelta(e: Column) = sum(when(e.isNotNull, col("_sign")).otherwise(lit(0L)))
+    // sign via negate, not multiply: DECIMAL(p,s) * BIGINT goes through
+    // the precision-loss adjust (precision p+21), which at p+s+21 > 38
+    // rounds every signed value to scale 38-(p+11) BEFORE the sum. -e
+    // keeps the input's exact (p,s), so the summed delta (and the pair
+    // fold) lands in the SAME type the stored running sum uses.
+    private def signedSum(e: Column) = sum(when(col("_sign") === 1L, e).otherwise(negate(e)))
+    private def signedPair = when(col("_mv_s") === 1L, col(DlVCol)).otherwise(negate(col(DlVCol)))
+    private def pairCount = sum(col("_mv_s"))
+    private def nnFold(i: Int): Fold = (nnCol(i), lit(0L), pairCount, None)
+
+    /** COUNT(e) / COUNT(*) / COUNT(DISTINCT e): the count adds its delta. */
+    final class Counting private[AggKind] (id: String, distinct: Boolean, star: Boolean)
+        extends AggKind(id, distinct) {
+      def public(a: AggSpec): Column = count1(if (star) lit(1) else expr(a.sql), distinct)
+      protected def signed(a: AggSpec, i: Int): Seq[Column] =
+        Seq((if (star) sum(col("_sign")) else nnDelta(expr(a.sql))).as(a.name))
+      override def fold(a: AggSpec, i: Int, t: String => DataType): Seq[Fold] =
+        Seq((a.name, lit(0L), pairCount, None))
+      def merged(a: AggSpec, i: Int, t: String => DataType): Column = mergeAdd(a.name, t)
+    }
+
+    /** SUM(e) / SUM(DISTINCT e): the public running sum plus its
+      * non-null count `_mv_nn` (alive-pair count for DISTINCT), so a
+      * SUM over only-NULL inputs stays NULL instead of drifting to 0.
+      * A pair birth folds +value, a death -value, a carrier-count
+      * update nets 0. Either form's sum is legitimately NULL only at
+      * nn = 0, so a NULL at nn > 0 is DECIMAL(38) overflow.
+      */
+    final class Summing private[AggKind] (id: String, distinct: Boolean)
+        extends AggKind(id, distinct) {
+      def public(a: AggSpec): Column = sum1(expr(a.sql), distinct)
+      override def hidden(a: AggSpec, i: Int) = Seq(nnCol(i) -> count1(expr(a.sql), distinct))
+      protected def signed(a: AggSpec, i: Int): Seq[Column] =
+        Seq(signedSum(expr(a.sql)).as(a.name), nnDelta(expr(a.sql)).as(nnCol(i)))
+      override def fold(a: AggSpec, i: Int, t: String => DataType): Seq[Fold] = {
+        val sumT = t(a.name)
+        Seq((a.name, lit(0).cast(sumT), sum(signedPair).cast(sumT),
+            Option(nnCol(i)).filter(_ => sumT.isInstanceOf[DecimalType])),
+          nnFold(i))
+      }
+      def merged(a: AggSpec, i: Int, t: String => DataType): Column =
+        when(mergeAdd(nnCol(i), t) === 0L, lit(null).cast(t(a.name)))
+          .otherwise(mergeAdd(a.name, t))
+      override protected def guarded(a: AggSpec, i: Int) = Some(a.name)
+    }
+
+    /** AVG(e) / AVG(DISTINCT e) over a non-decimal: `_mv_as` holds the
+      * running double sum, `_mv_nn` the non-null count, the public
+      * column their quotient. Spark's non-decimal Average accumulates in
+      * double and divides by the count, so the decomposition is
+      * bit-identical to a recompute (the DISTINCT form averages the
+      * ORIGINAL type's distinct values, matching the pair table).
+      */
+    final class DoubleAveraging private[AggKind] (id: String, distinct: Boolean)
+        extends AggKind(id, distinct) {
+      def public(a: AggSpec): Column =
+        if (distinct) expr(s"avg(DISTINCT (${a.sql}))").cast(DoubleType)
+        else avg(expr(a.sql).cast(DoubleType))
+      override def hidden(a: AggSpec, i: Int) = Seq(
+        asCol(i) -> sum1(expr(a.sql).cast(DoubleType), distinct),
+        nnCol(i) -> count1(expr(a.sql), distinct))
+      protected def signed(a: AggSpec, i: Int): Seq[Column] = Seq(
+        sum(expr(a.sql).cast(DoubleType) * col("_sign")).as(asCol(i)),
+        nnDelta(expr(a.sql)).as(nnCol(i)))
+      override def fold(a: AggSpec, i: Int, t: String => DataType): Seq[Fold] =
+        Seq((asCol(i), lit(0d), sum(signedPair.cast(DoubleType)), None), nnFold(i))
+      def merged(a: AggSpec, i: Int, t: String => DataType): Column = {
+        val nn = mergeAdd(nnCol(i), t)
+        when(nn === 0L, lit(null).cast(DoubleType)).otherwise(mergeAdd(asCol(i), t) / nn)
+      }
+    }
+
+    /** AVG(e) / AVG(DISTINCT e) over a decimal: an exact decimal running
+      * sum `_mv_as` at its stored type (the Column `+` would re-round
+      * at precision 38), divided at merge by [[avgDivide]], the
+      * identical division Spark's decimal Average evaluates, so the
+      * maintained value replays a recompute bit-for-bit at every (p,s).
+      */
+    final class DecimalAveraging private[AggKind] (id: String, distinct: Boolean)
+        extends AggKind(id, distinct) {
+      def public(a: AggSpec): Column =
+        if (distinct) expr(s"avg(DISTINCT (${a.sql}))") else avg(expr(a.sql))
+      override def hidden(a: AggSpec, i: Int) = Seq(
+        asCol(i) -> sum1(expr(a.sql), distinct), nnCol(i) -> count1(expr(a.sql), distinct))
+      protected def signed(a: AggSpec, i: Int): Seq[Column] =
+        Seq(signedSum(expr(a.sql)).as(asCol(i)), nnDelta(expr(a.sql)).as(nnCol(i)))
+      override def fold(a: AggSpec, i: Int, t: String => DataType): Seq[Fold] = {
+        val sumT = t(asCol(i))
+        Seq((asCol(i), lit(0).cast(sumT), sum(signedPair).cast(sumT), Some(nnCol(i))), nnFold(i))
+      }
+      def merged(a: AggSpec, i: Int, t: String => DataType): Column = {
+        val outT = t(a.name).asInstanceOf[DecimalType]
+        val nn = mergeAdd(nnCol(i), t)
+        when(nn === 0L, lit(null).cast(outT))
+          .otherwise(avgDivide(mergeAdd(asCol(i), t), nn, outT))
+      }
+      override protected def guarded(a: AggSpec, i: Int) = Some(asCol(i))
+    }
+
+    /** MIN(e) / MAX(e) (DISTINCT is a no-op on an extreme): the delta
+      * carries the inserted-side and deleted-side extremes. Inserts
+      * merge in closed form; a deleted value that ties or beats the
+      * closed-form candidate flags the group for recompute from the
+      * source.
+      */
+    final class Extreme private[AggKind] (id: String, val pick: Column => Column,
+                                          closer: (Column, Column) => Column,
+                                          reaches: (Column, Column) => Column)
+        extends AggKind(id, false) {
+      def public(a: AggSpec): Column = pick(expr(a.sql))
+      protected def signed(a: AggSpec, i: Int): Seq[Column] = Seq(
+        pick(when(col("_sign") === 1L, expr(a.sql))).as(insCol(i)),
+        pick(when(col("_sign") === -1L, expr(a.sql))).as(retCol(i)))
+      def merged(a: AggSpec, i: Int, t: String => DataType): Column = closedForm(a, i)
+      // the stored extreme folded with the inserted-side one (least /
+      // greatest skip NULLs): exact unless a deleted value reaches it
+      private def closedForm(a: AggSpec, i: Int): Column =
+        when(curExists, closer(curCol(a.name), deltaCol(insCol(i)))).otherwise(deltaCol(insCol(i)))
+      /** The recompute flag. Comparing against the candidate, not just
+        * the stored value, also catches a group born within this slice
+        * whose in-slice insert was deleted again, and a NULL candidate
+        * while a non-null value was deleted (unknowable).
+        */
+      def retracted(a: AggSpec, i: Int): Column = {
+        val cf = closedForm(a, i)
+        deltaCol(retCol(i)).isNotNull && (cf.isNull || reaches(deltaCol(retCol(i)), cf))
+      }
+      override def extreme: Option[Extreme] = Some(this)
+    }
+
+    val Count = new Counting("count", false, star = false)
+    val CountStar = new Counting("count_star", false, star = true)
+    val CountDistinct = new Counting("cdistinct", true, star = false)
+    val Sum = new Summing("sum", false)
+    val SumDistinct = new Summing("sdistinct", true)
+    val Avg = new DoubleAveraging("avg", false)
+    val AvgDistinct = new DoubleAveraging("adistinct", true)
+    val DecimalAvg = new DecimalAveraging("davg", false)
+    val DecimalAvgDistinct = new DecimalAveraging("dadistinct", true)
+    val Min = new Extreme("min", min(_), least(_, _), _ <= _)
+    val Max = new Extreme("max", max(_), greatest(_, _), _ >= _)
+    private val all = Seq(Count, CountStar, CountDistinct, Sum, SumDistinct, Avg,
+      AvgDistinct, DecimalAvg, DecimalAvgDistinct, Min, Max)
+    def apply(id: String, agg: String): AggKind =
+      all.find(_.id == id).getOrElse(sys.error(s"bad agg kind $id for $agg"))
+  }
+
+  // the merge join's sides: `c` the stored row (absent for a new
+  // group), `d` the group's folded delta
+  private def curCol(n: String): Column = col(s"c.`$n`")
+  private def deltaCol(n: String): Column = col(s"d.`$n`")
+  private def curExists: Column = curCol(RowsCol).isNotNull
+
+  /** Add a column's stored and delta values at its stored type: exact
+    * for a decimal (see [[exactDecimalAdd]]), a missing side as 0.
+    */
+  private def mergeAdd(n: String, t: String => DataType): Column = t(n) match {
+    case d: DecimalType => exactDecimalAdd(
+      coalesce(curCol(n), lit(0).cast(d)), coalesce(deltaCol(n), lit(0).cast(d)), d)
+    case o => coalesce(curCol(n), lit(0).cast(o)) + coalesce(deltaCol(n), lit(0).cast(o))
+  }
 
   /** Distinct aggregates maintained through a dedup-level pair table.
     * Aggs over the SAME distinct expression share ONE table (a
@@ -250,9 +445,8 @@ object GraftMaterializedView {
     * two): the canonical index is the first using agg's position, and
     * `users` lists every (spec, position) folding from it.
     */
-  private val DlKinds = Set("cdistinct", "sdistinct", "adistinct", "dadistinct")
   private def dlGroups(aggs: Seq[AggSpec]): Seq[(Int, String, Seq[(AggSpec, Int)])] =
-    aggs.zipWithIndex.filter(p => DlKinds(p._1.kind))
+    aggs.zipWithIndex.filter(_._1.kind.distinct)
       .groupBy(_._1.sql).toSeq
       .map { case (vsql, users) => (users.map(_._2).min, vsql, users) }
       .sortBy(_._1)
@@ -660,7 +854,7 @@ object GraftMaterializedView {
     * unsupported-aggregate refusal.
     */
   private def aggSpecOf(ae0: AggregateExpression, ctx: String)
-      : Either[String, (String, String)] = {
+      : Either[String, (AggKind, String)] = {
     val ae = ae0 match {
       case AggregateExpression(fn, m, dist, Some(p), rid) if p.deterministic =>
         def guard(e: Expression): Expression = CaseWhen(Seq((p, e)), None)
@@ -684,27 +878,22 @@ object GraftMaterializedView {
     ae match {
       case AggregateExpression(Sum(e, _), _, false, None, _) =>
         if (!e.deterministic) return Left(s"nondeterministic SUM in $ctx")
-        Right(("sum", plainSql(e)))
+        Right((AggKind.Sum, plainSql(e)))
       case AggregateExpression(Sum(e, _), _, true, None, _) =>
-        // SUM(DISTINCT x): rides the same dedup-level pair table as
-        // COUNT(DISTINCT) — a pair birth contributes +value, a death
-        // -value, a carrier-count update nets 0. Decimal included: a
-        // legitimate NULL means zero alive pairs (nn == 0), so a NULL
-        // sum with nn > 0 is unambiguously DECIMAL(38) overflow and the
-        // merge aborts on it exactly like the additive SUM path (both
-        // the stored side and the fold's own aggregation are guarded).
+        // SUM(DISTINCT x), decimal included: rides the same dedup-level
+        // pair table as COUNT(DISTINCT) (see AggKind.Summing)
         if (!e.deterministic) return Left(s"nondeterministic SUM(DISTINCT) in $ctx")
         e.dataType match {
-          case _: NumericType => Right(("sdistinct", plainSql(e)))
+          case _: NumericType => Right((AggKind.SumDistinct, plainSql(e)))
           case _ => Left(s"non-numeric SUM(DISTINCT) in $ctx")
         }
       case AggregateExpression(Count(es), _, false, None, _) =>
         if (es.exists(!_.deterministic))
           return Left(s"nondeterministic COUNT in $ctx")
         es match {
-          case Seq(Literal(1, _)) => Right(("count_star", ""))
-          case Seq() => Right(("count_star", ""))
-          case Seq(one) => Right(("count", plainSql(one)))
+          case Seq(Literal(1, _)) => Right((AggKind.CountStar, ""))
+          case Seq() => Right((AggKind.CountStar, ""))
+          case Seq(one) => Right((AggKind.Count, plainSql(one)))
           case _ => Left(s"multi-argument COUNT in $ctx")
         }
       case AggregateExpression(Count(es), _, true, None, _) =>
@@ -717,48 +906,35 @@ object GraftMaterializedView {
               return Left(s"nondeterministic COUNT(DISTINCT) in $ctx")
             if (!minMaxable(one.dataType))
               return Left(s"COUNT(DISTINCT) over an unorderable type in $ctx")
-            Right(("cdistinct", plainSql(one)))
+            Right((AggKind.CountDistinct, plainSql(one)))
           case _ => Left(s"multi-argument COUNT(DISTINCT) in $ctx")
         }
       case AggregateExpression(Average(e, _), _, true, None, _) =>
         // AVG(DISTINCT x) = SUM(DISTINCT)/COUNT(DISTINCT), both from the
-        // shared pair table; the running sum is a double — exactly
-        // Spark's non-decimal distinct Average accumulator. Decimal
-        // keeps an exact decimal pair-value sum and divides at merge
-        // with Average's own exact division — every (p,s) maintains
-        // (see the AVG case below).
+        // shared pair table, exact like AVG below
         if (!e.deterministic) return Left(s"nondeterministic AVG(DISTINCT) in $ctx")
         e.dataType match {
-          case _: DecimalType => Right(("dadistinct", plainSql(e)))
-          case _: NumericType => Right(("adistinct", plainSql(e)))
+          case _: DecimalType => Right((AggKind.DecimalAvgDistinct, plainSql(e)))
+          case _: NumericType => Right((AggKind.AvgDistinct, plainSql(e)))
           case _ => Left(s"non-numeric AVG(DISTINCT) in $ctx")
         }
       case AggregateExpression(Average(e, _), _, false, None, _) =>
         if (!e.deterministic) return Left(s"nondeterministic AVG in $ctx")
         e.dataType match {
-          case _: DecimalType =>
-            // decimal AVG decomposes exactly at EVERY (p,s) since
-            // round 16: the running sum is kept exact at the stored
-            // sum type via DecimalAddNoOverflowCheck (the Column `+`
-            // would re-round at precision 38) and the merge divides
-            // with the IDENTICAL DecimalDivideWithOverflowCheck
-            // expression Spark's Average evaluates — quotient rounded
-            // once at the avg output scale. The former (24,*)/( *,2)
-            // gate existed because the Column `/` replay was coarser
-            // than AVG outside it.
-            Right(("davg", plainSql(e)))
-          case _: NumericType => Right(("avg", plainSql(e)))
+          // decimal AVG is exact at EVERY (p,s): see AggKind.DecimalAveraging
+          case _: DecimalType => Right((AggKind.DecimalAvg, plainSql(e)))
+          case _: NumericType => Right((AggKind.Avg, plainSql(e)))
           case _ => Left(s"non-numeric AVG in $ctx")
         }
       case AggregateExpression(Min(e), _, _, None, _) =>
         // DISTINCT is a no-op on an extreme — same maintained kind
         if (!e.deterministic) return Left(s"nondeterministic MIN in $ctx")
         if (!minMaxable(e.dataType)) return Left(s"unorderable MIN type in $ctx")
-        Right(("min", plainSql(e)))
+        Right((AggKind.Min, plainSql(e)))
       case AggregateExpression(Max(e), _, _, None, _) =>
         if (!e.deterministic) return Left(s"nondeterministic MAX in $ctx")
         if (!minMaxable(e.dataType)) return Left(s"unorderable MAX type in $ctx")
-        Right(("max", plainSql(e)))
+        Right((AggKind.Max, plainSql(e)))
       case _ => Left(s"unsupported aggregate in $ctx")
     }
   }
@@ -1111,8 +1287,8 @@ object GraftMaterializedView {
                 // COUNT(*) is already stored exactly as the _mv_rows
                 // bookkeeping column — read it instead of minting a
                 // duplicate hidden aggregate
-                case Right(("count_star", _))
-                    if !aggs.exists(a => a.kind == "count_star") =>
+                case Right((AggKind.CountStar, _))
+                    if !aggs.exists(a => a.kind == AggKind.CountStar) =>
                   AttributeReference(RowsCol,
                     org.apache.spark.sql.types.LongType)()
                 case Right((kind, sql)) =>
@@ -1789,50 +1965,16 @@ object GraftMaterializedView {
     Some((innerSql, outerSql))
   }
 
-  /** The grouped materialization frame (public + bookkeeping columns)
-    * over `base`, per the stored shape. The AVG public column is
-    * `avg(CAST(e AS DOUBLE))` — identical to Spark's non-decimal
-    * Average, whose accumulator IS a double sum — so the stored value
-    * and the incremental quotient `_mv_as / _mv_nn` agree exactly.
+  /** The grouped materialization frame over `base`, per the stored
+    * shape: the public columns, then each aggregate's hidden
+    * bookkeeping, then `_mv_rows`.
     */
   private def grouped(base: DataFrame, shape: Shape): DataFrame = {
     val groupCols = shape.groups.map { case (n, s) => expr(s).as(n) }
-    val aggCols = shape.aggs.map {
-      case AggSpec(n, "sum", s) => sum(expr(s)).as(n)
-      case AggSpec(n, "count", s) => count(expr(s)).as(n)
-      case AggSpec(n, "count_star", _) => count(lit(1)).as(n)
-      case AggSpec(n, "avg", s) => avg(expr(s).cast(DoubleType)).as(n)
-      case AggSpec(n, "davg", s) => avg(expr(s)).as(n)
-      case AggSpec(n, "min", s) => min(expr(s)).as(n)
-      case AggSpec(n, "max", s) => max(expr(s)).as(n)
-      case AggSpec(n, "cdistinct", s) => count_distinct(expr(s)).as(n)
-      case AggSpec(n, "sdistinct", s) => sum_distinct(expr(s)).as(n)
-      case AggSpec(n, "adistinct", s) =>
-        // distinct over the ORIGINAL type (matching the pair table),
-        // accumulated as a double sum — Spark's own distinct Average
-        expr(s"avg(DISTINCT ($s))").cast(DoubleType).as(n)
-      case AggSpec(n, "dadistinct", s) =>
-        expr(s"avg(DISTINCT ($s))").as(n) // native decimal avg output
-      case AggSpec(n, k, _) => sys.error(s"bad agg kind $k for $n")
-    } ++
-      shape.aggs.zipWithIndex.flatMap {
-        case (AggSpec(_, "sum", s), i) => Seq(count(expr(s)).as(nnCol(i)))
-        case (AggSpec(_, "sdistinct", s), i) =>
-          Seq(count_distinct(expr(s)).as(nnCol(i))) // alive-pair count
-        case (AggSpec(_, "adistinct", s), i) => Seq(
-          sum_distinct(expr(s).cast(DoubleType)).as(asCol(i)),
-          count_distinct(expr(s)).as(nnCol(i)))
-        case (AggSpec(_, "dadistinct", s), i) => Seq(
-          sum_distinct(expr(s)).as(asCol(i)), // exact decimal pair-value sum
-          count_distinct(expr(s)).as(nnCol(i)))
-        case (AggSpec(_, "avg", s), i) => Seq(
-          sum(expr(s).cast(DoubleType)).as(asCol(i)),
-          count(expr(s)).as(nnCol(i)))
-        case (AggSpec(_, "davg", s), i) => Seq(
-          sum(expr(s)).as(asCol(i)), // exact decimal running sum
-          count(expr(s)).as(nnCol(i)))
-        case _ => Nil
-      } :+ count(lit(1)).as(RowsCol)
+    val indexed = shape.aggs.zipWithIndex
+    val aggCols = indexed.map { case (a, _) => a.kind.public(a).as(a.name) } ++
+      indexed.flatMap { case (a, i) => a.kind.hidden(a, i).map { case (n, c) => c.as(n) } } :+
+      count(lit(1)).as(RowsCol)
     aggregateBy(base, shape, groupCols, aggCols)
   }
 
@@ -1920,50 +2062,16 @@ object GraftMaterializedView {
   private def dlPairs(base: DataFrame, shape: Shape, valueSql: String): DataFrame =
     dlAggregate(base, shape, valueSql, count(lit(1)).as(RowsCol))
 
-  /** Signed per-group delta of a changelog slice. Additive aggregates
-    * carry signed sums; MIN/MAX carry the inserted-side and
-    * deleted-side extremes separately (the merge decides closed-form
-    * vs recompute from them); cdistinct carries NOTHING here — its
-    * delta is derived from the aux table's changelog after the pair
-    * apply (see refresh), then folded in under the agg's column name.
+  /** Signed per-group delta of a changelog slice, per [[AggKind.delta]].
+    * A DISTINCT aggregate carries NOTHING here: its delta is derived
+    * from the aux table's changelog after the pair apply (see refresh),
+    * then folded in under its plain form's column names.
     */
   private def delta(changes: DataFrame, shape: Shape): DataFrame = {
     val signed = signedSlice(changes, shape)
     val groupCols = shape.groups.map { case (n, s) => expr(s).as(n) }
-    val aggCols = shape.aggs.zipWithIndex.flatMap { case (a, i) =>
-      def nnDelta = sum(when(expr(a.sql).isNotNull, col("_sign")).otherwise(lit(0L)))
-      a.kind match {
-        case "sum" => Seq(
-          // sign via negate, not multiply: DECIMAL(p,s) * BIGINT goes
-          // through the precision-loss adjust (precision p+21), which
-          // at p+s+21 > 38 rounds every signed value to scale
-          // 38-(p+11) BEFORE the sum — -e keeps the input's exact (p,s)
-          sum(when(col("_sign") === 1L, expr(a.sql))
-            .otherwise(negate(expr(a.sql)))).as(a.name),
-          nnDelta.as(nnCol(i)))
-        case "count" => Seq(nnDelta.as(a.name))
-        case "count_star" => Seq(sum(col("_sign")).as(a.name))
-        case "avg" => Seq(
-          sum(expr(a.sql).cast(DoubleType) * col("_sign")).as(asCol(i)),
-          nnDelta.as(nnCol(i)))
-        case "davg" => Seq(
-          // sign via negate, not multiply: -e keeps the input's exact
-          // (p,s), so the summed delta lands in the SAME bounded(p+10,s)
-          // type the stored running sum uses
-          sum(when(col("_sign") === 1L, expr(a.sql))
-            .otherwise(negate(expr(a.sql)))).as(asCol(i)),
-          nnDelta.as(nnCol(i)))
-        case "min" => Seq(
-          min(when(col("_sign") === 1L, expr(a.sql))).as(insCol(i)),
-          min(when(col("_sign") === -1L, expr(a.sql))).as(retCol(i)))
-        case "max" => Seq(
-          max(when(col("_sign") === 1L, expr(a.sql))).as(insCol(i)),
-          max(when(col("_sign") === -1L, expr(a.sql))).as(retCol(i)))
-        case "cdistinct" | "sdistinct" | "adistinct" | "dadistinct" =>
-          Nil // folded in from the aux changelog later
-        case k => sys.error(s"bad agg kind $k for ${a.name}")
-      }
-    } :+ sum(col("_sign")).as(RowsCol)
+    val aggCols = shape.aggs.zipWithIndex.flatMap { case (a, i) => a.kind.delta(a, i) } :+
+      sum(col("_sign")).as(RowsCol)
     val d0 = aggregateBy(signed, shape, groupCols, aggCols)
     if (shape.groups.isEmpty)
       d0.where(col(RowsCol).isNotNull) // all-filtered slice = no delta
@@ -1979,8 +2087,12 @@ object GraftMaterializedView {
   private def shapeFromProps(props: Map[String, String]): Shape = Shape(
     Option(props.getOrElse(FilterProp, "")).filter(_.nonEmpty),
     specFromJson(props(GroupProp)).map { case Seq(n, s) => n -> s },
-    specFromJson(props(AggProp)).map { case Seq(n, k, s) => AggSpec(n, k, s) },
+    aggsFromJson(props(AggProp)),
     props.get(GroupSetsProp).map(specFromJson(_).map(_.map(_.toInt))))
+
+  /** The stored [[AggProp]] list; an unknown kind fails here. */
+  private def aggsFromJson(s: String): Seq[AggSpec] =
+    specFromJson(s).map { case Seq(n, k, sql) => AggSpec(n, AggKind(k, n), sql) }
 
   /** Broadcast for checkpointed changelog-bounded frames (slices,
     * touched-key sets, recomputed groups) whose row count `n` is already
@@ -2003,12 +2115,23 @@ object GraftMaterializedView {
   private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
     val obs = org.apache.spark.sql.Observation()
     val ck = df.observe(obs, count(lit(1)).as("_n")).localCheckpoint()
-    (ck, obs.get("_n") match {
-      case n: Long => n
-      case n: java.lang.Number => n.longValue
-      case _ => Long.MaxValue // metric shape surprise: never broadcast blind
-    })
+    (ck, observedCount(obs, ObservationWait)(ck.count()))
   }
+
+  /** How long a refresh waits for an observed count before counting. */
+  private val ObservationWait = scala.concurrent.duration.Duration(30, "s")
+
+  /** The single metric of `obs`, awaited at most `bound`; `fallback`
+    * when it does not arrive in time or its job failed.
+    */
+  private[graft] def observedCount(obs: org.apache.spark.sql.Observation,
+                                   bound: scala.concurrent.duration.FiniteDuration)
+                                  (fallback: => Long): Long =
+    scala.util.Try(scala.concurrent.Await.result(obs.future, bound)).fold(_ => fallback,
+      _.get(0) match {
+        case n: java.lang.Number => n.longValue
+        case _ => Long.MaxValue // metric shape surprise: never broadcast blind
+      })
 
   /** Per-column [lo, hi] range conjuncts over `keyFrame`'s group
     * columns, for narrowing a scan to rows that can belong to an
@@ -2410,47 +2533,56 @@ object GraftMaterializedView {
     }
     val rel = relOf(src)
     val cur = src.currentOrFail().version
+    /** The maintained arms' source: the fact at `cur` and each further
+      * UNION ALL leg at its current version, each read through its
+      * per-leg WHERE/SELECT and unioned, then joined to each dimension
+      * at its current version; with the dims, pins and union-leg
+      * properties that record those reads.
+      */
+    def pinnedSource(dims: Seq[DimSpec],
+                     unionLegs: Seq[(GraftTable, Option[String], Option[Seq[String]])],
+                     factLegFilter: Option[String],
+                     factLegProj: Option[Seq[String]]): (DataFrame, Map[String, String]) = {
+      val dimInfo = dims.map { d =>
+        val v = d.table.currentOrFail().version
+        (relOf(d.table), v, d.table.scanAsOfVersion(v), d.joinType, d.condSql)
+      }
+      val legInfo = unionLegs.map { case (t, lf, pj) =>
+        (relOf(t), t.currentOrFail().version, t, lf, pj)
+      }
+      def legRead(df: DataFrame, lf: Option[String], pj: Option[Seq[String]]): DataFrame = {
+        val filtered = lf.fold(df)(x => df.where(expr(x)))
+        pj.fold(filtered)(p => filtered.selectExpr(p: _*))
+      }
+      val unionScan = legInfo.foldLeft(
+          legRead(src.scanAsOfVersion(cur), factLegFilter, factLegProj)) {
+        case (acc, (_, v, t, lf, pj)) => acc.unionByName(legRead(t.scanAsOfVersion(v), lf, pj))
+      }
+      val props =
+        (if (dims.isEmpty) Map.empty[String, String]
+         else Map(
+           DimsProp -> specJson(dimInfo.map(i => Seq(i._1, i._4, i._5))),
+           DimVersProp -> specJson(dimInfo.map(i => Seq(i._1, i._2.toString))))) ++
+          (if (legInfo.isEmpty) Map.empty[String, String]
+           else Map(UFactsProp -> specJson(legInfo.map(i => Seq(i._1, i._2.toString)))) ++
+             (if (factLegFilter.isEmpty && legInfo.forall(_._4.isEmpty))
+                Map.empty[String, String]
+              else Map(UFilterProp -> specJson(
+                Seq(Seq(rel, factLegFilter.getOrElse(""))) ++
+                  legInfo.map(i => Seq(i._1, i._4.getOrElse("")))))) ++
+             (if (factLegProj.isEmpty && legInfo.forall(_._5.isEmpty))
+                Map.empty[String, String]
+              else Map(UProjProp -> specJson(
+                (Seq(rel) ++ factLegProj.getOrElse(Nil)) +:
+                  legInfo.map(i => Seq(i._1) ++ i._5.getOrElse(Nil))))))
+      (joinBase(unionScan, dimInfo.map(i => (i._3, i._4, i._5))), props)
+    }
     val (mode, frame, shapeProps) = shaped match {
       case Right(js) =>
-        val dimInfo = js.dims.map { d =>
-          val v = d.table.currentOrFail().version
-          (relOf(d.table), v, d.table.scanAsOfVersion(v), d.joinType, d.condSql)
-        }
-        // union legs beyond the first, each pinned at its read version
-        val legInfo = js.unionLegs.map { case (t, f, pj) =>
-          (relOf(t), t.currentOrFail().version, t, f, pj)
-        }
-        def legRead(df: DataFrame, f: Option[String],
-                    pj: Option[Seq[String]]): DataFrame = {
-          val filtered = f.fold(df)(x => df.where(expr(x)))
-          pj.fold(filtered)(p => filtered.selectExpr(p: _*))
-        }
-        val unionScan = legInfo.foldLeft(
-            legRead(src.scanAsOfVersion(cur), js.factLegFilter, js.factLegProj)) {
-          case (acc, (_, v, t, f, pj)) =>
-            acc.unionByName(legRead(t.scanAsOfVersion(v), f, pj))
-        }
-        val base0 = joinBase(unionScan, dimInfo.map(i => (i._3, i._4, i._5)))
+        val (base0, pinProps) =
+          pinnedSource(js.dims, js.unionLegs, js.factLegFilter, js.factLegProj)
         val based = js.shape.filter.fold(base0)(base0.where)
         val f = grouped(based, js.shape)
-        val dimProps =
-          (if (js.dims.isEmpty) Map.empty[String, String]
-           else Map(
-             DimsProp -> specJson(dimInfo.map(i => Seq(i._1, i._4, i._5))),
-             DimVersProp -> specJson(dimInfo.map(i => Seq(i._1, i._2.toString))))) ++
-            (if (legInfo.isEmpty) Map.empty[String, String]
-             else Map(UFactsProp -> specJson(legInfo.map(i =>
-               Seq(i._1, i._2.toString)))) ++
-               (if (js.factLegFilter.isEmpty && legInfo.forall(_._4.isEmpty))
-                  Map.empty[String, String]
-                else Map(UFilterProp -> specJson(
-                  Seq(Seq(rel, js.factLegFilter.getOrElse(""))) ++
-                    legInfo.map(i => Seq(i._1, i._4.getOrElse("")))))) ++
-               (if (js.factLegProj.isEmpty && legInfo.forall(_._5.isEmpty))
-                  Map.empty[String, String]
-                else Map(UProjProp -> specJson(
-                  (Seq(rel) ++ js.factLegProj.getOrElse(Nil)) +:
-                    legInfo.map(i => Seq(i._1) ++ i._5.getOrElse(Nil))))))
         // dedup-level aux tables lead the main append so their versions
         // ride in its props — create() failing in between leaves no
         // registered MV, only unclaimed storage a re-create rejects
@@ -2472,58 +2604,24 @@ object GraftMaterializedView {
         ("incremental", f, Map(
           FilterProp -> js.shape.filter.getOrElse(""),
           GroupProp -> specJson(js.shape.groups.map(p => Seq(p._1, p._2))),
-          AggProp -> specJson(js.shape.aggs.map(a => Seq(a.name, a.kind, a.sql)))) ++
+          AggProp -> specJson(js.shape.aggs.map(a => Seq(a.name, a.kind.id, a.sql)))) ++
           js.shape.sets.map(ss =>
             GroupSetsProp -> specJson(ss.map(_.map(_.toString)))).toMap ++
-          dimProps ++ dlProps)
+          pinProps ++ dlProps)
       case Left(_) => windowShaped match {
         case Right(ws) =>
           // rank-per-group top-N: storage holds the post-rank-filter
           // replay (top-N per group) plus the _mv_rn merge key; dims
           // (rank-over-join) pin AS OF the versions read here; union
           // legs (sharded windows) pin per leg like agg mode
-          val dimInfo = ws.dims.map { d =>
-            val v = d.table.currentOrFail().version
-            (relOf(d.table), v, d.table.scanAsOfVersion(v), d.joinType, d.condSql)
-          }
-          val legInfo = ws.unionLegs.map { case (t, lf, pj) =>
-            (relOf(t), t.currentOrFail().version, t, lf, pj)
-          }
-          def legRead(df: DataFrame, lf: Option[String],
-                      pj: Option[Seq[String]]): DataFrame = {
-            val filtered = lf.fold(df)(x => df.where(expr(x)))
-            pj.fold(filtered)(p => filtered.selectExpr(p: _*))
-          }
-          val factScan = legRead(src.scanAsOfVersion(cur),
-            ws.factLegFilter, ws.factLegProj)
-          val unionScan = legInfo.foldLeft(factScan) {
-            case (acc, (_, v, t, lf, pj)) =>
-              acc.unionByName(legRead(t.scanAsOfVersion(v), lf, pj))
-          }
-          val base = joinBase(unionScan, dimInfo.map(i => (i._3, i._4, i._5)))
+          val (base, pinProps) =
+            pinnedSource(ws.dims, ws.unionLegs, ws.factLegFilter, ws.factLegProj)
           val f = windowReplay(base, ws.filter, ws.proj, ws.rankFilter)
           ("window", f, Map(
             FilterProp -> ws.filter.getOrElse(""),
             WinPartProp -> specJson(ws.partCols.map(p => Seq(p._1, p._2))),
             WinProjProp -> specJson(ws.proj.map(p => Seq(p._1, p._2))),
-            WinFilterProp -> ws.rankFilter.getOrElse("")) ++
-            (if (ws.dims.isEmpty) Map.empty[String, String]
-             else Map(
-               DimsProp -> specJson(dimInfo.map(i => Seq(i._1, i._4, i._5))),
-               DimVersProp -> specJson(dimInfo.map(i => Seq(i._1, i._2.toString))))) ++
-            (if (legInfo.isEmpty) Map.empty[String, String]
-             else Map(UFactsProp -> specJson(legInfo.map(i =>
-               Seq(i._1, i._2.toString)))) ++
-               (if (ws.factLegFilter.isEmpty && legInfo.forall(_._4.isEmpty))
-                  Map.empty[String, String]
-                else Map(UFilterProp -> specJson(
-                  Seq(Seq(rel, ws.factLegFilter.getOrElse(""))) ++
-                    legInfo.map(i => Seq(i._1, i._4.getOrElse("")))))) ++
-               (if (ws.factLegProj.isEmpty && legInfo.forall(_._5.isEmpty))
-                  Map.empty[String, String]
-                else Map(UProjProp -> specJson(
-                  (Seq(rel) ++ ws.factLegProj.getOrElse(Nil)) +:
-                    legInfo.map(i => Seq(i._1) ++ i._5.getOrElse(Nil)))))))
+            WinFilterProp -> ws.rankFilter.getOrElse("")) ++ pinProps)
         case Left(_) =>
           val f = spark.sql(sql)
           // the public view filters the _mv_ bookkeeping namespace out of
@@ -3216,40 +3314,10 @@ object GraftMaterializedView {
     // signed value sum is NULL only on DECIMAL(38) overflow) are
     // flagged BEFORE the coalesce-to-zero masks them; the flags ride
     // into the merged frame and feed the overflow abort below.
+    val storedType = storage.schema.fields.map(f => f.name -> f.dataType).toMap
     val dlOvfFlags = scala.collection.mutable.ListBuffer.empty[String]
     val dFull = dlg.foldLeft(d) { case (acc, (ci, _, users)) =>
-      // (fold column name, zero when the aux didn't move, fold expr,
-      //  overflow indicator: the fold's sign-count column when the
-      //  value sum is decimal and must be NULL-checked)
-      def signedV = when(col("_mv_s") === 1L, col(DlVCol))
-        .otherwise(negate(col(DlVCol)))
-      val folds: Seq[(String, Column, Column, Option[String])] =
-        users.flatMap { case (a, i) =>
-          def signSum = sum(col("_mv_s"))
-          a.kind match {
-            case "cdistinct" => Seq((a.name, lit(0L), signSum, None))
-            case "sdistinct" =>
-              // sign via negate, not multiply: -v keeps the value's
-              // exact type, so the summed fold lands in the SAME
-              // sum type the stored column uses (decimal included)
-              val sumT = storage.schema.fields.find(_.name == a.name).get.dataType
-              val guard = Option(nnCol(i))
-                .filter(_ => sumT.isInstanceOf[DecimalType])
-              Seq(
-                (a.name, lit(0).cast(sumT), sum(signedV).cast(sumT), guard),
-                (nnCol(i), lit(0L), signSum, None))
-            case "adistinct" => Seq(
-              (asCol(i), lit(0d), sum(signedV.cast(DoubleType)), None),
-              (nnCol(i), lit(0L), signSum, None))
-            case "dadistinct" =>
-              val sumT = storage.schema.fields.find(_.name == asCol(i)).get.dataType
-              Seq(
-                (asCol(i), lit(0).cast(sumT), sum(signedV).cast(sumT),
-                  Some(nnCol(i))),
-                (nnCol(i), lit(0L), signSum, None))
-            case k => sys.error(s"bad distinct agg kind $k for ${a.name}")
-          }
-        }
+      val folds = users.flatMap { case (a, i) => a.kind.fold(a, i, storedType) }
       val fromV = props.getOrElse(dlVerProp(ci), sys.error(
         s"materialized view $ns.$name: missing ${dlVerProp(ci)} marker")).toInt
       val nowV = dlVerNow(ci)
@@ -3300,136 +3368,29 @@ object GraftMaterializedView {
     }
     // null-safe merge join: a NULL group key addresses the stored
     // NULL-keyed row exactly like any other key
-    def dcol(n: String) = col(s"d.`$n`")
-    def ccol(n: String) = col(s"c.`$n`")
     val joined = dFull.alias("d").join(cur.alias("c"),
-      mergeKeys.map(n => dcol(n) <=> ccol(n)).reduce(_ && _), "left")
-    val curExists = ccol(RowsCol).isNotNull
-    val newRows = (coalesce(ccol(RowsCol), lit(0L)) + dcol(RowsCol)).as(RowsCol)
-    val minMaxAggs = shape.aggs.zipWithIndex.filter(
-      a => a._1.kind == "min" || a._1.kind == "max")
-    // closed-form MIN/MAX candidate: the stored extreme folded with the
-    // inserted-side extreme (least/greatest skip NULLs). Exact whenever
-    // no deleted value ties-or-beats it — the recompute flag below.
-    def closedForm(a: AggSpec, i: Int): Column =
-      if (a.kind == "min")
-        when(curExists, least(ccol(a.name), dcol(insCol(i)))).otherwise(dcol(insCol(i)))
-      else
-        when(curExists, greatest(ccol(a.name), dcol(insCol(i)))).otherwise(dcol(insCol(i)))
-    val valueCols: Seq[Column] = shape.aggs.zipWithIndex.map { case (a, i) =>
-      a.kind match {
-        case "sum" | "sdistinct" =>
-          // sdistinct rides the additive algebra verbatim: its "value"
-          // delta is the pair-fold's signed value sum and its nn is the
-          // alive-pair count, so sum-over-distinct merges like SUM
-          val t = storage.schema.fields.find(_.name == a.name).get.dataType
-          val nn = coalesce(ccol(nnCol(i)), lit(0L)) + coalesce(dcol(nnCol(i)), lit(0L))
-          val added = t match {
-            // exact at the stored type: the Column `+` re-rounds at
-            // precision 38 (see exactDecimalAdd)
-            case d: DecimalType => exactDecimalAdd(
-              coalesce(ccol(a.name), lit(0).cast(d)),
-              coalesce(dcol(a.name), lit(0).cast(d)), d)
-            case _ => coalesce(ccol(a.name), lit(0).cast(t)) +
-              coalesce(dcol(a.name), lit(0).cast(t))
-          }
-          when(nn === 0L, lit(null).cast(t)).otherwise(added).as(a.name)
-        case "avg" | "adistinct" =>
-          val as = coalesce(ccol(asCol(i)), lit(0d)) + coalesce(dcol(asCol(i)), lit(0d))
-          val nn = coalesce(ccol(nnCol(i)), lit(0L)) + coalesce(dcol(nnCol(i)), lit(0L))
-          when(nn === 0L, lit(null).cast(DoubleType)).otherwise(as / nn).as(a.name)
-        case "davg" | "dadistinct" =>
-          val outT = storage.schema.fields.find(_.name == a.name).get
-            .dataType.asInstanceOf[DecimalType]
-          val sumT = storage.schema.fields.find(_.name == asCol(i)).get
-            .dataType.asInstanceOf[DecimalType]
-          // exact running-sum add at the stored sum type, then the
-          // IDENTICAL division Spark's decimal Average evaluates —
-          // quotient rounded once at the avg output scale — so the
-          // maintained value replays a recompute bit-for-bit at every
-          // decimal (p,s), wide types included
-          val as = exactDecimalAdd(
-            coalesce(ccol(asCol(i)), lit(0).cast(sumT)),
-            coalesce(dcol(asCol(i)), lit(0).cast(sumT)), sumT)
-          val nn = coalesce(ccol(nnCol(i)), lit(0L)) + coalesce(dcol(nnCol(i)), lit(0L))
-          when(nn === 0L, lit(null).cast(outT))
-            .otherwise(avgDivide(as, nn, outT)).as(a.name)
-        case "min" | "max" => closedForm(a, i).as(a.name)
-        case _ =>
-          (coalesce(ccol(a.name), lit(0L)) + coalesce(dcol(a.name), lit(0L))).as(a.name)
-      }
+      mergeKeys.map(n => deltaCol(n) <=> curCol(n)).reduce(_ && _), "left")
+    val newRows = (coalesce(curCol(RowsCol), lit(0L)) + deltaCol(RowsCol)).as(RowsCol)
+    val indexed = shape.aggs.zipWithIndex
+    val extremes = indexed.flatMap { case (a, i) => a.kind.extreme.map(x => (a, i, x)) }
+    val valueCols = indexed.map { case (a, i) => a.kind.merged(a, i, storedType).as(a.name) }
+    val hiddenCols = indexed.flatMap { case (a, i) =>
+      a.kind.hidden(a, i).map { case (n, _) => mergeAdd(n, storedType).as(n) }
     }
-    val hiddenCols: Seq[Column] = shape.aggs.zipWithIndex.flatMap { case (a, i) =>
-      a.kind match {
-        case "sum" | "sdistinct" => Seq(
-          (coalesce(ccol(nnCol(i)), lit(0L)) + coalesce(dcol(nnCol(i)), lit(0L))).as(nnCol(i)))
-        case "avg" | "adistinct" => Seq(
-          (coalesce(ccol(asCol(i)), lit(0d)) + coalesce(dcol(asCol(i)), lit(0d))).as(asCol(i)),
-          (coalesce(ccol(nnCol(i)), lit(0L)) + coalesce(dcol(nnCol(i)), lit(0L))).as(nnCol(i)))
-        case "davg" | "dadistinct" =>
-          val sumT = storage.schema.fields.find(_.name == asCol(i)).get
-            .dataType.asInstanceOf[DecimalType]
-          Seq(
-            exactDecimalAdd(coalesce(ccol(asCol(i)), lit(0).cast(sumT)),
-              coalesce(dcol(asCol(i)), lit(0).cast(sumT)), sumT).as(asCol(i)),
-            (coalesce(ccol(nnCol(i)), lit(0L)) + coalesce(dcol(nnCol(i)), lit(0L))).as(nnCol(i)))
-        case _ => Nil
-      }
-    }
-    // a delete can retract the extreme: flag groups whose deleted-side
-    // extreme ties-or-beats the CLOSED-FORM candidate for targeted
-    // recompute. Comparing against the candidate (not just the stored
-    // value) also catches a group born within this slice whose in-slice
-    // insert was deleted again, and a candidate that is NULL while a
-    // non-null value was deleted (unknowable → recompute).
-    val rcCols: Seq[Column] = minMaxAggs.map { case (a, i) =>
-      val cf = closedForm(a, i)
-      (dcol(retCol(i)).isNotNull &&
-        (cf.isNull ||
-          (if (a.kind == "min") dcol(retCol(i)) <= cf
-           else dcol(retCol(i)) >= cf))).as(rcCol(i))
-    }
+    // a delete can retract the extreme: flag the group for targeted recompute
+    val rcCols = extremes.map { case (a, i, x) => x.retracted(a, i).as(rcCol(i)) }
     val rcAny: Column =
       (if (rcCols.isEmpty) lit(false)
-       else minMaxAggs.map { case (_, i) => col(s"`${rcCol(i)}`") }.reduce(_ || _))
-    val groupSel = mergeKeys.map(n => dcol(n).as(n))
-    // A decimal running sum cannot represent overflow: Spark's
-    // non-ANSI decimal `+` returns NULL past DECIMAL(38), and a NULL
-    // stored sum would be silently resurrected as 0 by the next
-    // merge's coalesce — a confidently wrong value forever. Flag a
-    // stored sum that is NULL while its stored non-null count is
-    // positive (corrupt storage, or a full refresh that persisted the
-    // SQL overflow answer) so the abort below fires BEFORE this merge
-    // folds the lost sum into 0.
+       else extremes.map { case (_, i, _) => col(s"`${rcCol(i)}`") }.reduce(_ || _))
+    val groupSel = mergeKeys.map(n => deltaCol(n).as(n))
+    // overflow seen before this merge folds a lost sum into 0
     val ovfStored: Column = {
-      val conds = shape.aggs.zipWithIndex.flatMap { case (a, i) =>
-        a.kind match {
-          case "sum" =>
-            // ... and a DELTA sum that is NULL while its slice counted
-            // non-null inputs overflowed inside the delta aggregation
-            // itself — the merge's coalesce would fold the lost slice
-            // in as 0 with the stored/fresh checks blind to it
-            Seq(curExists && coalesce(ccol(nnCol(i)), lit(0L)) > 0L &&
-              ccol(a.name).isNull,
-              dcol(a.name).isNull && dcol(nnCol(i)) =!= 0L)
-          case "davg" =>
-            Seq(curExists && coalesce(ccol(nnCol(i)), lit(0L)) > 0L &&
-              ccol(asCol(i)).isNull,
-              dcol(asCol(i)).isNull && dcol(nnCol(i)) =!= 0L)
-          case "sdistinct" =>
-            Seq(curExists && coalesce(ccol(nnCol(i)), lit(0L)) > 0L &&
-              ccol(a.name).isNull)
-          case "dadistinct" =>
-            Seq(curExists && coalesce(ccol(nnCol(i)), lit(0L)) > 0L &&
-              ccol(asCol(i)).isNull)
-          case _ => Nil
-        }
-      }
+      val conds = indexed.flatMap { case (a, i) => a.kind.overflowed(a, i) }
       (if (conds.isEmpty) lit(false) else conds.reduce(_ || _)).as(OvfStored)
     }
     // the fold-overflow flags computed in phase B ride along so the
     // abort below can see them post-checkpoint
-    val dlOvfCols = dlOvfFlags.toSeq.map(n => dcol(n).as(n))
+    val dlOvfCols = dlOvfFlags.toSeq.map(n => deltaCol(n).as(n))
     val merged0 = joined
       .select(groupSel ++ valueCols ++ hiddenCols ++ rcCols ++ dlOvfCols
         :+ newRows :+ ovfStored: _*)
@@ -3441,20 +3402,12 @@ object GraftMaterializedView {
           "negative — the changelog and the applied-version marker disagree " +
           "(manual table surgery?). Refusing to write; run refresh_mview with " +
           "force_full => true to rebuild")
-    // ... and a merge whose FRESH sum came out NULL with contributing
-    // non-null rows overflowed right here (the coalesces make every
-    // legitimate folded sum non-null). Either way the true aggregate
-    // exceeds DECIMAL(38) capacity and no incremental answer exists.
+    // overflow on the merge's sides, in a pair fold, or in the merge
+    // itself: the true aggregate exceeds DECIMAL(38) capacity and no
+    // incremental answer exists
     locally {
-      val fresh = shape.aggs.zipWithIndex.flatMap { case (a, i) =>
-        a.kind match {
-          case "sum" | "sdistinct" =>
-            Seq(col(s"`${nnCol(i)}`") > 0L && col(s"`${a.name}`").isNull)
-          case "davg" | "dadistinct" =>
-            Seq(col(s"`${nnCol(i)}`") > 0L && col(s"`${asCol(i)}`").isNull)
-          case _ => Nil
-        }
-      } ++ dlOvfFlags.toSeq.map(n => col(s"`$n`"))
+      val fresh = indexed.flatMap { case (a, i) => a.kind.overflowedMerge(a, i) } ++
+        dlOvfFlags.toSeq.map(n => col(s"`$n`"))
       val anyOvf = (col(s"`$OvfStored`") +: fresh).reduce(_ || _)
       if (fresh.nonEmpty && !merged.where(anyOvf).isEmpty)
         throw new ArithmeticException(
@@ -3479,7 +3432,7 @@ object GraftMaterializedView {
       val needs =
         if (isGlobal) merged.where(col(RcAny))
         else merged.where(col(RcAny) && col(RowsCol) > 0)
-      if (minMaxAggs.isEmpty || needs.isEmpty) merged
+      if (extremes.isEmpty || needs.isEmpty) merged
       else {
         val keyRows = needs.select(mergeKeys.map(n => col(s"`$n`")): _*)
           .localCheckpoint()
@@ -3512,10 +3465,7 @@ object GraftMaterializedView {
             // set, so aggregate the narrowed source through the SAME
             // sets (grouping id appended, matching the stored _mv_gid)
             // and keep only the affected key tuples
-            val recAggs = minMaxAggs.map { case (a, i) =>
-              if (a.kind == "min") min(expr(a.sql)).as(s"_mv_rec_$i")
-              else max(expr(a.sql)).as(s"_mv_rec_$i")
-            }
+            val recAggs = extremes.map { case (a, i, x) => x.pick(expr(a.sql)).as(s"_mv_rec_$i") }
             val recAll = aggregateBy(srcNarrow, shape,
               shape.groups.map { case (n, s) => expr(s).as(n) }, recAggs)
             val rec = recAll.join(keyRenamed,
@@ -3523,17 +3473,16 @@ object GraftMaterializedView {
               "left_semi")
             // aggregateBy's sets output order: groups, recs, _mv_gid
             rec.toDF(shape.groups.map(p => "_mvk_" + p._1) ++
-              minMaxAggs.map { case (_, i) => s"_mv_rec_$i" } :+
+              extremes.map { case (_, i, _) => s"_mv_rec_$i" } :+
               ("_mvk_" + GidCol): _*)
           case None =>
             val srcProj0 = srcNarrow.select(
               shape.groups.map { case (n, s) => expr(s).as(n) } ++
-                minMaxAggs.map { case (a, i) => expr(a.sql).as(s"_mv_v_$i") }: _*)
+                extremes.map { case (a, i, _) => expr(a.sql).as(s"_mv_v_$i") }: _*)
             val srcProj =
               if (isGlobal) srcProj0.withColumn(GlobalKeyCol, lit(0)) else srcProj0
-            val recAggs = minMaxAggs.map { case (a, i) =>
-              if (a.kind == "min") min(col(s"`_mv_v_$i`")).as(s"_mv_rec_$i")
-              else max(col(s"`_mv_v_$i`")).as(s"_mv_rec_$i")
+            val recAggs = extremes.map { case (_, i, x) =>
+              x.pick(col(s"`_mv_v_$i`")).as(s"_mv_rec_$i")
             }
             val rec = srcProj.join(keyRenamed,
                 mergeKeys.map(n => col(s"`$n`") <=> col(s"`_mvk_$n`")).reduce(_ && _),
@@ -3542,15 +3491,15 @@ object GraftMaterializedView {
               .agg(recAggs.head, recAggs.tail: _*)
             rec.toDF(
               mergeKeys.map("_mvk_" + _) ++
-                minMaxAggs.map { case (_, i) => s"_mv_rec_$i" }: _*)
+                extremes.map { case (_, i, _) => s"_mv_rec_$i" }: _*)
         }
         val recJ = bcIfSmallN(recRenamed, nRecKeys)
         val withRec = merged.join(recJ,
           mergeKeys.map(n => col(s"`$n`") <=> col(s"`_mvk_$n`")).reduce(_ && _),
           "left")
         val outCols = merged.columns.map { c =>
-          minMaxAggs.find { case (a, _) => a.name == c } match {
-            case Some((a, i)) =>
+          extremes.find { case (a, _, _) => a.name == c } match {
+            case Some((_, i, _)) =>
               when(col(s"`${rcCol(i)}`"), col(s"`_mv_rec_$i`"))
                 .otherwise(col(s"`$c`")).as(c)
             case None => col(s"`$c`")
@@ -4019,10 +3968,7 @@ object GraftMaterializedView {
       else scala.util.Try(cat.load(storageIdent).currentOrFail().properties)
         .getOrElse(Map.empty)
     val auxIdents: Seq[TableIdent] = scala.util.Try {
-      val aggs = specFromJson(storedProps.getOrElse(AggProp, "[]")).collect {
-        case Seq(n, k, s) => AggSpec(n, k, s)
-      }
-      dlGroups(aggs).map { case (ci, _, _) =>
+      dlGroups(aggsFromJson(storedProps.getOrElse(AggProp, "[]"))).map { case (ci, _, _) =>
         TableIdent(ns, name + StorageSuffix + dlSuffix(ci))
       }
     }.getOrElse(Nil)

@@ -675,6 +675,80 @@ class ConnectorSpec extends AnyFunSuite with Matchers {
     spark.sql("CALL graft.system.drop_mview('mv7', 'm')")
   }
 
+  test("materialized views: the storage layout of every aggregate kind is stable") {
+    // Existing MVs keep refreshing only while create, full rebuild and
+    // refresh agree with what is already on disk: the storage columns
+    // (public, then hidden per aggregate, then _mv_rows), their types,
+    // the recorded kind strings and the pair tables' columns.
+    import graft.table.{GraftCatalog, TableIdent}
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.mvlay")
+    spark.sql("CREATE TABLE graft.mvlay.src (g STRING, v BIGINT, d DECIMAL(12,2))")
+    spark.sql("INSERT INTO graft.mvlay.src VALUES ('a', 1, 1.50), ('a', 3, NULL), ('b', 2, 2.25)")
+    spark.sql(
+      """CALL graft.system.create_mview('mvlay', 'm',
+        |'SELECT g, SUM(v) AS s, COUNT(v) AS c, COUNT(*) AS n, AVG(v) AS a,
+        |  AVG(d) AS da, MIN(v) AS lo, MAX(v) AS hi, COUNT(DISTINCT v) AS cd,
+        |  SUM(DISTINCT v) AS sd, AVG(DISTINCT v) AS ad, AVG(DISTINCT d) AS dad
+        | FROM graft.mvlay.src GROUP BY g')""".stripMargin)
+      .head.getString(0) shouldBe "incremental"
+    val cat = GraftCatalog(spark, spark.conf.get("spark.sql.catalog.graft.warehouse"))
+    def layout(t: String): Seq[String] =
+      cat.load(TableIdent("mvlay", t)).schema.fields.map(f => s"${f.name} ${f.dataType.simpleString}").toSeq
+    val storageLayout = Seq(
+      "g string", "s bigint", "c bigint", "n bigint", "a double", "da decimal(16,6)",
+      "lo bigint", "hi bigint", "cd bigint", "sd bigint", "ad double", "dad decimal(16,6)",
+      "_mv_nn_0 bigint", "_mv_as_3 double", "_mv_nn_3 bigint",
+      "_mv_as_4 decimal(22,2)", "_mv_nn_4 bigint", "_mv_nn_8 bigint",
+      "_mv_as_9 double", "_mv_nn_9 bigint", "_mv_as_10 decimal(22,2)", "_mv_nn_10 bigint",
+      "_mv_rows bigint")
+    val aggsProp =
+      """[["s","sum","v"],["c","count","v"],["n","count_star",""],["a","avg","v"],""" +
+        """["da","davg","d"],["lo","min","v"],["hi","max","v"],["cd","cdistinct","v"],""" +
+        """["sd","sdistinct","v"],["ad","adistinct","v"],["dad","dadistinct","d"]]"""
+    def check(): Unit = {
+      layout("m__rows") shouldBe storageLayout
+      cat.load(TableIdent("mvlay", "m__rows")).currentOrFail()
+        .properties("graft.mview.aggs") shouldBe aggsProp
+      // one pair table per distinct expression, at its first user's index
+      layout("m__rows__dl7") shouldBe Seq("g string", "_mv_dlv bigint", "_mv_rows bigint")
+      layout("m__rows__dl10") shouldBe Seq("g string", "_mv_dlv decimal(12,2)", "_mv_rows bigint")
+    }
+    check()
+    // an incremental refresh and a full rebuild rewrite the same layout
+    spark.sql("INSERT INTO graft.mvlay.src VALUES ('a', 5, 4.00), ('c', NULL, NULL)")
+    spark.sql("DELETE FROM graft.mvlay.src WHERE v = 2")
+    spark.sql("CALL graft.system.refresh_mview('mvlay', 'm', false)")
+      .head.getString(2) shouldBe "incremental"
+    check()
+    def rows(sql: String) = spark.sql(sql).collect().map(_.toSeq.mkString("|")).toSeq
+    val cols = "g, s, c, n, a, da, lo, hi, cd, sd, ad, dad"
+    val inline = rows(
+      s"""SELECT g, SUM(v), COUNT(v), COUNT(*), AVG(v), AVG(d), MIN(v), MAX(v),
+         | COUNT(DISTINCT v), SUM(DISTINCT v), AVG(DISTINCT v), AVG(DISTINCT d)
+         | FROM graft.mvlay.src GROUP BY g ORDER BY g""".stripMargin)
+    rows(s"SELECT $cols FROM graft.mvlay.m ORDER BY g") shouldBe inline
+    spark.sql("CALL graft.system.refresh_mview('mvlay', 'm', true)")
+      .head.getString(2) shouldBe "full"
+    check()
+    rows(s"SELECT $cols FROM graft.mvlay.m ORDER BY g") shouldBe inline
+    spark.sql("CALL graft.system.drop_mview('mvlay', 'm')")
+    spark.sql("DROP TABLE graft.mvlay.src")
+  }
+
+  test("materialized views: the observed-count wait is bounded and falls back to a count") {
+    import graft.connector.GraftMaterializedView.observedCount
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions.{count, lit}
+    import scala.concurrent.duration._
+    // an Observation that no Dataset carries never completes
+    val t0 = System.nanoTime()
+    observedCount(Observation(), 200.millis)(-7L) shouldBe -7L
+    (System.nanoTime() - t0) / 1e9 should be < 10.0
+    val obs = Observation()
+    spark.range(5).observe(obs, count(lit(1)).as("_n")).collect()
+    observedCount(obs, 1.minute)(-7L) shouldBe 5L
+  }
+
   test("the MV's public view refuses direct DDL that would desync the pair") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.mv8")
     spark.sql("CREATE TABLE graft.mv8.src (id BIGINT, g STRING, v DOUBLE)")

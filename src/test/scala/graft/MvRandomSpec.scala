@@ -1252,5 +1252,57 @@ class MvRandomSpec extends AnyFunSuite with Matchers {
       Seq(("b", 7))
     spark.sql(s"CALL graft.system.drop_mview('$ns', 'm')")
     spark.sql(s"DROP TABLE graft.$ns.t")
+
+    // Every other guarded site, each over DECIMAL(38,0) with
+    // ansi.enabled=false for the whole case: a fresh table and MV per
+    // case, seeded with `seed`, mutated by `change`, then one refresh
+    // must abort naming the overflow. The AVG kinds need the legacy mode
+    // at create too: their DECIMAL(38,4) output cannot hold a 38-digit
+    // value, so the stored average is NULL while the running sum stays
+    // exact. The DISTINCT cases use two distinct one-digit values of
+    // that magnitude: the pair fold signs carried-over pairs by
+    // negation, and Spark negates a decimal at 34 significant digits,
+    // so a 38-nines pair fails in that negation before any guard runs.
+    val (d6, d7) = ("6" + "0" * 37, "7" + "0" * 37)
+    def overflows(t: String, agg: String, seed: String, change: String,
+                  fullFirst: Boolean = false): Unit = withClue(s"$t: ") {
+      def refresh(force: Boolean) =
+        spark.sql(s"CALL graft.system.refresh_mview('$ns', '${t}_m', $force)").collect()
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      val e =
+        try {
+          spark.sql(s"CREATE TABLE graft.$ns.$t (g STRING, v DECIMAL(38,0))")
+          spark.sql(s"INSERT INTO graft.$ns.$t VALUES $seed")
+          spark.sql(
+            s"""CALL graft.system.create_mview('$ns', '${t}_m',
+               |  'SELECT g, $agg AS s FROM graft.$ns.$t GROUP BY g')""".stripMargin)
+            .head.getString(0) shouldBe "incremental"
+          spark.sql(s"INSERT INTO graft.$ns.$t VALUES $change")
+          if (fullFirst) {
+            // the full rebuild stores the SQL answer: NULL past DECIMAL(38)
+            refresh(force = true)
+            spark.sql(s"SELECT s FROM graft.$ns.${t}_m WHERE g = 'a'").head.isNullAt(0) shouldBe true
+            spark.sql(s"INSERT INTO graft.$ns.$t VALUES ('a', 1)")
+          }
+          intercept[Exception](refresh(force = false))
+        } finally spark.conf.set("spark.sql.ansi.enabled", prevAnsi)
+      withClue(rootChain(e).mkString(" | ")) {
+        rootChain(e).exists(_.contains("overflowed DECIMAL(38)")) shouldBe true
+      }
+      spark.sql(s"CALL graft.system.drop_mview('$ns', '${t}_m')")
+      spark.sql(s"DROP TABLE graft.$ns.$t")
+    }
+    // merge-time: the stored and delta sums are each exact, their sum is
+    // not. The DISTINCT forms' pair fold also re-sums the group's
+    // carried-over pair, so the fold's own flag can fire first.
+    overflows("avg_merge", "AVG(v)", s"('a', $big)", s"('a', $big)")
+    overflows("sd_merge", "SUM(DISTINCT v)", s"('a', $d6)", s"('a', $d7)")
+    overflows("ad_merge", "AVG(DISTINCT v)", s"('a', $d6)", s"('a', $d7)")
+    // delta-side: two big rows of one slice land in a group new to the view
+    overflows("sum_delta", "SUM(v)", "('a', 1)", s"('b', $big), ('b', $big)")
+    // fold-side: two new distinct big values of one slice, one group
+    overflows("sd_fold", "SUM(DISTINCT v)", "('a', 1)", s"('b', $d6), ('b', $d7)")
+    // stored-side: a full rebuild stored NULL, then an increment touches it
+    overflows("sum_stored", "SUM(v)", s"('a', $big)", s"('a', $big)", fullFirst = true)
   }
 }

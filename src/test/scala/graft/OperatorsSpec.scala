@@ -150,6 +150,11 @@ class OperatorsSpec extends AnyFunSuite with Matchers {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     out.length shouldBe 60
     all(out.map(_._2)) shouldBe 0L
+    // large-star/small-star contracts this chain in 6 rounds; min-label
+    // propagation would need 59. Allowing only ceil(log2 60) + 1 = 7
+    // rounds makes a slower contraction fail here, not just run longer.
+    Dedup.dupClusters(nodes, pairs, maxIters = 7)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted shouldBe out.toSeq.sorted
   }
 
   test("dupClusters star contraction agrees with a sequential union-find reference") {
