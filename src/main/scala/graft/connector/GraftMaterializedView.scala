@@ -2,7 +2,7 @@ package graft.connector
 
 import graft.table.{GraftCatalog, GraftTable, TableIdent}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, CaseWhen, ExprId, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, LogicalPlan, Project, SubqueryAlias}
@@ -2106,79 +2106,89 @@ object GraftMaterializedView {
   private def bcIfSmallN(df: DataFrame, n: Long): DataFrame =
     if (n <= graft.table.GraftTable.MergeBroadcastRowBound) broadcast(df) else df
 
-  /** localCheckpoint + row count in ONE Spark job: the count rides the
-    * materialization itself via `Dataset.observe`, so the subsequent
-    * broadcast decision (bcIfSmallN) costs no extra action — each
-    * df.count() the refresh path saves is a driver round-trip per
-    * frame per refresh (round-19 advice).
+  /** localCheckpoint + aggregates over the same rows in ONE Spark job:
+    * `aggs` ride the materialization itself via `Dataset.observe`, so
+    * the refresh's row counts, emptiness and abort probes and zone-map
+    * bounds over a checkpointed frame cost no action of their own —
+    * each action saved is a driver round-trip (planning, AQE,
+    * scheduling) per frame per refresh. Field i of the returned row is
+    * aggregate i. The observed row is awaited at most
+    * [[ObservationWait]]; past it the same aggregates run over the
+    * checkpoint.
+    */
+  private def checkpointObserved(df: DataFrame, aggs: Seq[Column]): (DataFrame, Row) = {
+    val named = aggs.zipWithIndex.map { case (a, i) => a.as(s"_mv_obs$i") }
+    val obs = org.apache.spark.sql.Observation()
+    val ck = df.observe(obs, named.head, named.tail: _*).localCheckpoint()
+    (ck, observedRow(obs, ObservationWait)(ck.agg(named.head, named.tail: _*).head))
+  }
+
+  /** [[checkpointObserved]] with the row count alone, for the
+    * broadcast decision ([[bcIfSmallN]]).
     */
   private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val ck = df.observe(obs, count(lit(1)).as("_n")).localCheckpoint()
-    (ck, observedCount(obs, ObservationWait)(ck.count()))
+    val (ck, r) = checkpointObserved(df, Seq(count(lit(1))))
+    (ck, r.getLong(0))
   }
 
-  /** How long a refresh waits for an observed count before counting. */
+  /** How long a refresh waits for an observed row before aggregating. */
   private val ObservationWait = scala.concurrent.duration.Duration(30, "s")
 
-  /** The single metric of `obs`, awaited at most `bound`; `fallback`
-    * when it does not arrive in time or its job failed.
+  /** The metrics of `obs`, awaited at most `bound`; `fallback` when
+    * they do not arrive in time or their job failed.
     */
-  private[graft] def observedCount(obs: org.apache.spark.sql.Observation,
-                                   bound: scala.concurrent.duration.FiniteDuration)
-                                  (fallback: => Long): Long =
-    scala.util.Try(scala.concurrent.Await.result(obs.future, bound)).fold(_ => fallback,
-      _.get(0) match {
-        case n: java.lang.Number => n.longValue
-        case _ => Long.MaxValue // metric shape surprise: never broadcast blind
-      })
+  private[graft] def observedRow(obs: org.apache.spark.sql.Observation,
+                                 bound: scala.concurrent.duration.FiniteDuration)
+                                (fallback: => Row): Row =
+    scala.util.Try(scala.concurrent.Await.result(obs.future, bound)).getOrElse(fallback)
 
-  /** Per-column [lo, hi] range conjuncts over `keyFrame`'s group
-    * columns, for narrowing a scan to rows that can belong to an
-    * affected group. A column is skipped (sound: skipping only WIDENS
-    * the scan) when the frame holds a NULL in it — a range never admits
-    * the NULL-keyed group's rows — or when `skip(col)` says so
-    * ([[rangeSql]] skips binary floats whose bound would re-parse as a
-    * decimal literal). Returns (columnName, lo, hi) triples.
+  /** The aggregates [[keyBounds]] decodes: per column of `names`, the
+    * min, max and NULL count over the rows where `among` holds.
     */
-  private def rangeBounds(keyFrame: DataFrame, names: Seq[String],
-                          skip: String => Boolean): Seq[(String, Any, Any)] = {
-    if (names.isEmpty) return Nil // global aggregate: no key columns
-    val aggs = names.flatMap(k => Seq(min(col(s"`$k`")), max(col(s"`$k`")),
-      sum(when(col(s"`$k`").isNull, 1L).otherwise(0L))))
-    val b = keyFrame.agg(aggs.head, aggs.tail: _*).head
-    names.zipWithIndex.flatMap { case (k, i) =>
-      val hasNull = !b.isNullAt(3 * i + 2) && b.getLong(3 * i + 2) > 0
-      if (skip(k) || hasNull || b.isNullAt(3 * i)) None
-      else Some((k, b.get(3 * i), b.get(3 * i + 1)))
+  private def boundAggs(names: Seq[String], among: Column = lit(true)): Seq[Column] =
+    names.flatMap { k =>
+      val c = col(s"`$k`")
+      Seq(min(when(among, c)), max(when(among, c)), count(when(among && c.isNull, 1)))
     }
-  }
+
+  /** Per-column [lo, hi] of `names` from the [[boundAggs]] at field
+    * `from` of `row`, for narrowing a scan to rows that can belong to an
+    * affected group. A column is left out (sound: leaving it out only
+    * WIDENS the scan) when the rows hold a NULL in it — a range never
+    * admits the NULL-keyed group's rows — or no value at all.
+    */
+  private def keyBounds(row: Row, from: Int, names: Seq[String]): Map[String, (Any, Any)] =
+    names.zipWithIndex.flatMap { case (k, i) =>
+      val at = from + 3 * i
+      if (row.isNullAt(at) || row.getLong(at + 2) > 0) None
+      else Some(k -> (row.get(at), row.get(at + 1)))
+    }.toMap
 
   /** Zone-map filter SQL narrowing a scan of `schema` to the rows that
-    * can join a key of `keyFrame`: per (key, column) pair of `keyCols`,
-    * the conjunct `column BETWEEN` the key's [min, max] in `keyFrame`,
-    * rendered through FilterSql's escaping. A pair contributes nothing
-    * when its column is not a bare column of `schema` (an expression
-    * key) or is a binary float — the bound renders through toString and
-    * re-parses as a decimal literal, and 1.1f != 1.1d under the widened
-    * comparison, so the boundary row would silently drop. Skipping only
-    * widens the scan; every caller joins on the exact keys afterwards.
-    * None when no conjunct lands.
+    * can join a key: per (key, column) pair of `keyCols`, the conjunct
+    * `column BETWEEN` the key's [min, max] in `bounds`, rendered through
+    * FilterSql's escaping. A pair contributes nothing when the key has
+    * no bounds, when its column is not a bare column of `schema` (an
+    * expression key) or is a binary float — the bound renders through
+    * toString and re-parses as a decimal literal, and 1.1f != 1.1d under
+    * the widened comparison, so the boundary row would silently drop.
+    * Skipping only widens the scan; every caller joins on the exact keys
+    * afterwards. None when no conjunct lands.
     */
-  private def rangeSql(keyFrame: DataFrame, schema: org.apache.spark.sql.types.StructType,
+  private def rangeSql(bounds: Map[String, (Any, Any)],
+                       schema: org.apache.spark.sql.types.StructType,
                        keyCols: Seq[(String, String)]): Option[String] = {
-    val cols = keyCols.flatMap { case (k, s) =>
+    val sqls = keyCols.flatMap { case (k, s) =>
       val c = s.stripPrefix("`").stripSuffix("`")
-      schema.fields.find(_.name.equalsIgnoreCase(c)).map(f => k -> (c, f.dataType))
-    }
-    val byKey = cols.toMap
-    def binaryFloat(k: String) = byKey(k)._2 == org.apache.spark.sql.types.FloatType ||
-      byKey(k)._2 == org.apache.spark.sql.types.DoubleType
-    val sqls = rangeBounds(keyFrame, cols.map(_._1), binaryFloat).flatMap {
-      case (k, lo, hi) =>
-        FilterSql.toSql(org.apache.spark.sql.sources.And(
-          org.apache.spark.sql.sources.GreaterThanOrEqual(byKey(k)._1, lo),
-          org.apache.spark.sql.sources.LessThanOrEqual(byKey(k)._1, hi)))
+      for {
+        f <- schema.fields.find(_.name.equalsIgnoreCase(c))
+        if f.dataType != org.apache.spark.sql.types.FloatType &&
+          f.dataType != DoubleType
+        (lo, hi) <- bounds.get(k)
+        sql <- FilterSql.toSql(org.apache.spark.sql.sources.And(
+          org.apache.spark.sql.sources.GreaterThanOrEqual(c, lo),
+          org.apache.spark.sql.sources.LessThanOrEqual(c, hi)))
+      } yield sql
     }
     if (sqls.isEmpty) None else Some(sqls.mkString("(", ") AND (", ")"))
   }
@@ -2922,7 +2932,7 @@ object GraftMaterializedView {
     // are the key; the fact version only decides which columns pair up.
     val sliceBoundsCache =
       new java.util.IdentityHashMap[DataFrame,
-        scala.collection.mutable.Map[Seq[String], org.apache.spark.sql.Row]]()
+        scala.collection.mutable.Map[Seq[String], Row]]()
 
     def prunedFactFor(slice: DataFrame, condSql: String,
                       factVersion: Int = to,
@@ -3196,11 +3206,6 @@ object GraftMaterializedView {
     val cas: Map[String, String] = casProps ++ dlg.flatMap { case (ci, _, _) =>
       props.get(dlVerProp(ci)).map(dlVerProp(ci) -> _)
     }
-    // one evaluation: the delta feeds the bounds probe, the merge join,
-    // and both applyNetChanges sides
-    val d = replaying("source or moved-dimension", applied, to) {
-      delta(telescopedChanges(applied, pinnedVer, legPin), shape).localCheckpoint()
-    }
     val groupNames = shape.groups.map(_._1)
     // GLOBAL aggregates merge on the synthetic constant key: the
     // storage table holds exactly ONE row (a global aggregate over an
@@ -3214,6 +3219,18 @@ object GraftMaterializedView {
       if (isGlobal) Seq(GlobalKeyCol)
       else if (shape.sets.isDefined) groupNames :+ GidCol
       else groupNames
+    // the storage scan's zone-map keys: under grouping sets most delta
+    // rows carry NULL keys (rolled-up components contribute no
+    // conjunct), so the grouping id — never NULL — is the one bound that
+    // always lands
+    val boundKeys = if (shape.sets.isDefined) groupNames :+ GidCol else groupNames
+    // one evaluation: the delta feeds the merge join and both
+    // applyNetChanges sides; its row count and key bounds ride the
+    // checkpoint's own job
+    val (d, dStats) = replaying("source or moved-dimension", applied, to) {
+      checkpointObserved(delta(telescopedChanges(applied, pinnedVer, legPin), shape),
+        count(lit(1)) +: boundAggs(boundKeys))
+    }
 
     // PHASE A — dedup-level pair apply, one aux table per distinct
     // expression, BEFORE the main merge. Each aux table carries its OWN
@@ -3247,28 +3264,29 @@ object GraftMaterializedView {
           auxProps.get(DimVersProp).map(DimVersProp -> _) ++
           auxProps.get(UFactsProp).map(UFactsProp -> _)
         val pairKeys = mergeKeys :+ DlVCol
-        val pd = replaying("COUNT(DISTINCT) pair table's source", auxApplied, to) {
+        val (pd, pdStats) = replaying("COUNT(DISTINCT) pair table's source", auxApplied, to) {
           val slice = signedSlice(
             telescopedChanges(auxApplied, auxPin, auxLegPin), shape)
-          dlAggregate(slice, shape, vsql, sum(col("_sign")).as("_mv_net"))
-            .localCheckpoint()
+          checkpointObserved(dlAggregate(slice, shape, vsql, sum(col("_sign")).as("_mv_net")),
+            count(lit(1)) +: boundAggs(pairKeys))
         }
-        if (pd.isEmpty)
+        if (pdStats.getLong(0) == 0L)
           aux.updateProperties(Map(AppliedProp -> to.toString) ++ newPins,
             requireParentProps = auxCas)
         else {
           // zone-pruned keyed read of only the pairs that can be hit —
           // same rectangle trick as the main merge, over group+value
-          val curA = rangeSql(pd, aux.schema, pairKeys.map(k => k -> k))
+          val curA = rangeSql(keyBounds(pdStats, 1, pairKeys), aux.schema,
+              pairKeys.map(k => k -> k))
             .fold(aux.scan())(aux.scanWhere)
           def pc(n: String) = col(s"p.`$n`")
           def cc(n: String) = col(s"c.`$n`")
-          val mergedA = pd.alias("p").join(curA.alias("c"),
+          val (mergedA, aStats) = checkpointObserved(pd.alias("p").join(curA.alias("c"),
               pairKeys.map(n => pc(n) <=> cc(n)).reduce(_ && _), "left")
             .select(pairKeys.map(n => pc(n).as(n)) :+
-              (coalesce(cc(RowsCol), lit(0L)) + pc("_mv_net")).as(RowsCol): _*)
-            .localCheckpoint()
-          if (!mergedA.where(col(RowsCol) < 0).isEmpty)
+              (coalesce(cc(RowsCol), lit(0L)) + pc("_mv_net")).as(RowsCol): _*),
+            Seq(count(when(col(RowsCol) < 0, 1))))
+          if (aStats.getLong(0) > 0L)
             throw new IllegalStateException(
               s"materialized view $ns.$name: a COUNT(DISTINCT) pair count " +
                 "went negative — the changelog and the pair table's applied " +
@@ -3287,7 +3305,7 @@ object GraftMaterializedView {
       ci -> aux.currentOrFail().version
     }.toMap
 
-    if (d.isEmpty) {
+    if (dStats.getLong(0) == 0L) {
       // net-empty slice: advance the marker metadata-only, CAS-guarded —
       // a stale empty-advance racing a real refresh must not REGRESS the
       // marker (replaying the range would double-apply its changes).
@@ -3357,15 +3375,10 @@ object GraftMaterializedView {
     // the rest. At MV scale this keeps refresh reads at O(affected
     // groups), not O(all groups). A skipped column only widens `cur`:
     // the merge left-joins from the delta, so extra current rows are
-    // inert. Under grouping sets most delta rows carry NULL keys
-    // (rolled-up components contribute no conjunct), so the grouping id
-    // — never NULL — is the one bound that always lands.
-    val cur = {
-      val boundKeys =
-        if (shape.sets.isDefined) groupNames :+ GidCol else groupNames
-      rangeSql(d, storage.schema, boundKeys.map(k => k -> k))
-        .fold(storage.scan())(storage.scanWhere)
-    }
+    // inert.
+    val cur = rangeSql(keyBounds(dStats, 1, boundKeys), storage.schema,
+        boundKeys.map(k => k -> k))
+      .fold(storage.scan())(storage.scanWhere)
     // null-safe merge join: a NULL group key addresses the stored
     // NULL-keyed row exactly like any other key
     val joined = dFull.alias("d").join(cur.alias("c"),
@@ -3394,48 +3407,50 @@ object GraftMaterializedView {
     val merged0 = joined
       .select(groupSel ++ valueCols ++ hiddenCols ++ rcCols ++ dlOvfCols
         :+ newRows :+ ovfStored: _*)
-    val merged = merged0.withColumn(RcAny, rcAny).localCheckpoint()
+    // grouped MVs delete the rows==0 group (its extremes are moot); the
+    // GLOBAL row is upserted even at rows==0, so a retracted extreme
+    // must still recompute — over the emptied source the rec row is
+    // absent and the extreme correctly resolves to NULL
+    val needsRec =
+      if (isGlobal) col(RcAny) else col(RcAny) && col(RowsCol) > 0
+    // overflow on the merge's sides, in a pair fold, or in the merge
+    // itself: the true aggregate exceeds DECIMAL(38) capacity and no
+    // incremental answer exists (a view with no such guard never aborts)
+    val fresh = indexed.flatMap { case (a, i) => a.kind.overflowedMerge(a, i) } ++
+      dlOvfFlags.toSeq.map(n => col(s"`$n`"))
+    val anyOvf =
+      if (fresh.isEmpty) lit(false) else (col(s"`$OvfStored`") +: fresh).reduce(_ || _)
+    // one evaluation, and the abort probes, the recompute count and the
+    // recompute keys' bounds ride the checkpoint's own job
+    val (merged, mStats) = checkpointObserved(merged0.withColumn(RcAny, rcAny),
+      Seq(count(when(col(RowsCol) < 0, 1)), count(when(anyOvf, 1)), count(when(needsRec, 1))) ++
+        boundAggs(groupNames, needsRec))
 
-    if (!merged.where(col(RowsCol) < 0).isEmpty)
+    if (mStats.getLong(0) > 0L)
       throw new IllegalStateException(
         s"materialized view $ns.$name: a group's maintained row count went " +
           "negative — the changelog and the applied-version marker disagree " +
           "(manual table surgery?). Refusing to write; run refresh_mview with " +
           "force_full => true to rebuild")
-    // overflow on the merge's sides, in a pair fold, or in the merge
-    // itself: the true aggregate exceeds DECIMAL(38) capacity and no
-    // incremental answer exists
-    locally {
-      val fresh = indexed.flatMap { case (a, i) => a.kind.overflowedMerge(a, i) } ++
-        dlOvfFlags.toSeq.map(n => col(s"`$n`"))
-      val anyOvf = (col(s"`$OvfStored`") +: fresh).reduce(_ || _)
-      if (fresh.nonEmpty && !merged.where(anyOvf).isEmpty)
-        throw new ArithmeticException(
-          s"materialized view $ns.$name: a decimal running sum is NULL with a " +
-            "positive non-null row count — the sum overflowed DECIMAL(38) (or " +
-            "a prior full refresh stored the SQL overflow answer). The " +
-            "aggregate is not incrementally maintainable at this magnitude; " +
-            "refusing to write a silently-resurrected 0. Drop and recreate " +
-            "the view without this SUM/AVG, or keep it on full refresh " +
-            "(force_full => true), where NULL is the true SQL answer")
-    }
+    if (mStats.getLong(1) > 0L)
+      throw new ArithmeticException(
+        s"materialized view $ns.$name: a decimal running sum is NULL with a " +
+          "positive non-null row count — the sum overflowed DECIMAL(38) (or " +
+          "a prior full refresh stored the SQL overflow answer). The " +
+          "aggregate is not incrementally maintainable at this magnitude; " +
+          "refusing to write a silently-resurrected 0. Drop and recreate " +
+          "the view without this SUM/AVG, or keep it on full refresh " +
+          "(force_full => true), where NULL is the true SQL answer")
 
     // targeted MIN/MAX recompute: only groups whose extreme was
     // retracted, read from the source AS OF the refresh head, narrowed
     // to the retracted groups' key range and semi-joined to exactly
     // those keys — O(affected groups), never O(table)
+    val nRecKeys = mStats.getLong(2)
     val resolved: DataFrame = {
-      // grouped MVs delete the rows==0 group (its extremes are moot);
-      // the GLOBAL row is upserted even at rows==0, so a retracted
-      // extreme must still recompute — over the emptied source the
-      // rec row is absent and the extreme correctly resolves to NULL
-      val needs =
-        if (isGlobal) merged.where(col(RcAny))
-        else merged.where(col(RcAny) && col(RowsCol) > 0)
-      if (extremes.isEmpty || needs.isEmpty) merged
+      if (extremes.isEmpty || nRecKeys == 0L) merged
       else {
-        val keyRows = needs.select(mergeKeys.map(n => col(s"`$n`")): _*)
-          .localCheckpoint()
+        val keyRows = merged.where(needsRec).select(mergeKeys.map(n => col(s"`$n`")): _*)
         val srcBase0 = {
           // recompute against the state this refresh WRITES — fact
           // legs at the head, dims at the versions the telescope
@@ -3446,18 +3461,17 @@ object GraftMaterializedView {
         // parquet-pushdown narrowing on the group expressions (Column
         // conjuncts carry exact literals, so no binary-float skip here)
         val groupExpr = shape.groups.toMap
-        val srcNarrow = rangeBounds(keyRows, groupNames, _ => false)
-          .foldLeft(srcBase0) { case (f, (k, lo, hi)) =>
+        val srcNarrow = keyBounds(mStats, 3, groupNames)
+          .foldLeft(srcBase0) { case (f, (k, (lo, hi))) =>
             f.where(expr(groupExpr(k)) >= lit(lo) && expr(groupExpr(k)) <= lit(hi))
           }
-        // the checkpointed key frame (and the rec frame derived from
-        // it — one row per affected key tuple, times the grouping-set
-        // multiplicity) compiles without AQE/stats, so the planner
-        // would sort-merge-join it against the narrowed source scan
-        // and the merged frame. Affected-extreme keys are changelog-
-        // bounded: broadcast below the counted bound (guide §3.1),
-        // keeping the big sides unshuffled at every scale.
-        val nRecKeys = keyRows.count()
+        // the key frame over the checkpoint (and the rec frame derived
+        // from it — one row per affected key tuple, times the
+        // grouping-set multiplicity) compiles without AQE/stats, so the
+        // planner would sort-merge-join it against the narrowed source
+        // scan and the merged frame. Affected-extreme keys are
+        // changelog-bounded: broadcast below the counted bound (guide
+        // §3.1), keeping the big sides unshuffled at every scale.
         val keyRenamed = bcIfSmallN(keyRows.toDF(mergeKeys.map("_mvk_" + _): _*), nRecKeys)
         val recRenamed = shape.sets match {
           case Some(_) =>
@@ -3729,10 +3743,27 @@ object GraftMaterializedView {
         factOrigin ++ extOrigin
       }
     }
-    val touched = (factTerms ++ dimTerms).reduce(_ unionByName _)
-      .distinct().localCheckpoint()
-    val nTouched = touched.count()
     val keyNames = parts.map(_._1)
+    // the partition keys that are bare columns of `schema`
+    def bareKeysOf(schema: org.apache.spark.sql.types.StructType): Seq[String] =
+      parts.filter { case (_, s) =>
+        schema.fields.exists(_.name.equalsIgnoreCase(s.stripPrefix("`").stripSuffix("`")))
+      }.map(_._1)
+    val factKeyNames = bareKeysOf(src.schema)
+    val dimKeyNames = dimTbls.map(d => bareKeysOf(d._2.schema))
+    // touched keys whose components in `names` are all NULL
+    def allNull(names: Seq[String]): Column =
+      if (names.isEmpty) lit(false) else names.map(n => col(s"`$n`").isNull).reduce(_ && _)
+    // one evaluation; the count, the key bounds and the all-NULL probes
+    // of the pruning decisions below ride the checkpoint's own job
+    val (touched, tStats) = checkpointObserved(
+      (factTerms ++ dimTerms).reduce(_ unionByName _).distinct(),
+      (count(lit(1)) +: boundAggs(keyNames)) ++
+        (factKeyNames +: dimKeyNames).map(ns => count(when(allNull(ns), 1))))
+    val nTouched = tStats.getLong(0)
+    val bounds = keyBounds(tStats, 1, keyNames)
+    // no touched key has all of fact (0) or dim j (j + 1) key components NULL
+    def noAllNullKey(i: Int): Boolean = tStats.getLong(1 + 3 * keyNames.size + i) == 0L
     if (nTouched == 0L) {
       // all-filtered slice / no affected groups: advance the marker and
       // pins metadata-only, CAS-guarded
@@ -3767,17 +3798,9 @@ object GraftMaterializedView {
     // fact pruning stays sound; otherwise read the fact whole (the
     // extension rows of the NULL-keyed group need the exact unmatched
     // set).
-    val factPruneOk = fullDim.isEmpty || {
-      val factKeyNames = parts.filter { case (_, s) =>
-        src.schema.fields.exists(
-          _.name.equalsIgnoreCase(s.stripPrefix("`").stripSuffix("`")))
-      }.map(_._1)
-      factKeyNames.nonEmpty &&
-        touched.where(factKeyNames.map(n => col(s"`$n`").isNull)
-          .reduce(_ && _)).isEmpty
-    }
+    val factPruneOk = fullDim.isEmpty || (factKeyNames.nonEmpty && noAllNullKey(0))
     val srcScan = headScan(prune = t =>
-      if (factPruneOk) rangeSql(touched, t.schema, parts) else None)
+      if (factPruneOk) rangeSql(bounds, t.schema, parts) else None)
     // DIM-side zone pruning (round 19): when the partition key lives on
     // a dimension (the dim-keyed rank dashboard), the recompute join
     // used to read the WHOLE dim — at scale a full fact x full dim
@@ -3789,19 +3812,11 @@ object GraftMaterializedView {
     // fact-side NULL extensions, whose dim-derived key components are
     // all NULL — sound unless a touched key has exactly that shape.
     val dimPrunedJoin: Seq[(DataFrame, String, String)] =
-      dimTbls.map { case (r, t, jt, c) =>
-        val dSchema = t.schema
-        val dKeyNames = parts.filter { case (_, s) =>
-          dSchema.fields.exists(
-            _.name.equalsIgnoreCase(s.stripPrefix("`").stripSuffix("`")))
-        }.map(_._1)
-        val sound = dKeyNames.nonEmpty &&
-          (jt == "inner" ||
-            touched.where(dKeyNames.map(n => col(s"`$n`").isNull)
-              .reduce(_ && _)).isEmpty)
+      dimTbls.zipWithIndex.map { case ((r, t, jt, c), j) =>
+        val sound = dimKeyNames(j).nonEmpty && (jt == "inner" || noAllNullKey(j + 1))
         val scan =
           if (!sound) t.scanAsOfVersion(curVers(r))
-          else rangeSql(touched, dSchema, parts) match {
+          else rangeSql(bounds, t.schema, parts) match {
             case Some(p) => t.scanVersionWhere(curVers(r), p)
             case None => t.scanAsOfVersion(curVers(r))
           }
@@ -3812,7 +3827,7 @@ object GraftMaterializedView {
         .reduce(_ && _), "left_semi")
     val (recomputed, nRecomputed) = checkpointCounted(replay(srcTouched))
 
-    val storedScan = rangeSql(touched, storage.schema, keyNames.map(k => k -> k)) match {
+    val storedScan = rangeSql(bounds, storage.schema, keyNames.map(k => k -> k)) match {
       case Some(p) => storage.scanWhere(p)
       case None => storage.scan()
     }

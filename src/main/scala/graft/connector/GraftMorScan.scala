@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LogicalPlan, MergeIntoTable, Project, UpdateTable, V2WriteCommand}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.PLAN_EXPRESSION
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** Makes SQL reads of a graft table with pending MERGE-ON-READ deletes
@@ -50,8 +51,13 @@ case class GraftMorScanRule(spark: SparkSession) extends Rule[LogicalPlan] {
           }
         case _ => rel
       }
+    // a node's expressions are walked only when a subquery sits in
+    // them: mapping them rebuilds every argument — a LocalRelation's
+    // whole data row list — on every analyzer pass
     case other =>
-      other.mapChildren(rewrite).transformExpressionsUp {
+      val mapped = other.mapChildren(rewrite)
+      if (!mapped.containsPattern(PLAN_EXPRESSION)) mapped
+      else mapped.transformExpressionsUpWithPruning(_.containsPattern(PLAN_EXPRESSION)) {
         case se: SubqueryExpression => se.withNewPlan(rewrite(se.plan))
       }
   }

@@ -874,7 +874,7 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
       nullSafeKeys), props, requireParentProps)
   }
 
-  /** A planned keyed write under operation `op`: the checkpointed
+  /** A planned keyed write under operation `op`: the once-evaluated
     * upsert rows, the key frame the rewrite anti-joins (and a
     * merge-on-read commit masks) with and its row count, and the pruned
     * rewrite set. `keys` are the target's column names.
@@ -885,12 +885,12 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
                                 val nullSafe: Boolean, val anyNullKey: Boolean)
 
   /** Plan step of the one keyed write behind [[upsert]], [[deleteByKeys]]
-    * and [[applyNetChanges]]. Both input frames are checkpointed first,
-    * so every later pass (aggregation, anti join, write) sees ONE
-    * evaluation: a nondeterministic caller source (sample, rand filter,
-    * shuffled limit) must not let pruning computed from one evaluation
-    * carry a file whose matches only another evaluation saw, nor leave
-    * a key twice in the table.
+    * and [[applyNetChanges]]. Both input frames are evaluated once
+    * first ([[evaluatedOnce]]), so every later pass (aggregation, anti
+    * join, write) sees the same rows: a nondeterministic caller source
+    * (sample, rand filter, shuffled limit) must not let pruning computed
+    * from one evaluation carry a file whose matches only another
+    * evaluation saw, nor leave a key twice in the table.
     *
     * Then one grouped aggregation over the union of delete keys and
     * upsert keys — the small side, never the target — yields:
@@ -915,12 +915,12 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
                         nullSafe: Boolean): KeyedPlan = {
     val joinKeys = keys.map(k =>
       snap.schema.fields.find(_.name.equalsIgnoreCase(k)).fold(k)(_.name))
-    val dels = deleteKeys.map(src => src.select(keys.map { k =>
+    val dels = deleteKeys.map(src => evaluatedOnce(src.select(keys.map { k =>
       val f = snap.schema.fields.find(_.name.equalsIgnoreCase(k)).getOrElse(
         throw new IllegalArgumentException(s"unknown key column '$k'"))
       col(s"`$k`").cast(f.dataType).as(f.name)
-    }: _*).localCheckpoint())
-    val rows = upserts.map(Projection.project(_, snap.schema).localCheckpoint())
+    }: _*)))
+    val rows = upserts.map(u => evaluatedOnce(Projection.project(u, snap.schema)))
     val keyCols = joinKeys.map(k => col(s"`$k`"))
     val allKeys = (dels.map(_.withColumn("_graft_up", lit(0))).toSeq ++
       rows.map(_.select(keyCols :+ lit(1).as("_graft_up"): _*)).toSeq)
@@ -962,6 +962,21 @@ final class GraftTable(val spark: SparkSession, val tableDir: HPath, val log: Me
       }
     new KeyedPlan(snap, op, joinKeys, rows, allKeys.where(matchable).select(keyCols: _*),
       nKeys, rewriteSet, nullSafe, anyNullKey = nullSafe && joinKeys.indices.exists(hasNull))
+  }
+
+  /** `df` checkpointed — unless it is already a deterministic plan
+    * whose leaves are all materialized checkpoints (filters and
+    * projections of a checkpointed frame): every evaluation of such a
+    * plan yields the same rows, so a second checkpoint would only cost a
+    * job.
+    */
+  private def evaluatedOnce(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.analyzed
+    val overCheckpoints = plan.deterministic && plan.collectLeaves().forall {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.isCheckpointed
+      case _ => false
+    }
+    if (overCheckpoints) df else df.localCheckpoint()
   }
 
   /** Apply step of the keyed write. Past [[chooseMor]] the rows land

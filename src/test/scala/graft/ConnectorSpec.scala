@@ -736,17 +736,111 @@ class ConnectorSpec extends AnyFunSuite with Matchers {
   }
 
   test("materialized views: the observed-count wait is bounded and falls back to a count") {
-    import graft.connector.GraftMaterializedView.observedCount
-    import org.apache.spark.sql.Observation
+    import graft.connector.GraftMaterializedView.observedRow
+    import org.apache.spark.sql.{Observation, Row}
     import org.apache.spark.sql.functions.{count, lit}
     import scala.concurrent.duration._
     // an Observation that no Dataset carries never completes
     val t0 = System.nanoTime()
-    observedCount(Observation(), 200.millis)(-7L) shouldBe -7L
+    observedRow(Observation(), 200.millis)(Row(-7L)) shouldBe Row(-7L)
     (System.nanoTime() - t0) / 1e9 should be < 10.0
     val obs = Observation()
     spark.range(5).observe(obs, count(lit(1)).as("_n")).collect()
-    observedCount(obs, 1.minute)(-7L) shouldBe 5L
+    observedRow(obs, 1.minute)(Row(-7L)).getLong(0) shouldBe 5L
+  }
+
+  test("materialized views: a negative maintained row count aborts and commits nothing") {
+    import graft.table.{GraftCatalog, TableIdent}
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.mvneg")
+    spark.sql("CREATE TABLE graft.mvneg.src (id BIGINT, g STRING, v DOUBLE)")
+    spark.sql("INSERT INTO graft.mvneg.src VALUES (1, 'a', 1.0), (2, 'b', 2.0)")
+    spark.sql(
+      """CALL graft.system.create_mview('mvneg', 'm',
+        |'SELECT g, COUNT(*) AS n, SUM(v) AS t FROM graft.mvneg.src GROUP BY g')""".stripMargin)
+      .head.getString(0) shouldBe "incremental"
+    val cat = GraftCatalog(spark, spark.conf.get("spark.sql.catalog.graft.warehouse"))
+    val storage = cat.load(TableIdent("mvneg", "m__rows"))
+    val createdAt = storage.currentOrFail().properties("graft.mview.applied-version")
+    spark.sql("DELETE FROM graft.mvneg.src WHERE g = 'b'")
+    spark.sql("CALL graft.system.refresh_mview('mvneg', 'm', false)")
+      .head.getString(2) shouldBe "incremental"
+    def view() = spark.sql("SELECT g, n, t FROM graft.mvneg.m ORDER BY g").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+    view() shouldBe Seq(("a", 1L, 1.0))
+    // storage surgery: rewind the marker behind the applied delete, so
+    // the next refresh replays it over a group that is already gone
+    storage.updateProperties(Map("graft.mview.applied-version" -> createdAt))
+    val before = storage.currentOrFail().version
+    val e = intercept[IllegalStateException] {
+      graft.connector.GraftMaterializedView.refresh(spark, cat, "mvneg", "m", forceFull = false)
+    }
+    e.getMessage should include("went negative")
+    e.getMessage should include("force_full")
+    storage.currentOrFail().version shouldBe before
+    storage.currentOrFail().properties("graft.mview.applied-version") shouldBe createdAt
+    view() shouldBe Seq(("a", 1L, 1.0))
+    spark.sql("CALL graft.system.refresh_mview('mvneg', 'm', true)")
+      .head.getString(2) shouldBe "full"
+    view() shouldBe Seq(("a", 1L, 1.0))
+    spark.sql("CALL graft.system.drop_mview('mvneg', 'm')")
+    spark.sql("DROP TABLE graft.mvneg.src")
+  }
+
+  test("materialized views: a light join + GROUP BY refresh folds its probes into fewer Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.mvjobs")
+    spark.sql("CREATE TABLE graft.mvjobs.o (o_orderkey BIGINT, o_priority STRING)")
+    spark.sql("CREATE TABLE graft.mvjobs.l (l_orderkey BIGINT, l_quantity BIGINT, " +
+      "l_price DECIMAL(12,2), l_flag STRING) TBLPROPERTIES ('graft.delete.mode' = 'mor')")
+    spark.sql("INSERT INTO graft.mvjobs.o SELECT id, CONCAT('p', id % 3) FROM range(0, 50)")
+    spark.sql("INSERT INTO graft.mvjobs.l SELECT id % 50, id, CAST(id AS DECIMAL(12,2)), " +
+      "IF(id % 2 = 0, 'A', 'R') FROM range(0, 200)")
+    val q = """SELECT o_priority, l_flag, COUNT(*) AS n, SUM(l_quantity) AS qty,
+              |       SUM(l_price) AS price
+              |FROM graft.mvjobs.l JOIN graft.mvjobs.o ON l_orderkey = o_orderkey
+              |GROUP BY o_priority, l_flag""".stripMargin
+    spark.sql(s"CALL graft.system.create_mview('mvjobs', 'm', '$q')")
+      .head.getString(0) shouldBe "incremental"
+    spark.sql("INSERT INTO graft.mvjobs.l VALUES (1, 5, 1.50, 'A'), (2, 7, 2.25, 'R')")
+
+    // jobs started under the refresh's tag; the sentinel job's start
+    // arrives after every earlier job's on the listener queue
+    val sc = spark.sparkContext
+    val key = "graft.test.op"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.atomic.AtomicBoolean
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)) match {
+          case Some("refresh") => jobs.incrementAndGet()
+          case Some("sentinel") => drained.set(true)
+          case _ =>
+        }
+    }
+    def tagged[T](tag: String)(body: => T): T = {
+      sc.setLocalProperty(key, tag)
+      try body finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      tagged("refresh") {
+        spark.sql("CALL graft.system.refresh_mview('mvjobs', 'm', false)")
+          .head.getString(2) shouldBe "incremental"
+      }
+      tagged("sentinel")(sc.parallelize(Seq(1), 1).count())
+      eventually(timeout(Span(30, Seconds))) { drained.get shouldBe true }
+    } finally sc.removeSparkListener(listener)
+    // the delta and the merged frame carry their row counts, bounds and
+    // abort probes in their checkpoint jobs, and the keyed write reuses
+    // the merged frame's checkpoint: 10 jobs, down from 17
+    jobs.get should be <= 10
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.mkString("|")).sorted.toSeq
+    rows(spark.table("graft.mvjobs.m")) shouldBe rows(spark.sql(q))
+    spark.sql("CALL graft.system.drop_mview('mvjobs', 'm')")
+    spark.sql("DROP TABLE graft.mvjobs.l")
+    spark.sql("DROP TABLE graft.mvjobs.o")
   }
 
   test("the MV's public view refuses direct DDL that would desync the pair") {
@@ -1993,6 +2087,12 @@ class ConnectorSpec extends AnyFunSuite with Matchers {
     spark.sql(
       """SELECT COUNT(*) FROM graft.nsmor.t a
         |JOIN graft.nsmor.t b ON a.id = b.id""".stripMargin)
+      .head.getLong(0) shouldBe 15L
+    spark.sql(
+      """SELECT COUNT(*) FROM VALUES (1L), (3L), (7L), (9L), (18L) AS x(id)
+        |WHERE id IN (SELECT id FROM graft.nsmor.t)""".stripMargin)
+      .head.getLong(0) shouldBe 2L
+    spark.sql("SELECT (SELECT COUNT(*) FROM graft.nsmor.t) AS n")
       .head.getLong(0) shouldBe 15L
     // aggregate pushdown must NOT answer from (overcounting) metadata
     spark.sql("SELECT COUNT(*) FROM graft.nsmor.t").queryExecution

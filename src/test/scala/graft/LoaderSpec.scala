@@ -8,7 +8,7 @@ import graft.loader.{Loader, WriteStrategy}
 import graft.table.{GraftCatalog, TableIdent}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, explode, lit, udf}
+import org.apache.spark.sql.functions.{col, explode, lit, rand, udf}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -237,6 +237,21 @@ class LoaderSpec extends AnyFunSuite with Matchers {
     rows.count() shouldBe 100 // every source key already existed
     res.rowsLoaded shouldBe
       rows.where(col("_load_dttm") === lit(java.sql.Timestamp.from(t1))).count()
+
+    // applyNetChanges over rand()-filtered frames of a checkpoint: the
+    // plan is nondeterministic, so it is still evaluated exactly once —
+    // one pass of the counting filter per source row
+    val base = spark.range(0, 150).select(col("id"), lit("net").as("name")).localCheckpoint()
+    def picked(df: DataFrame) = df.where(NondetKeys.seen(col("id")) && rand() < 0.5)
+    NondetKeys.seenRows.set(0)
+    c.load(id).applyNetChanges(picked(base.where(col("id") < 50)).select("id"),
+      picked(base.where(col("id") >= 50)), Seq("id"))
+    NondetKeys.seenRows.get shouldBe 150
+    val after = c.load(id).scan()
+    after.groupBy("id").count().where(col("count") > 1).count() shouldBe 0
+    // every key of 50..99 was either upserted or kept, never dropped
+    after.where(col("id") >= 50 && col("id") < 100).count() shouldBe 50
+    after.where(col("id") >= 100 && col("name") =!= "net").count() shouldBe 0
   }
 }
 
@@ -250,4 +265,7 @@ object NondetKeys {
     val k = evals.incrementAndGet()
     (0 until k).map(i => ((k * 13 + i * 29) % 100).toLong)
   }.asNondeterministic()
+  /** Counts the rows it is evaluated on; always true. */
+  val seenRows = new java.util.concurrent.atomic.AtomicInteger
+  val seen = udf { (_: Long) => seenRows.incrementAndGet(); true }.asNondeterministic()
 }
