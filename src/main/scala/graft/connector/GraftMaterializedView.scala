@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, DataType, DateType, DecimalType, DoubleType, NumericType, StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{BooleanType, DataType, DateType, DecimalType, DoubleType, FloatType, NumericType, StringType, StructField, TimestampNTZType, TimestampType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -2182,8 +2182,7 @@ object GraftMaterializedView {
       val c = s.stripPrefix("`").stripSuffix("`")
       for {
         f <- schema.fields.find(_.name.equalsIgnoreCase(c))
-        if f.dataType != org.apache.spark.sql.types.FloatType &&
-          f.dataType != DoubleType
+        if f.dataType != FloatType && f.dataType != DoubleType
         (lo, hi) <- bounds.get(k)
         sql <- FilterSql.toSql(org.apache.spark.sql.sources.And(
           org.apache.spark.sql.sources.GreaterThanOrEqual(c, lo),
@@ -2678,7 +2677,7 @@ object GraftMaterializedView {
     val viewSchema = viewColsOpt match {
       case Some(cols) => org.apache.spark.sql.types.StructType(cols.map {
         case (n, None) => frame.schema(n)
-        case (n, Some((_, dt))) => org.apache.spark.sql.types.StructField(n, dt)
+        case (n, Some((_, dt))) => StructField(n, dt)
       })
       case None => org.apache.spark.sql.types.StructType(
         frame.schema.fields.filter(f => publicCols.contains(f.name)))
@@ -2696,6 +2695,13 @@ object GraftMaterializedView {
       schemaMode = "SchemaEvolution"), replace = false)
     (mode, cur, storage.currentOrFail().rowCount)
   }
+
+  /** A checkpointed frame with its row count and, per lower-cased
+    * equi-join column, the [min, max] of its values — None when it
+    * holds no non-NULL value ([[RefreshInputs.boundedSlice]]).
+    */
+  private final case class BoundedSlice(df: DataFrame, n: Long,
+                                        bounds: Map[String, Option[(Any, Any)]])
 
   /** The pinned inputs of one refresh, read once and shared by both
     * refresh arms (aggregate and window).
@@ -2860,6 +2866,251 @@ object GraftMaterializedView {
               "the marker still needs. Rebuild with refresh_mview(..., " +
               "force_full => true)", e)
       }
+
+    /** The FACT side's fields as the shape SQL sees them: the bare
+      * fact's schema, or the union's OUTPUT fields (per-leg projections
+      * rename/retype) — what the FULL algebra NULL-casts when it builds
+      * extension rows.
+      */
+    lazy val factSideFields: Seq[StructField] =
+      if (legTbls.isEmpty) src.schema.fields.toSeq
+      else legWhere(factRel)(src.scanAsOfVersion(to)).schema.fields.toSeq
+
+    /** `df` with `fields` added as typed NULL columns: the missing side
+      * of an outer join's NULL-extension rows.
+      */
+    private def nullExtended(df: DataFrame, fields: Seq[StructField]): DataFrame =
+      fields.foldLeft(df)((f, fld) => f.withColumn(fld.name, lit(null).cast(fld.dataType)))
+
+    /** The lower-cased name pairs of `condSql`'s top-level `a = b`
+      * conjuncts between bare columns; none when it does not parse.
+      */
+    private def eqPairs(condSql: String): Seq[(String, String)] = {
+      import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+      import org.apache.spark.sql.catalyst.expressions.{And => CAnd, EqualTo}
+      def conjuncts(e: Expression): Seq[Expression] = e match {
+        case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
+        case x => Seq(x)
+      }
+      scala.util.Try(cat.spark.sessionState.sqlParser.parseExpression(condSql)).toOption.toSeq
+        .flatMap(conjuncts).collect {
+          case EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute) =>
+            (a.nameParts.last.toLowerCase, b.nameParts.last.toLowerCase)
+        }
+    }
+
+    /** `df` checkpointed with its row count and, per column of it in a
+      * top-level `a = b` conjunct of `condSql` (binary floats left out:
+      * NaN breaks the range/equality agreement), the [min, max] of its
+      * values — all observed in the checkpoint's own job.
+      */
+    def boundedSlice(df: DataFrame, condSql: String): BoundedSlice = {
+      val cols = df.schema.fields.collect {
+        case f if f.dataType != FloatType && f.dataType != DoubleType =>
+          f.name.toLowerCase -> f.name
+      }.toMap
+      val keys = eqPairs(condSql).flatMap { case (a, b) => Seq(a, b) }.distinct
+        .filter(cols.contains)
+      val (ck, r) = checkpointObserved(df, count(lit(1)) +: boundAggs(keys.map(cols)))
+      BoundedSlice(ck, r.getLong(0), keys.zipWithIndex.map { case (k, i) =>
+        val at = 1 + 3 * i
+        k -> (if (r.isNullAt(at)) None else Some((r.get(at), r.get(at + 1))))
+      }.toMap)
+    }
+
+    /** The union'd fact at `factVersion` (legs at `legVers`), zone-pruned
+      * by `slice`'s equi-join key bounds: a fact row outside [min, max]
+      * of the slice's join-key values cannot `condSql`-match any slice
+      * row, so the range conjunct reaches the parquet scan and a dim
+      * term reads O(matching fact files), not the whole fact. On
+      * pass-through leg columns the conjuncts push to each leg's scan
+      * through the Union; non-equi conjuncts and expression-valued sides
+      * skip pruning; all-NULL slice keys can match nothing, emptying the
+      * term.
+      */
+    def prunedFactFor(slice: BoundedSlice, condSql: String, factVersion: Int = to,
+                      legVers: String => Int = legCur): DataFrame = {
+      val full = headScan(factVersion, legVers)
+      val factCols = full.schema.fields.map(f => f.name.toLowerCase -> f.name).toMap
+      eqPairs(condSql).flatMap { case (a, b) =>
+        if (factCols.contains(a) && slice.bounds.contains(b)) Some(factCols(a) -> slice.bounds(b))
+        else if (factCols.contains(b) && slice.bounds.contains(a)) Some(factCols(b) -> slice.bounds(a))
+        else None
+      }.foldLeft(full) {
+        case (f, (_, None)) => f.where(lit(false))
+        case (f, (fc, Some((lo, hi)))) =>
+          f.where(col(s"`$fc`") >= lit(lo) && col(s"`$fc`") <= lit(hi))
+      }
+    }
+
+    /** Telescoped signed changelog of the JOINED shape between the
+      * recorded state (fact at `factFrom`, legs at `legFrom`, dims at
+      * `pins`) and the refresh head (fact at `to`, legs at `legCur`,
+      * dims at `curVers`) — the one definition of "what changed" both
+      * refresh arms read. One term per changed relation, changing them
+      * left to right:
+      *
+      *   ΔF ⋈ D1@old ⋈ … ⋈ Dk@old                      (fact term)
+      *   F@to ⋈ D1@new ⋈ … ⋈ D(i-1)@new ⋈ ΔDi ⋈ D(i+1)@old ⋈ … (dim i)
+      *
+      * Each term holds every other relation fixed, so inner-join
+      * multilinearity makes its signed rows the exact difference of
+      * the two join products: the rows net to J(head) − J(recorded), so
+      * every group whose rows changed holds at least one of them.
+      * `_change_type` flows from the single changed side and
+      * [[signedSlice]] signs it downstream. Cost is O(ΔF ⋈ dims) +
+      * Σ O(F ⋈ ΔDi) — the fact is SCANNED only for moved dims and only
+      * joined against their (small) slices, never recomputed against
+      * whole dimensions.
+      */
+    def telescopedChanges(factFrom: Int, pins: String => Int,
+                          legFrom: String => Int): DataFrame = {
+      // UNION ALL legs are linear: each moved leg's signed slice joins
+      // the pinned dims exactly like the fact's (legs and dims compose —
+      // the union'd fact is the left side of every join)
+      val factSlice = legTbls.foldLeft(sliceOf(factRel, src, factFrom, to)) {
+        case (acc, (r, t)) => acc.unionByName(sliceOf(r, t, legFrom(r), legCur(r)))
+      }
+      val factTerm =
+        if (!dimTbls.exists(_._3 == "full_outer")) pinnedJoin(factSlice, pins)
+        else {
+          // A FULL OUTER dim (single FULL, as the first join — enforced
+          // at analysis). FULL = LEFT ∪ dim-side NULL-extensions, and
+          // LEFT is linear in the FACT side: the signed slice left-joins
+          // the pinned dim, so changed fact rows flow through with their
+          // matches or their own (f, NULLd) extension. The DIM-side
+          // extensions (NULLf, d) flip NON-linearly under the fact move
+          // — exactly the mirror of the moved-LEFT-dim flip algebra:
+          //   d gained its first match (∅→matches between fact@from and
+          //     fact@to): the stored rows held (NULLf, d) — RETRACT;
+          //   d lost its last match: (NULLf, d) now exists — INSERT.
+          // Only dim rows matching a slice row can flip, so `affectedD`
+          // is slice-bounded and the two fact probes — the union'd fact
+          // at the FROM pins (per leg) and at the head — are
+          // zone-pruned by its keys: O(affected ⋈ F-rowgroups), never
+          // O(F ⋈ D).
+          val (r, t, _, c) = dimTbls.head
+          val (slice, nSlice) = checkpointCounted(factSlice)
+          val d0 = t.scanAsOfVersion(pins(r))
+          val linear = slice.join(d0, expr(c), "left_outer")
+          val affectedD =
+            boundedSlice(d0.join(bcIfSmallN(slice, nSlice), expr(c), "left_semi"), c)
+          val f0 = prunedFactFor(affectedD, c, factFrom, legFrom)
+          val f1 = prunedFactFor(affectedD, c, to)
+          val gained = affectedD.df.join(f0, expr(c), "left_anti")
+            .join(f1, expr(c), "left_semi")
+            .withColumn("_change_type", lit("delete"))
+          val lost = affectedD.df.join(f0, expr(c), "left_semi")
+            .join(f1, expr(c), "left_anti")
+            .withColumn("_change_type", lit("insert"))
+          val flips = nullExtended(gained.unionByName(lost), factSideFields)
+          // suffix dims (FULL composes as the FIRST join): the fact term
+          // holds them at OLD pins like any telescope fact term; the
+          // flip rows' NULLed fact columns meet the suffix conditions
+          // exactly as the defining query's NULL-extensions would (no
+          // match under inner, NULL-extend under left)
+          val suffix = dimTbls.tail.map { case (r2, t2, jt2, c2) =>
+            (t2.scanAsOfVersion(pins(r2)), jt2, c2)
+          }
+          joinBase(linear.unionByName(flips), suffix)
+        }
+      val dimTerms = dimTbls.zipWithIndex.collect {
+        case ((r, t, jt, c), i) if curVers(r) != pins(r) =>
+          val before = dimTbls.take(i).map { case (r2, t2, jt2, c2) =>
+            (t2.scanAsOfVersion(curVers(r2)), jt2, c2)
+          }
+          // one evaluation: the slice feeds the pruning bounds AND the
+          // join (changelog scans re-plan per action otherwise); its
+          // count and key bounds ride the checkpoint's own job
+          val slice = boundedSlice(
+            t.scanDataChangesBetween(pins(r), curVers(r)).drop("_commit_version"), c)
+          val sliceJ = bcIfSmallN(slice.df, slice.n)
+          val after = dimTbls.drop(i + 1).map { case (r2, t2, jt2, c2) =>
+            (t2.scanAsOfVersion(pins(r2)), jt2, c2)
+          }
+          val base = {
+            val fullHead = before.nonEmpty && dimTbls.head._3 == "full_outer"
+            if (!fullHead) joinBase(prunedFactFor(slice, c), before)
+            else {
+              // the prefix holds the FULL head join: pruning the fact by
+              // THIS dim's slice bounds would INVENT dim-side extensions
+              // for head-dim rows whose real matches were pruned away.
+              // Split the prefix instead: the fact-preserved side reads
+              // the pruned fact through the FULL downgraded to LEFT
+              // (sound under pruning — it emits exactly the fact rows
+              // read), and the extension side is rebuilt from the head
+              // dim directly — its rows NULL-extended on the fact
+              // columns, threaded through the rest of the prefix,
+              // bounded by this term's slice, and kept only when an
+              // anti probe against the zone-pruned UNPRUNED fact
+              // confirms they are unmatched at the head.
+              val (r1, t1, _, c1) = dimTbls.head
+              val part1 = joinBase(prunedFactFor(slice, c),
+                (before.head._1, "left_outer", before.head._3) +: before.tail)
+              val ext0 = nullExtended(t1.scanAsOfVersion(curVers(r1)), factSideFields)
+              val extCand = joinBase(ext0, before.tail).join(sliceJ, expr(c), "left_semi")
+              // the anti probe runs WITHOUT the NULLed fact columns
+              // (the FULL condition would otherwise be ambiguous
+              // between the probe side's nulls and the fact) and
+              // re-adds them after
+              val probe = boundedSlice(extCand.drop(factSideFields.map(_.name): _*), c1)
+              val extReal = probe.df.join(prunedFactFor(probe, c1), expr(c1), "left_anti")
+              part1.unionByName(nullExtended(extReal, factSideFields))
+            }
+          }
+          val matched = joinBase(base.join(sliceJ, expr(c), "inner"), after)
+          if (jt == "inner") matched
+          else {
+            // A moved LEFT dim: LEFT = matched part ∪ NULL-extension,
+            // and the matched part is the INNER join — linear in the
+            // dim, so the signed slice term above is exact for it. The
+            // NULL-extensions flip NON-linearly, but only on prefix
+            // rows whose match-set crossed zero, and those are exactly
+            // computable with semi/anti joins (multiplicity-preserving,
+            // no per-row match counting):
+            //   gained a first match (∅→matches): the stored rows held
+            //     (p, NULLs) — RETRACT it (sign −1);
+            //   lost the last match (matches→∅): (p, NULLs) now exists
+            //     — INSERT it (sign +1).
+            // Only prefix rows matching a slice row can flip (the dim
+            // changed nowhere else), so `affected` is slice-bounded and
+            // the fact scan under it is zone-pruned by the slice keys;
+            // the two dim probes are semi/anti joins of that small set
+            // against the pinned and current dim. A row matching the
+            // slice with matches on BOTH ends (an update) joins both
+            // probes' keep-sides and lands in neither flip. Suffix dims
+            // at old pins apply to the flip rows like any term — their
+            // conditions see the NULLed columns exactly as the defining
+            // query would.
+            val affected = base.join(sliceJ, expr(c), "left_semi")
+            val dOld = t.scanAsOfVersion(pins(r))
+            val dNew = t.scanAsOfVersion(curVers(r))
+            val gained = affected.join(dOld, expr(c), "left_anti")
+              .join(dNew, expr(c), "left_semi")
+              .withColumn("_change_type", lit("delete"))
+            val lost = affected.join(dOld, expr(c), "left_semi")
+              .join(dNew, expr(c), "left_anti")
+              .withColumn("_change_type", lit("insert"))
+            // (the NULLed columns here are the DIM's own — `affected`
+            // already carries the prefix's fact/union-output columns)
+            val flips = nullExtended(gained.unionByName(lost), t.schema.fields.toSeq)
+            // FULL keeps the dim side too: the signed slice LEFT-joins
+            // the (pruned) fact FROM THE DIM SIDE, so an unmatched
+            // signed dim row carries its own (NULLf, d) extension —
+            // linear in the dim; the fact-side flips above are the
+            // same algebra as LEFT. Suffix dims apply to it at OLD
+            // pins, exactly as they do to the flip rows.
+            val linearTerm =
+              if (jt == "full_outer") joinBase(slice.df.join(base, expr(c), "left_outer"), after)
+              else matched
+            linearTerm.unionByName(joinBase(flips, after))
+          }
+      }
+      // a moved dim's term reads it at a newer schema than the fact
+      // term's pin: only columns the shape does not reference can
+      // differ (the column guards refuse the rest), so they NULL-fill
+      dimTerms.foldLeft(factTerm)(_.unionByName(_, allowMissingColumns = true))
+    }
   }
 
   /** REFRESH: apply the source changelog since the marker (incremental)
@@ -2900,279 +3151,9 @@ object GraftMaterializedView {
     if (applied == to && !dimsMoved && !legsMoved && !forceFull)
       return (applied, to, "noop")
 
-    // rank-per-group window MVs maintain by affected-group recompute —
-    // no signed-delta algebra — in their own arm
+    // rank-per-group window MVs recompute the groups the telescoped
+    // changelog touches, in their own arm
     if (mode == "window") return refreshWindow(in, forceFull)
-
-    /** The FACT side's fields as the shape SQL sees them: the bare
-      * fact's schema, or the union's OUTPUT fields (per-leg projections
-      * rename/retype) — what the FULL algebra NULL-casts when it builds
-      * extension rows.
-      */
-    lazy val factSideFields: Seq[org.apache.spark.sql.types.StructField] =
-      if (legTbls.isEmpty) src.schema.fields.toSeq
-      else legWhere(factRel)(src.scanAsOfVersion(to)).schema.fields.toSeq
-
-    /** Fact scan for a dim term, zone-pruned by the dim slice's
-      * equi-join key bounds: a fact row outside [min, max] of the
-      * slice's join-key values cannot EqualTo-match any slice row, so
-      * the range conjunct reaches the parquet scan (PushedFilters) and
-      * the term reads O(matching fact files), not the whole fact —
-      * the difference between a dim update costing a fact-table scan
-      * and costing a few row groups at 100 TB. Non-equi conjuncts,
-      * expression-valued sides, and binary floats (NaN breaks the
-      * range/equality agreement) just skip pruning; all-NULL slice
-      * keys can match nothing, emptying the term.
-      */
-    // bounds memo per (slice frame identity, bounded slice columns): the
-    // FULL from/to fact probes call prunedFactFor twice with the SAME
-    // checkpointed slice, and the slice bounds agg is an action — one
-    // driver round-trip per repeat saved. The cached row holds the
-    // [min, max] of exactly those slice columns in that order, so they
-    // are the key; the fact version only decides which columns pair up.
-    val sliceBoundsCache =
-      new java.util.IdentityHashMap[DataFrame,
-        scala.collection.mutable.Map[Seq[String], Row]]()
-
-    def prunedFactFor(slice: DataFrame, condSql: String,
-                      factVersion: Int = to,
-                      legVers: String => Int = legCur): DataFrame = {
-      import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-      import org.apache.spark.sql.catalyst.expressions.{And => CAnd, EqualTo}
-      // a union'd fact reads every leg at the requested versions (head
-      // by default; the FULL-outer from-version probes pass the per-leg
-      // FROM pins — round 18); range conjuncts on computed leg
-      // projections stay frame-level, on pass-through columns they push
-      // to each leg's parquet scan through the Union
-      val full = headScan(factVersion, legVers)
-      val factCols = full.schema.fields.map(f => f.name.toLowerCase -> f.name).toMap
-      val sliceT = slice.schema.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
-      val cond =
-        try spark.sessionState.sqlParser.parseExpression(condSql)
-        catch { case _: Exception => return full }
-      def conjuncts(e: Expression): Seq[Expression] = e match {
-        case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-        case x => Seq(x)
-      }
-      val pairs = conjuncts(cond).collect {
-        case EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute) =>
-          (a.nameParts.last.toLowerCase, b.nameParts.last.toLowerCase)
-      }.flatMap { case (a, b) =>
-        if (factCols.contains(a) && sliceT.contains(b)) Some((factCols(a), b))
-        else if (factCols.contains(b) && sliceT.contains(a)) Some((factCols(b), a))
-        else None
-      }.filterNot { case (_, d) =>
-        sliceT(d) == org.apache.spark.sql.types.FloatType ||
-          sliceT(d) == org.apache.spark.sql.types.DoubleType
-      }
-      if (pairs.isEmpty) return full
-      val aggs = pairs.flatMap { case (_, d) =>
-        Seq(min(col(s"`$d`")), max(col(s"`$d`"))) }
-      val b = {
-        var m = sliceBoundsCache.get(slice)
-        if (m == null) {
-          m = scala.collection.mutable.Map.empty
-          sliceBoundsCache.put(slice, m)
-        }
-        m.getOrElseUpdate(pairs.map(_._2), slice.agg(aggs.head, aggs.tail: _*).head)
-      }
-      pairs.zipWithIndex.foldLeft(full) { case (f, ((fc, _), i)) =>
-        if (b.isNullAt(2 * i)) f.where(lit(false))
-        else f.where(col(s"`$fc`") >= lit(b.get(2 * i)) &&
-          col(s"`$fc`") <= lit(b.get(2 * i + 1)))
-      }
-    }
-
-    /** Telescoped signed changelog of the JOINED shape between the
-      * recorded state (fact at `factFrom`, dims at `pins`) and the
-      * refresh head (fact at `to`, dims at `curVers`). One term per
-      * changed relation, changing them left to right:
-      *
-      *   ΔF ⋈ D1@old ⋈ … ⋈ Dk@old                      (fact term)
-      *   F@to ⋈ D1@new ⋈ … ⋈ D(i-1)@new ⋈ ΔDi ⋈ D(i+1)@old ⋈ … (dim i)
-      *
-      * Each term holds every other relation fixed, so inner-join
-      * multilinearity makes its signed rows the exact difference of
-      * the two join products; `_change_type` flows from the single
-      * changed side and [[signedSlice]] signs it downstream. Cost is
-      * O(ΔF ⋈ dims) + Σ O(F ⋈ ΔDi) — the fact is SCANNED only for
-      * moved dims and only joined against their (small) slices, never
-      * recomputed against whole dimensions.
-      */
-    def telescopedChanges(factFrom: Int, pins: String => Int,
-                          legFrom: String => Int): DataFrame = {
-      // UNION ALL legs: linear, so each moved leg simply ADDS its own
-      // signed slice (no cross-terms; legs and dims never coexist)
-      val hasFull = dimTbls.exists(_._3 == "full_outer")
-      val factTerm =
-        if (!hasFull)
-          legTbls.foldLeft(pinnedJoin(sliceOf(factRel, src, factFrom, to), pins)) {
-            case (acc, (r, t)) =>
-              acc.unionByName(pinnedJoin(sliceOf(r, t, legFrom(r), legCur(r)), pins))
-          }
-        else {
-          // A FULL OUTER dim (single join — enforced at analysis).
-          // FULL = LEFT ∪ dim-side NULL-extensions, and LEFT is linear
-          // in the FACT side: the signed slice left-joins the pinned
-          // dim, so changed fact rows flow through with their matches
-          // or their own (f, NULLd) extension. A union'd fact (round
-          // 18) stays linear leg by leg — the slice is every moved
-          // leg's slice unioned through its own WHERE/SELECT. The
-          // DIM-side extensions (NULLf, d) flip NON-linearly under the
-          // fact move — exactly the mirror of the moved-LEFT-dim flip
-          // algebra:
-          //   d gained its first match (∅→matches between fact@from and
-          //     fact@to): the stored rows held (NULLf, d) — RETRACT;
-          //   d lost its last match: (NULLf, d) now exists — INSERT.
-          // Only dim rows matching a slice row can flip, so `affectedD`
-          // is slice-bounded and the two fact probes — the union'd fact
-          // at the FROM pins (per leg) and at the head — are
-          // zone-pruned by its keys: O(affected ⋈ F-rowgroups), never
-          // O(F ⋈ D).
-          val (r, t, _, c) = dimTbls.head
-          val (slice, nSlice) = checkpointCounted(
-            legTbls.foldLeft(sliceOf(factRel, src, factFrom, to)) {
-              case (acc, (lr, lt)) =>
-                acc.unionByName(sliceOf(lr, lt, legFrom(lr), legCur(lr)))
-            })
-          val d0 = t.scanAsOfVersion(pins(r))
-          val linear = slice.join(d0, expr(c), "left_outer")
-          val affectedD = d0.join(bcIfSmallN(slice, nSlice), expr(c), "left_semi")
-            .localCheckpoint()
-          val f0 = prunedFactFor(affectedD, c, factFrom, legFrom)
-          val f1 = prunedFactFor(affectedD, c, to)
-          val gained = affectedD.join(f0, expr(c), "left_anti")
-            .join(f1, expr(c), "left_semi")
-            .withColumn("_change_type", lit("delete"))
-          val lost = affectedD.join(f0, expr(c), "left_semi")
-            .join(f1, expr(c), "left_anti")
-            .withColumn("_change_type", lit("insert"))
-          val flips0 = gained.unionByName(lost)
-          val flips = factSideFields.foldLeft(flips0) { (f, fld) =>
-            f.withColumn(fld.name, lit(null).cast(fld.dataType))
-          }
-          // suffix dims (round 17 — FULL composes as the FIRST join):
-          // the fact term holds them at OLD pins like any telescope
-          // fact term; the flip rows' NULLed fact columns meet the
-          // suffix conditions exactly as the defining query's
-          // NULL-extensions would (no match under inner, NULL-extend
-          // under left)
-          val suffix = dimTbls.tail.map { case (r2, t2, jt2, c2) =>
-            (t2.scanAsOfVersion(pins(r2)), jt2, c2)
-          }
-          joinBase(linear.unionByName(flips), suffix)
-        }
-      val dimTerms = dimTbls.zipWithIndex.collect {
-        case ((r, t, jt, c), i) if curVers(r) != pins(r) =>
-          val before = dimTbls.take(i).map { case (r2, t2, jt2, c2) =>
-            (t2.scanAsOfVersion(curVers(r2)), jt2, c2)
-          }
-          // one evaluation: the slice feeds the pruning bounds AND the
-          // join (changelog scans re-plan per action otherwise)
-          val (slice, nSlice) = checkpointCounted(
-            t.scanDataChangesBetween(pins(r), curVers(r))
-              .drop("_commit_version"))
-          val sliceJ = bcIfSmallN(slice, nSlice)
-          val after = dimTbls.drop(i + 1).map { case (r2, t2, jt2, c2) =>
-            (t2.scanAsOfVersion(pins(r2)), jt2, c2)
-          }
-          val base = {
-            val fullHead = before.nonEmpty && dimTbls.head._3 == "full_outer"
-            if (!fullHead) joinBase(prunedFactFor(slice, c), before)
-            else {
-              // the prefix holds the FULL head join (round 17): pruning
-              // the fact by THIS dim's slice bounds would INVENT
-              // dim-side extensions for head-dim rows whose real
-              // matches were pruned away. Split the prefix instead:
-              // the fact-preserved side reads the pruned fact through
-              // the FULL downgraded to LEFT (sound under pruning — it
-              // emits exactly the fact rows read), and the extension
-              // side is rebuilt from the head dim directly — its rows
-              // NULL-extended on the fact columns, threaded through
-              // the rest of the prefix, bounded by this term's slice,
-              // and kept only when an anti probe against the
-              // zone-pruned UNPRUNED fact confirms they are unmatched
-              // at the head.
-              val (r1, t1, _, c1) = dimTbls.head
-              val part1 = joinBase(prunedFactFor(slice, c),
-                (before.head._1, "left_outer", before.head._3) +: before.tail)
-              val d1New = t1.scanAsOfVersion(curVers(r1))
-              val ext0 = factSideFields.foldLeft(d1New) { (f, fld) =>
-                f.withColumn(fld.name, lit(null).cast(fld.dataType))
-              }
-              val extB = joinBase(ext0, before.tail)
-              val extCand = extB.join(sliceJ, expr(c), "left_semi")
-              // the anti probe runs WITHOUT the NULLed fact columns
-              // (the FULL condition would otherwise be ambiguous
-              // between the probe side's nulls and the fact) and
-              // re-adds them after
-              val factNames = factSideFields.map(_.name)
-              val probe = extCand.drop(factNames: _*)
-              val extReal0 = probe.join(prunedFactFor(probe, c1),
-                expr(c1), "left_anti")
-              val extReal = factSideFields.foldLeft(extReal0) { (f, fld) =>
-                f.withColumn(fld.name, lit(null).cast(fld.dataType))
-              }
-              part1.unionByName(extReal)
-            }
-          }
-          val matched = joinBase(base.join(sliceJ, expr(c), "inner"), after)
-          if (jt == "inner") matched
-          else {
-            // A moved LEFT dim: LEFT = matched part ∪ NULL-extension,
-            // and the matched part is the INNER join — linear in the
-            // dim, so the signed slice term above is exact for it. The
-            // NULL-extensions flip NON-linearly, but only on prefix
-            // rows whose match-set crossed zero, and those are exactly
-            // computable with semi/anti joins (multiplicity-preserving,
-            // no per-row match counting):
-            //   gained a first match (∅→matches): the stored rows held
-            //     (p, NULLs) — RETRACT it (sign −1);
-            //   lost the last match (matches→∅): (p, NULLs) now exists
-            //     — INSERT it (sign +1).
-            // Only prefix rows matching a slice row can flip (the dim
-            // changed nowhere else), so `affected` is slice-bounded and
-            // the fact scan under it is zone-pruned by the slice keys;
-            // the two dim probes are semi/anti joins of that small set
-            // against the pinned and current dim. A row matching the
-            // slice with matches on BOTH ends (an update) joins both
-            // probes' keep-sides and lands in neither flip. Suffix dims
-            // at old pins apply to the flip rows like any term — their
-            // conditions see the NULLed columns exactly as the defining
-            // query would.
-            val affected = base.join(sliceJ, expr(c), "left_semi")
-            val dOld = t.scanAsOfVersion(pins(r))
-            val dNew = t.scanAsOfVersion(curVers(r))
-            val gained = affected.join(dOld, expr(c), "left_anti")
-              .join(dNew, expr(c), "left_semi")
-              .withColumn("_change_type", lit("delete"))
-            val lost = affected.join(dOld, expr(c), "left_semi")
-              .join(dNew, expr(c), "left_anti")
-              .withColumn("_change_type", lit("insert"))
-            val flips0 = gained.unionByName(lost)
-            val flips = t.schema.fields.foldLeft(flips0) { (f, fld) =>
-              f.withColumn(fld.name, lit(null).cast(fld.dataType))
-            }
-            // (the NULLed columns here are the DIM's own — `affected`
-            // already carries the prefix's fact/union-output columns)
-            // FULL keeps the dim side too: the signed slice LEFT-joins
-            // the (pruned) fact FROM THE DIM SIDE, so an unmatched
-            // signed dim row carries its own (NULLf, d) extension —
-            // linear in the dim; the fact-side flips above are the
-            // same algebra as LEFT (before/after are empty: FULL is
-            // single-join by analysis)
-            val linearTerm =
-              if (jt == "full_outer")
-                // dim-side linear part of the FULL head; suffix dims
-                // (round 17) apply to it at OLD pins, exactly as they
-                // do to the flip rows
-                joinBase(slice.join(base, expr(c), "left_outer"), after)
-              else matched
-            linearTerm.unionByName(joinBase(flips, after))
-          }
-      }
-      dimTerms.foldLeft(factTerm)(_ unionByName _)
-    }
 
     if (mode == "full" || forceFull || mustRepin) {
       var dlProps = Map.empty[String, String]
@@ -3567,32 +3548,6 @@ object GraftMaterializedView {
     def replay(base: DataFrame): DataFrame =
       windowReplay(base, innerFilter, proj, rankFilter)
 
-    // FULL dim (round 18): analysis admits exactly one FULL, as the
-    // FIRST join (round 19: suffix inner/left dims now compose after
-    // it), no union legs
-    val fullDim: Option[(String, GraftTable, String)] =
-      dimTbls.collectFirst { case (r, t, "full_outer", c) => (r, t, c) }
-    val fullIdx = dimTbls.indexWhere(_._3 == "full_outer")
-    // dims AFTER the FULL join — every extension frame threads through
-    // them (their join conditions see NULL fact columns on extension
-    // rows, exactly as the defining query's NULL-extended rows do)
-    // before its partition keys are taken
-    val suffixDims = if (fullIdx < 0) Nil else dimTbls.drop(fullIdx + 1)
-    // key derivation joins a frame to the dims `ds` AS OF `vers` — a
-    // FULL dim downgrades to LEFT there (the frame's own rows and their
-    // matched or NULL dim columns yield exactly its keys; the dim-side
-    // extension keys come from the dedicated extension terms below, so
-    // FULL here would only drag the entire unmatched dim side through
-    // every slice)
-    def keyJoin(df: DataFrame, ds: Seq[(String, GraftTable, String, String)],
-                vers: String => Int): DataFrame =
-      joinBase(df, ds.map { case (r, t, jt, c) =>
-        (t.scanAsOfVersion(vers(r)), if (jt == "full_outer") "left_outer" else jt, c)
-      })
-    def joinSuffix(df: DataFrame, vers: String => Int): DataFrame =
-      keyJoin(df, suffixDims, vers)
-    def joinAtKeys(factDf: DataFrame, vers: String => Int): DataFrame =
-      keyJoin(factDf, dimTbls, vers)
     // forced rebuild, a rolled-back source, or a rolled-back dim/leg
     // (no forward slice to bound the touched groups with): one full
     // replay over the joined head, overwritten with marker + pins in
@@ -3603,146 +3558,6 @@ object GraftMaterializedView {
       return (applied, to, "full")
     }
 
-    val changes =
-      if (applied == to) None
-      else Some(replaying("source", applied, to) { sliceOf(factRel, src, applied, to) })
-    // a moved leg's slice touches its rows' partition keys exactly like
-    // the fact slice (UNION ALL legs never combine with dims, enforced
-    // at analysis, so no join terms)
-    val legChanges: Seq[DataFrame] = legTbls.collect {
-      case (r, t) if legCur(r) != legPin(r) =>
-        replaying(s"union leg $r", legPin(r), legCur(r)) {
-          sliceOf(r, t, legPin(r), legCur(r))
-        }
-    }
-
-    // touched groups: every changelog row passing the inner WHERE
-    // (insert post-image or delete pre-image) touches its partition
-    // key. With dims the key may live on a dim, so the changelog joins
-    // the PINNED dims (the state the stored rows saw — old keys) and,
-    // when a dim moved, the CURRENT dims too (new keys); a moved dim
-    // additionally touches the keys of every head fact row matching its
-    // slice, under BOTH dim states (a dim update moves fact rows
-    // between groups; a LEFT match appearing/vanishing moves them
-    // to/from the NULL-extended group — the outer join derives those
-    // keys directly).
-    val keyExprs = parts.map { case (n, s) => expr(s).as(n) }
-    def keysOf(base: DataFrame): DataFrame = {
-      val f = innerFilter.fold(base)(p => base.where(expr(p)))
-      f.select(keyExprs: _*)
-    }
-    // Keys of the dim-side NULL-extension rows a frame's dim partners
-    // own: the frame's matched dim rows, NULL-extended on the fact
-    // columns, through the same inner WHERE the replay applies. A fact
-    // row appearing can DESTROY its partner's extension (and one
-    // vanishing can re-create it) — either way the affected group is
-    // exactly the extension row's own key, and the matched-partner set
-    // is slice-bounded (inner join against the slice).
-    def fullExtKeysOf(factFrame: DataFrame, vers: String => Int): Seq[DataFrame] =
-      fullDim.toSeq.map { case (r, t, c) =>
-        val d = t.scanAsOfVersion(vers(r))
-        val joined = factFrame.join(d, expr(c), "inner")
-        val extended = joined.select(
-          factFrame.schema.fields.map(f =>
-            lit(null).cast(f.dataType).as(f.name)).toIndexedSeq ++
-            d.schema.fields.map(f => col(s"`${f.name}`")): _*)
-        keysOf(joinSuffix(extended, vers))
-      }
-    val factTerms = (changes.toSeq ++ legChanges).flatMap { ch =>
-      Seq(keysOf(joinAtKeys(ch, pinnedVer))) ++
-        fullExtKeysOf(ch, pinnedVer) ++
-        (if (dimsMoved)
-           Seq(keysOf(joinAtKeys(ch, curVers))) ++ fullExtKeysOf(ch, curVers)
-         else Nil)
-    }
-    val dimTerms = dimTbls.zipWithIndex.filter { case ((r, _, _, _), _) =>
-      curVers(r) != pinnedVer(r)
-    }.flatMap { case ((r, t, jt, c), j) =>
-      val (slice, nSlice) = replaying(s"dimension $r", pinnedVer(r), curVers(r)) {
-        checkpointCounted(t.scanDataChangesBetween(pinnedVer(r), curVers(r))
-          .drop("_commit_version"))
-      }
-      val sliceJ = bcIfSmallN(slice, nSlice)
-      if (fullIdx < 0) {
-        // no FULL in the chain: affected rows derive from the whole
-        // head (every union leg through its own WHERE/SELECT) semi-
-        // joined to the slice, keys under BOTH dim states (a dim update
-        // moves fact rows between groups)
-        val affected = headScan().join(sliceJ, expr(c), "left_semi")
-        Seq(keysOf(joinAtKeys(affected, pinnedVer)),
-          keysOf(joinAtKeys(affected, curVers)))
-      } else {
-        // FULL chain (round 19): a moved dim's touched keys derive from
-        // its AFFECTED PATHS — rows whose join path meets the slice at
-        // position j — keyed under BOTH dim states (a NULL-extension
-        // flip's "other" key has the moved dim's columns NULL, which
-        // only the LEFT-downgraded re-join at the other state can
-        // produce; the slice's own images alone miss it — caught by the
-        // 5-seed sweep). The path PREFIX below j is itself evaluated at
-        // both states, because which rows reach the slice can depend on
-        // a prior dim's state. Fact-origin paths start at the head;
-        // with a FULL dim before j, extension-origin paths (no fact
-        // row) start at the anti-probed extension set.
-        val factHead = legWhere(factRel)(src.scanAsOfVersion(to))
-        def foldDims(df: DataFrame, from: Int, until: Int,
-                     vers: String => Int): DataFrame =
-          keyJoin(df, dimTbls.slice(from, until), vers)
-        val states: Seq[String => Int] = Seq(pinnedVer, curVers)
-        // state-combo dedup: a term's pathState (or keyState) only
-        // changes its frame when a dim the fold actually TOUCHES moved
-        // this refresh — otherwise both states scan identical versions
-        // and the term is a byte-identical duplicate that union+distinct
-        // would only absorb after re-scanning the head. With one moved
-        // dim (the common churn) this halves the fact-origin and
-        // extension-origin scans.
-        def movedIn(from: Int, until: Int): Boolean =
-          (from until until).exists { i =>
-            val r2 = dimTbls(i)._1; pinnedVer(r2) != curVers(r2)
-          }
-        def statesIf(needBoth: Boolean): Seq[String => Int] =
-          if (needBoth) states else Seq(pinnedVer)
-        val nullFact = factHead.schema.fields.map(f =>
-          lit(null).cast(f.dataType).as(f.name)).toIndexedSeq
-        // fact-origin: prefix at pathState, semi vs slice, rest of the
-        // chain (including position j at keyState) for the keys
-        val factOrigin = for {
-          pathState <- statesIf(movedIn(0, j))
-          keyState <- statesIf(movedIn(j, dimTbls.length))
-        } yield {
-          val affected = foldDims(factHead, 0, j, pathState)
-            .join(sliceJ, expr(c), "left_semi")
-          keysOf(foldDims(affected, j, dimTbls.length, keyState))
-        }
-        // extension-origin (suffix moves only): FULL-dim rows with no
-        // fact match, NULL-extended on the fact side, threaded to j
-        val extOrigin =
-          if (j == fullIdx) {
-            // the FULL slice's rows also appear/vanish as their OWN
-            // NULL-extension rows — NULL-extended on the fact side and
-            // threaded through the suffix chain at both endpoints
-            val ext = slice.select(nullFact ++
-              t.schema.fields.map(f => col(s"`${f.name}`")): _*)
-            statesIf(movedIn(fullIdx + 1, dimTbls.length))
-              .map(v => keysOf(joinSuffix(ext, v)))
-          } else {
-            val (r0, t0, c0) = fullDim.get
-            val fullMoved = pinnedVer(r0) != curVers(r0)
-            for {
-              pathState <- statesIf(fullMoved || movedIn(fullIdx + 1, j))
-              keyState <- statesIf(movedIn(j, dimTbls.length))
-            } yield {
-              val d0 = t0.scanAsOfVersion(pathState(r0))
-              val ext0 = d0.join(factHead, expr(c0), "left_anti")
-                .select(nullFact ++
-                  t0.schema.fields.map(f => col(s"`${f.name}`")): _*)
-              val affected = foldDims(ext0, fullIdx + 1, j, pathState)
-                .join(sliceJ, expr(c), "left_semi")
-              keysOf(foldDims(affected, j, dimTbls.length, keyState))
-            }
-          }
-        factOrigin ++ extOrigin
-      }
-    }
     val keyNames = parts.map(_._1)
     // the partition keys that are bare columns of `schema`
     def bareKeysOf(schema: org.apache.spark.sql.types.StructType): Seq[String] =
@@ -3754,12 +3569,21 @@ object GraftMaterializedView {
     // touched keys whose components in `names` are all NULL
     def allNull(names: Seq[String]): Column =
       if (names.isEmpty) lit(false) else names.map(n => col(s"`$n`").isNull).reduce(_ && _)
-    // one evaluation; the count, the key bounds and the all-NULL probes
+    // touched groups: every row of the telescoped changelog of the
+    // joined shape that passes the inner WHERE touches its partition
+    // key. Its signed rows net to J(head) − J(recorded), so every group
+    // whose rows changed holds one of them; rows that cancel touch only
+    // unchanged groups, whose recompute from the head is idempotent.
+    // One evaluation; the count, the key bounds and the all-NULL probes
     // of the pruning decisions below ride the checkpoint's own job
-    val (touched, tStats) = checkpointObserved(
-      (factTerms ++ dimTerms).reduce(_ unionByName _).distinct(),
-      (count(lit(1)) +: boundAggs(keyNames)) ++
-        (factKeyNames +: dimKeyNames).map(ns => count(when(allNull(ns), 1))))
+    val (touched, tStats) = replaying("source or moved-dimension", applied, to) {
+      val changes = telescopedChanges(applied, pinnedVer, legPin)
+      checkpointObserved(
+        innerFilter.fold(changes)(p => changes.where(expr(p)))
+          .select(parts.map { case (n, s) => expr(s).as(n) }: _*).distinct(),
+        (count(lit(1)) +: boundAggs(keyNames)) ++
+          (factKeyNames +: dimKeyNames).map(ns => count(when(allNull(ns), 1))))
+    }
     val nTouched = tStats.getLong(0)
     val bounds = keyBounds(tStats, 1, keyNames)
     // no touched key has all of fact (0) or dim j (j + 1) key components NULL
@@ -3798,7 +3622,8 @@ object GraftMaterializedView {
     // fact pruning stays sound; otherwise read the fact whole (the
     // extension rows of the NULL-keyed group need the exact unmatched
     // set).
-    val factPruneOk = fullDim.isEmpty || (factKeyNames.nonEmpty && noAllNullKey(0))
+    val factPruneOk = !dimTbls.exists(_._3 == "full_outer") ||
+      (factKeyNames.nonEmpty && noAllNullKey(0))
     val srcScan = headScan(prune = t =>
       if (factPruneOk) rangeSql(bounds, t.schema, parts) else None)
     // DIM-side zone pruning (round 19): when the partition key lives on

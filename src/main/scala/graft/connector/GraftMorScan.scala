@@ -1,10 +1,9 @@
 package graft.connector
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LogicalPlan, MergeIntoTable, Project, UpdateTable, V2WriteCommand}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.TreePattern.PLAN_EXPRESSION
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** Makes SQL reads of a graft table with pending MERGE-ON-READ deletes
@@ -22,8 +21,10 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * DML TARGETS stay untouched: rewriting the relation under
   * MERGE/UPDATE/DELETE would break their command rewrites, and the
   * underlying table operations apply pending deletes themselves. Read
-  * positions inside those commands (MERGE source, write queries,
-  * subqueries) are still rewritten.
+  * positions inside those commands (MERGE source, write queries) are
+  * still rewritten. Subquery plans (IN, EXISTS, scalar, LATERAL) need
+  * no walk here: the analyzer resolves each one by running its
+  * resolution rules, this one included, on the subquery plan itself.
   */
 case class GraftMorScanRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -51,14 +52,6 @@ case class GraftMorScanRule(spark: SparkSession) extends Rule[LogicalPlan] {
           }
         case _ => rel
       }
-    // a node's expressions are walked only when a subquery sits in
-    // them: mapping them rebuilds every argument — a LocalRelation's
-    // whole data row list — on every analyzer pass
-    case other =>
-      val mapped = other.mapChildren(rewrite)
-      if (!mapped.containsPattern(PLAN_EXPRESSION)) mapped
-      else mapped.transformExpressionsUpWithPruning(_.containsPattern(PLAN_EXPRESSION)) {
-        case se: SubqueryExpression => se.withNewPlan(rewrite(se.plan))
-      }
+    case other => other.mapChildren(rewrite)
   }
 }

@@ -797,46 +797,60 @@ class ConnectorSpec extends AnyFunSuite with Matchers {
     spark.sql("INSERT INTO graft.mvjobs.o SELECT id, CONCAT('p', id % 3) FROM range(0, 50)")
     spark.sql("INSERT INTO graft.mvjobs.l SELECT id % 50, id, CAST(id AS DECIMAL(12,2)), " +
       "IF(id % 2 = 0, 'A', 'R') FROM range(0, 200)")
+    // fact rows whose orders arrive later, in the dim insert below
+    spark.sql("INSERT INTO graft.mvjobs.l SELECT 50 + id % 3, id, CAST(id AS DECIMAL(12,2)), " +
+      "'A' FROM range(0, 6)")
     val q = """SELECT o_priority, l_flag, COUNT(*) AS n, SUM(l_quantity) AS qty,
               |       SUM(l_price) AS price
               |FROM graft.mvjobs.l JOIN graft.mvjobs.o ON l_orderkey = o_orderkey
               |GROUP BY o_priority, l_flag""".stripMargin
     spark.sql(s"CALL graft.system.create_mview('mvjobs', 'm', '$q')")
       .head.getString(0) shouldBe "incremental"
-    spark.sql("INSERT INTO graft.mvjobs.l VALUES (1, 5, 1.50, 'A'), (2, 7, 2.25, 'R')")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.mkString("|")).sorted.toSeq
 
-    // jobs started under the refresh's tag; the sentinel job's start
+    // jobs started under each refresh's tag; the sentinel job's start
     // arrives after every earlier job's on the listener queue
     val sc = spark.sparkContext
     val key = "graft.test.op"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]
     val drained = new java.util.concurrent.atomic.AtomicBoolean
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(key)) match {
-          case Some("refresh") => jobs.incrementAndGet()
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
           case Some("sentinel") => drained.set(true)
-          case _ =>
+          case Some(tag) => jobs.merge(tag, 1, _ + _)
+          case None =>
         }
     }
-    def tagged[T](tag: String)(body: => T): T = {
+    def taggedRefresh(tag: String): Unit = {
       sc.setLocalProperty(key, tag)
-      try body finally sc.setLocalProperty(key, null)
+      try spark.sql("CALL graft.system.refresh_mview('mvjobs', 'm', false)")
+        .head.getString(2) shouldBe "incremental"
+      finally sc.setLocalProperty(key, null)
     }
     sc.addSparkListener(listener)
     try {
-      tagged("refresh") {
-        spark.sql("CALL graft.system.refresh_mview('mvjobs', 'm', false)")
-          .head.getString(2) shouldBe "incremental"
-      }
-      tagged("sentinel")(sc.parallelize(Seq(1), 1).count())
+      // light: a fact insert only
+      spark.sql("INSERT INTO graft.mvjobs.l VALUES (1, 5, 1.50, 'A'), (2, 7, 2.25, 'R')")
+      taggedRefresh("light")
+      rows(spark.table("graft.mvjobs.m")) shouldBe rows(spark.sql(q))
+      // heavy: a merge-on-read fact range delete and a dim insert whose
+      // orders match waiting fact rows
+      spark.sql("DELETE FROM graft.mvjobs.l WHERE l_orderkey BETWEEN 10 AND 19")
+      spark.sql("INSERT INTO graft.mvjobs.o VALUES (50, 'p0'), (51, 'p1'), (52, 'p2')")
+      taggedRefresh("heavy")
+      sc.setLocalProperty(key, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
       eventually(timeout(Span(30, Seconds))) { drained.get shouldBe true }
     } finally sc.removeSparkListener(listener)
     // the delta and the merged frame carry their row counts, bounds and
     // abort probes in their checkpoint jobs, and the keyed write reuses
     // the merged frame's checkpoint: 10 jobs, down from 17
-    jobs.get should be <= 10
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.mkString("|")).sorted.toSeq
+    jobs.get("light") should be <= 10
+    // the dim slice observes its join-key bounds in its own checkpoint
+    // job, so the fact pruning runs no aggregation of its own: 12 jobs,
+    // down from 14
+    jobs.get("heavy") should be <= 12
     rows(spark.table("graft.mvjobs.m")) shouldBe rows(spark.sql(q))
     spark.sql("CALL graft.system.drop_mview('mvjobs', 'm')")
     spark.sql("DROP TABLE graft.mvjobs.l")
@@ -2094,6 +2108,22 @@ class ConnectorSpec extends AnyFunSuite with Matchers {
       .head.getLong(0) shouldBe 2L
     spark.sql("SELECT (SELECT COUNT(*) FROM graft.nsmor.t) AS n")
       .head.getLong(0) shouldBe 15L
+    // EXISTS, a correlated scalar subquery and a LATERAL join: the
+    // analyzer resolves each subquery plan through the same rule
+    spark.sql(
+      """SELECT COUNT(*) FROM VALUES (1L), (3L), (7L), (9L), (18L) AS x(id)
+        |WHERE EXISTS (SELECT 1 FROM graft.nsmor.t t WHERE t.id = x.id)""".stripMargin)
+      .head.getLong(0) shouldBe 2L
+    spark.sql(
+      """SELECT (SELECT COUNT(*) FROM graft.nsmor.t t WHERE t.id <= x.id)
+        |FROM VALUES (3L), (8L), (20L) AS x(id) ORDER BY x.id""".stripMargin)
+      .collect().map(_.getLong(0)).toSeq shouldBe Seq(2L, 6L, 15L)
+    spark.sql(
+      """SELECT x.id, l.tid FROM VALUES (3L), (7L), (17L) AS x(id),
+        |LATERAL (SELECT t.id AS tid FROM graft.nsmor.t t
+        |         WHERE t.id BETWEEN x.id AND x.id + 1) l ORDER BY x.id, l.tid""".stripMargin)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq shouldBe
+      Seq((3L, 4L), (7L, 8L), (17L, 17L))
     // aggregate pushdown must NOT answer from (overcounting) metadata
     spark.sql("SELECT COUNT(*) FROM graft.nsmor.t").queryExecution
       .executedPlan.toString should not include "GraftAggScan"
