@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, ReadMaxRows, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
@@ -111,7 +111,7 @@ final class GraftChangesScan(tbl: GraftTable, options: CaseInsensitiveStringMap,
                              tableSchema: StructType,
                              required: StructType, pushed: Array[Filter],
                              metaPrune: GraftCdc.MetaPruning)
-    extends Scan {
+    extends Scan with GraftMicroBatchStream.VersionFeed {
 
   // the pruned read split into its parquet part and its constant part.
   // Data fields are re-bound to the PINNED table schema's StructFields:
@@ -119,7 +119,7 @@ final class GraftChangesScan(tbl: GraftTable, options: CaseInsensitiveStringMap,
   // mapping matches physical names BY FIELD ID from that metadata.
   private val dataPart = StructType(
     required.fields.flatMap(f => tableSchema.fields.find(_.name == f.name)))
-  private val metaPart: Seq[String] =
+  override val metaPart: Seq[String] =
     required.fields.map(_.name).filter(GraftCdc.MetaCols.contains).toSeq
 
   override def readSchema(): StructType = required
@@ -134,154 +134,34 @@ final class GraftChangesScan(tbl: GraftTable, options: CaseInsensitiveStringMap,
       .getOrElse(tbl.currentOrFail().version)
 
     override def planInputPartitions(): Array[InputPartition] =
-      GraftCdc.partitionsBetween(tbl, from, to, tableSchema, dataPart, pushed,
-        metaPrune, tbl.cdcSides,
-        skipMaintenance = options.getBoolean("skipMaintenance", false))
+      partitions(from, to, tbl.cdcSides)
 
     override def createReaderFactory(): PartitionReaderFactory =
       new GraftCdc.CdcReaderFactory(metaPart)
   }
 
+  /** Streaming CDC over [[GraftMicroBatchStream]]: rows tagged insert /
+    * delete per version (`-1` = genesis emits v0's state as inserts at
+    * version 0). Admission sizes a version by its CHANGE (insert +
+    * delete sides); `maxVersionsPerTrigger` also caps the version span.
+    */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new GraftCdcMicroBatchStream(tbl, options, tableSchema, dataPart, metaPart,
-      pushed, metaPrune)
-}
+    new GraftMicroBatchStream(tbl, options, this)
 
-/** Streaming CDC: offset = metadata-log version (same durable total
-  * order as [[GraftMicroBatchStream]], so the two stream kinds share
-  * checkpoint semantics). `streamStartVersion` / `streamStartTimestamp`
-  * choose the replay point (default: only commits AFTER stream start;
-  * `-1` = genesis, emitting v0's state as inserts at version 0).
-  * Catch-up pacing: `maxVersionsPerTrigger` caps the version span;
-  * `maxFilesPerTrigger` / `maxRowsPerTrigger` reuse the append
-  * stream's admission walk over per-version CHANGE sizes (insert +
-  * delete sides) — admission stays version-granular either way, so
-  * exactly-once per version is preserved.
-  *
-  * The stream's column naming is PINNED at start (dataPart): commits
-  * made after a rename keep streaming — their files read under the new
-  * physical names and alias back to the pinned names by field id — and
-  * the sink keeps one consistent schema until the stream is restarted.
-  */
-final class GraftCdcMicroBatchStream(tbl: GraftTable,
-                                     options: CaseInsensitiveStringMap,
-                                     tableSchema: StructType,
-                                     dataPart: StructType,
-                                     metaPart: Seq[String],
-                                     pushed: Array[Filter],
-                                     metaPrune: GraftCdc.MetaPruning =
-                                       GraftCdc.MetaPruning.all)
-    extends MicroBatchStream with SupportsTriggerAvailableNow
-    with org.apache.spark.sql.connector.read.streaming.ReportsSourceMetrics {
+  override def maxVersions: Option[Int] =
+    Option(options.get("maxVersionsPerTrigger")).map(_.toInt)
 
-  /** Same lag surface as the append stream: versions the consumer
-    * trails the table head by, in `StreamingQueryProgress.sources[i]
-    * .metrics` — the number an operator alarms on.
-    */
-  override def metrics(latestConsumed: java.util.Optional[Offset])
-      : java.util.Map[String, String] = {
-    val head = tbl.currentOrFail().version
-    val consumed =
-      if (latestConsumed.isPresent) latestConsumed.get match {
-        case g: GraftStreamOffset => g.version
-        case o => GraftStreamOffset.fromJson(o.json).version
-      }
-      else -1
-    java.util.Map.of(
-      "tableVersion", head.toString,
-      "consumedVersion", consumed.toString,
-      "versionsBehind", math.max(0, head - consumed).toString)
+  override def sizeOf(v: Int, sides: Int => GraftTable.CdcSides): (Long, Long) = {
+    val s = sides(v)
+    (s.fileCount.toLong, s.rowCount)
   }
 
-  private val maxVersions = Option(options.get("maxVersionsPerTrigger")).map(_.toInt)
+  override def partitions(from: Int, to: Int,
+                          sides: Int => GraftTable.CdcSides): Array[InputPartition] =
+    GraftCdc.partitionsBetween(tbl, from, to, tableSchema, dataPart, pushed,
+      metaPrune, sides, skipMaintenance = options.getBoolean("skipMaintenance", false))
 
-  @volatile private var availableNowEnd: Option[Int] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = Some(tbl.currentOrFail().version)
-
-  /** Memo of the most recent admission walk's per-version sides:
-    * `latestOffset(start, limit)` and the `planInputPartitions` that
-    * follows cover the same versions, so each version's manifest diff
-    * (and any cache materialization's footer harvest) happens once per
-    * trigger. Replaced wholesale per walk — bounded by one batch's
-    * version span, never the stream's lifetime.
-    */
-  @volatile private var sidesMemo: Map[Int, GraftTable.CdcSides] = Map.empty
-
-  private def sidesAt(v: Int): GraftTable.CdcSides =
-    sidesMemo.getOrElse(v, tbl.cdcSides(v))
-
-  override def initialOffset(): Offset = {
-    val v = Option(options.get("streamStartVersion")).map(_.toInt)
-      .orElse(Option(options.get("streamStartTimestamp")).map { ts =>
-        try tbl.snapshotAsOfTimestamp(ts.toLong - 1).version
-        catch { case _: IllegalArgumentException => -1 }
-      })
-      .getOrElse(tbl.currentOrFail().version)
-    GraftStreamOffset(v)
-  }
-
-  override def latestOffset(): Offset =
-    GraftStreamOffset(availableNowEnd.getOrElse(tbl.currentOrFail().version))
-
-  override def getDefaultReadLimit: ReadLimit = {
-    val limits = Seq(
-      Option(options.get("maxFilesPerTrigger")).map(s => ReadLimit.maxFiles(s.toInt)),
-      Option(options.get("maxRowsPerTrigger")).map(s => ReadLimit.maxRows(s.toLong))).flatten
-    limits match {
-      case Seq()  => ReadLimit.allAvailable()
-      case Seq(l) => l
-      case ls     => ReadLimit.compositeLimit(ls.toArray)
-    }
-  }
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val from = start.asInstanceOf[GraftStreamOffset].version
-    val latest = availableNowEnd.getOrElse(tbl.currentOrFail().version)
-    def caps(l: ReadLimit): (Option[Int], Option[Long]) = l match {
-      case f: ReadMaxFiles => (Some(f.maxFiles), None)
-      case r: ReadMaxRows => (None, Some(r.maxRows))
-      case c: CompositeReadLimit =>
-        c.getReadLimits.map(caps).reduce { (a, b) =>
-          (Seq(a._1, b._1).flatten.minOption, Seq(a._2, b._2).flatten.minOption)
-        }
-      case _ => (None, None)
-    }
-    val (maxFiles, maxRows) = caps(limit)
-    val admitted =
-      if (maxFiles.isEmpty && maxRows.isEmpty) latest
-      else {
-        val memo = scala.collection.mutable.HashMap.empty[Int, GraftTable.CdcSides]
-        try
-          GraftMicroBatchStream.admitWalk(from, latest, maxFiles, maxRows) { v =>
-            val s = tbl.cdcSides(v)
-            memo(v) = s
-            (s.fileCount.toLong, s.rowCount)
-          }
-        finally sidesMemo = memo.toMap
-      }
-    GraftStreamOffset(maxVersions match {
-      case Some(m) if admitted > from => math.min(from + math.max(1, m), admitted)
-      case _ => admitted
-    })
-  }
-
-  override def deserializeOffset(json: String): Offset =
-    GraftStreamOffset.fromJson(json)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    GraftCdc.partitionsBetween(tbl,
-      start.asInstanceOf[GraftStreamOffset].version,
-      end.asInstanceOf[GraftStreamOffset].version,
-      tableSchema, dataPart, pushed, metaPrune, sidesAt,
-      skipMaintenance = options.getBoolean("skipMaintenance", false))
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftCdc.CdcReaderFactory(metaPart)
-
-  override def commit(end: Offset): Unit = () // offsets live in the checkpoint
-  override def stop(): Unit = ()
+  override def expired(v: Int): String = GraftCdc.expired(tbl, v)
 }
 
 private[graft] object GraftCdc {
@@ -360,11 +240,13 @@ private[graft] object GraftCdc {
       StructField("_change_type", StringType, nullable = false) :+
       StructField("_commit_version", IntegerType, nullable = false))
 
-  /** One CDC partition = a delegate parquet partition plus the constant
+  /** One read task = a delegate parquet partition plus the constant
     * (change side, commit version) it carries and the reader factory
     * that knows its era's physical read schema. Embedding the factory
     * per partition is what lets ONE batch span several eras and the
     * materialized cache — each is a different physical column layout.
+    * The table stream, which requests no constant column, tags a scan
+    * spanning several versions with the batch's end version.
     */
   final case class CdcPartition(delegate: InputPartition, changeType: String,
                                 version: Int,
@@ -387,35 +269,38 @@ private[graft] object GraftCdc {
                         sidesAt: Int => GraftTable.CdcSides,
                         skipMaintenance: Boolean = false): Array[InputPartition] = {
     require(from <= to, s"bad change range: $from..$to")
-    val out = Array.newBuilder[InputPartition]
-    var v = math.max(from + 1, 0)
-    try {
-      while (v <= to) {
-        if (metaPrune.versionAllowed(v) && (!skipMaintenance ||
-            !GraftTable.MaintenanceOps.contains(tbl.log.read(v).operation))) {
+    (math.max(from + 1, 0) to to).flatMap { v =>
+      GraftMicroBatchStream.whenLive(expired(tbl, v)) {
+        if (!metaPrune.versionAllowed(v) || skipMaintenance &&
+            GraftTable.MaintenanceOps.contains(tbl.log.read(v).operation)) Nil
+        else {
           val sides = sidesAt(v)
-          def emit(tag: String, parts: Seq[GraftTable.CdcFiles]): Unit =
-            parts.filter(_.files.nonEmpty).foreach { p =>
-              val scan = eraScan(tbl, p.writeSchema, p.files, tableSchema, dataPart, pushed)
-              val factory = scan.toBatch.createReaderFactory()
-              out ++= scan.toBatch.planInputPartitions()
-                .map(ip => CdcPartition(ip, tag, v, factory))
-            }
-          if (metaPrune.sideAllowed("insert")) emit("insert", sides.ins)
-          if (metaPrune.sideAllowed("delete")) emit("delete", sides.del)
+          def emit(tag: String, parts: Seq[GraftTable.CdcFiles]) =
+            if (!metaPrune.sideAllowed(tag)) Nil
+            else parts.flatMap(p =>
+              eraPartitions(tbl, p, tableSchema, dataPart, pushed, tag, v))
+          emit("insert", sides.ins) ++ emit("delete", sides.del)
         }
-        v += 1
       }
-    } catch {
-      case e @ (_: java.nio.file.NoSuchFileException | _: java.io.FileNotFoundException) =>
-        throw new IllegalStateException(
-          s"graft change feed over ${tbl.tableDir} needs version $v, which has " +
-            "been removed by expire_snapshots; the requested range is gone and " +
-            "cannot be replayed. Restart from a live startingVersion / fresh " +
-            "checkpoint.", e)
-    }
-    out.result()
+    }.toArray
   }
+
+  def expired(tbl: GraftTable, v: Int): String =
+    s"graft change feed over ${tbl.tableDir} needs version $v, which has " +
+      "been removed by expire_snapshots; the requested range is gone and " +
+      "cannot be replayed. Restart from a live startingVersion / fresh " +
+      "checkpoint."
+
+  /** The read tasks of one era scan over `part`, tagged (`tag`, `v`). */
+  def eraPartitions(tbl: GraftTable, part: GraftTable.CdcFiles,
+                    tableSchema: StructType, dataPart: StructType,
+                    pushed: Array[Filter], tag: String, v: Int): Seq[InputPartition] =
+    if (part.files.isEmpty) Nil
+    else {
+      val batch = eraScan(tbl, part.writeSchema, part.files, tableSchema, dataPart, pushed).toBatch
+      val factory = batch.createReaderFactory()
+      batch.planInputPartitions().toSeq.map(CdcPartition(_, tag, v, factory))
+    }
 
   /** A native ParquetScan over files written under `writeSchema`,
     * reading the requested fields under their PHYSICAL era names
@@ -481,67 +366,69 @@ private[graft] object GraftCdc {
     * vectorized parquet batches INTACT and appends two
     * [[ConstantColumnVector]]s — the tag is constant per (file,
     * commit), so a CDC backfill scan stays inside whole-stage codegen's
-    * ColumnarToRow instead of paying a per-row wrapper.
+    * ColumnarToRow instead of paying a per-row wrapper. With no
+    * constant column requested (the table stream, a data-only change
+    * read) the era reader is handed back untouched.
     */
   final class CdcReaderFactory(metaPart: Seq[String])
       extends PartitionReaderFactory {
 
-    override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-      partition match {
-        case c: CdcPartition =>
-          val inner = c.factory.createReader(c.delegate)
-          val meta = new GenericInternalRow(metaPart.map {
-            case "_change_type" => UTF8String.fromString(c.changeType): Any
-            case "_commit_version" => c.version: Any
-          }.toArray)
-          val joined = new JoinedRow
-          new PartitionReader[InternalRow] {
-            override def next(): Boolean = inner.next()
-            override def get(): InternalRow = joined(inner.get(), meta)
-            override def close(): Unit = inner.close()
-          }
-        case other =>
-          throw new IllegalStateException(s"unexpected partition kind: $other")
+    private def cdc(partition: InputPartition): CdcPartition = partition match {
+      case c: CdcPartition => c
+      case other => throw new IllegalStateException(s"unexpected partition kind: $other")
+    }
+
+    override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+      val c = cdc(partition)
+      val inner = c.factory.createReader(c.delegate)
+      if (metaPart.isEmpty) return inner
+      val meta = new GenericInternalRow(metaPart.map {
+        case "_change_type" => UTF8String.fromString(c.changeType): Any
+        case "_commit_version" => c.version: Any
+      }.toArray)
+      val joined = new JoinedRow
+      new PartitionReader[InternalRow] {
+        override def next(): Boolean = inner.next()
+        override def get(): InternalRow = joined(inner.get(), meta)
+        override def close(): Unit = inner.close()
       }
+    }
 
     override def createColumnarReader(partition: InputPartition)
-        : PartitionReader[ColumnarBatch] =
-      partition match {
-        case c: CdcPartition =>
-          val inner = c.factory.createColumnarReader(c.delegate)
-          new PartitionReader[ColumnarBatch] {
-            override def next(): Boolean = inner.next()
-            override def get(): ColumnarBatch = {
-              val b = inner.get()
-              val metaVecs = metaPart.map {
-                case "_change_type" =>
-                  val v = new ConstantColumnVector(b.numRows, StringType)
-                  v.setUtf8String(UTF8String.fromString(c.changeType))
-                  v: ColumnVector
-                case "_commit_version" =>
-                  val v = new ConstantColumnVector(b.numRows, IntegerType)
-                  v.setInt(c.version)
-                  v: ColumnVector
-              }
-              val cols = Array.tabulate[ColumnVector](b.numCols)(b.column) ++ metaVecs
-              // wraps the delegate's vectors; the inner reader owns and
-              // closes them, the constant vectors hold no buffers
-              new ColumnarBatch(cols, b.numRows)
-            }
-            override def close(): Unit = inner.close()
+        : PartitionReader[ColumnarBatch] = {
+      val c = cdc(partition)
+      val inner = c.factory.createColumnarReader(c.delegate)
+      if (metaPart.isEmpty) return inner
+      new PartitionReader[ColumnarBatch] {
+        override def next(): Boolean = inner.next()
+        override def get(): ColumnarBatch = {
+          val b = inner.get()
+          val metaVecs = metaPart.map {
+            case "_change_type" =>
+              val v = new ConstantColumnVector(b.numRows, StringType)
+              v.setUtf8String(UTF8String.fromString(c.changeType))
+              v: ColumnVector
+            case "_commit_version" =>
+              val v = new ConstantColumnVector(b.numRows, IntegerType)
+              v.setInt(c.version)
+              v: ColumnVector
           }
-        case other =>
-          throw new IllegalStateException(s"unexpected partition kind: $other")
+          val cols = Array.tabulate[ColumnVector](b.numCols)(b.column) ++ metaVecs
+          // wraps the delegate's vectors; the inner reader owns and
+          // closes them, the constant vectors hold no buffers
+          new ColumnarBatch(cols, b.numRows)
+        }
+        override def close(): Unit = inner.close()
       }
+    }
 
     /** Columnar iff the era's parquet factory reads this partition
       * vectorized (flat schemas: yes) — the constant append handles
       * either way.
       */
-    override def supportColumnarReads(partition: InputPartition): Boolean =
-      partition match {
-        case c: CdcPartition => c.factory.supportColumnarReads(c.delegate)
-        case _ => false
-      }
+    override def supportColumnarReads(partition: InputPartition): Boolean = {
+      val c = cdc(partition)
+      c.factory.supportColumnarReads(c.delegate)
+    }
   }
 }

@@ -1,19 +1,15 @@
 package graft.connector
 
-import graft.meta.DataFile
 import graft.table.GraftTable
+import graft.table.GraftTable.{CdcFiles, CdcSides}
 
-import org.apache.spark.sql.GraftSqlShim
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, ReadMaxRows, ReportsSourceMetrics, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Stream offset = metadata-log version: "every append up to and
+/** Stream offset = metadata-log version: "every change up to and
   * including version N has been emitted". Versions are the table's own
   * durable, totally-ordered commit sequence, so offsets survive
   * restarts and re-planning a (start, end] range is deterministic —
@@ -59,56 +55,175 @@ object GraftMicroBatchStream {
     }
     latest
   }
+
+  /** `read` of one version, failing with `expired` — the version was
+    * removed by expire_snapshots — instead of a bare missing-file error
+    * from the metadata log.
+    */
+  private[connector] def whenLive[T](expired: => String)(read: => T): T =
+    try read catch {
+      case e @ (_: java.nio.file.NoSuchFileException | _: java.io.FileNotFoundException) =>
+        throw new IllegalStateException(expired, e)
+    }
+
+  /** What one relation emits from each table version. The stream owns
+    * offsets, admission and the reader; a feed only measures and plans
+    * versions from their change ([[GraftTable.cdcSides]], memoized by
+    * the stream per trigger).
+    */
+  private[connector] trait VersionFeed {
+    /** The constant CDC columns the read requested, in output order. */
+    def metaPart: Seq[String]
+    /** The version-span cap per batch, if the relation has one. */
+    def maxVersions: Option[Int]
+    /** (files, rows) version `v` adds to a batch — admission's measure. */
+    def sizeOf(v: Int, sides: Int => CdcSides): (Long, Long)
+    /** The read tasks emitting versions (from, to]. */
+    def partitions(from: Int, to: Int, sides: Int => CdcSides): Array[InputPartition]
+    /** The error for a version removed by expire_snapshots. */
+    def expired(v: Int): String
+  }
+
+  /** `spark.readStream.table("graft.ns.t")`: each append commit's new
+    * files, per write era, from the insert side of its change.
+    *
+    * A commit that rewrites existing rows aborts the stream by
+    * default — its file churn re-emits rows already emitted. With
+    * `streamSkipRewrites=true` a commit that only removes or rewrites
+    * rows is skipped instead: appends stay exact, but rows deleted or
+    * modified after their append commit were already emitted
+    * as-appended (the Iceberg streaming-skip-delete-snapshots trade).
+    * A commit that also inserts rows (upsert, merge, overwrite,
+    * rollback) aborts even then: skipping it would silently lose those
+    * rows. Such commits are never passed to `cdcSides`: a merge-on-read
+    * one would materialize a change cache, a write.
+    */
+  private[connector] final class TableFeed(tbl: GraftTable,
+                                           readDataSchema: StructType,
+                                           pushed: Array[Filter],
+                                           pinnedSchema: StructType,
+                                           skipRewrites: Boolean) extends VersionFeed {
+    override def metaPart: Seq[String] = Nil
+    override def maxVersions: Option[Int] = None
+
+    private def operation(v: Int): String =
+      whenLive(expired(v))(tbl.snapshotAt(v).operation)
+
+    /** An append, or v0 (its state is the stream's genesis). An
+      * append's group sequence outranks every pending delete, so its
+      * insert side is raw files, never a cache.
+      */
+    private def appends(v: Int): Boolean = v == 0 || operation(v) == "append"
+
+    override def sizeOf(v: Int, sides: Int => CdcSides): (Long, Long) =
+      if (!appends(v)) (0L, 0L) // planning skips or aborts it
+      else {
+        val added = sides(v).insRaw.flatMap(_.files)
+        (added.size.toLong, added.map(_.rows).sum)
+      }
+
+    override def partitions(from: Int, to: Int,
+                            sides: Int => CdcSides): Array[InputPartition] = {
+      val added = (math.max(from + 1, 0) to to).flatMap { v =>
+        if (appends(v)) sides(v).insRaw
+        else { requireSkippable(v); Nil }
+      }
+      // one native scan per WRITE-ERA schema across the batch's
+      // versions: files committed before a rename read under their
+      // physical era names, mapped to the stream's PINNED naming by
+      // field id — a rename does not abort the stream
+      added.groupBy(_.writeSchema).toSeq.flatMap { case (era, parts) =>
+        GraftCdc.eraPartitions(tbl, CdcFiles(era, parts.flatMap(_.files)),
+          pinnedSchema, readDataSchema, pushed, "insert", to)
+      }.toArray
+    }
+
+    private def requireSkippable(v: Int): Unit = {
+      val op = operation(v)
+      if (TableFeed.MetadataOps(op) || skipRewrites && TableFeed.RewriteOps(op)) return
+      val hint =
+        if (TableFeed.RewriteOps(op))
+          "set streamSkipRewrites=true to skip pure-rewrite commits " +
+            "(appends stay exact; later deletes/updates are not replayed)"
+        else
+          s"'$op' inserts new rows and cannot be skipped " +
+            s"(streamSkipRewrites only skips ${TableFeed.RewriteOps.toSeq.sorted.mkString("/")}); " +
+            "restart the stream from a later streamStartVersion"
+      throw new IllegalStateException(
+        s"graft stream over ${tbl.tableDir} hit a non-append commit (v$v: $op); " + hint)
+    }
+
+    override def expired(v: Int): String =
+      s"graft stream over ${tbl.tableDir} needs version $v, which has " +
+        "been removed by expire_snapshots; the checkpointed range is " +
+        "gone and cannot be replayed. Restart with a fresh checkpoint " +
+        "(optionally pinning streamStartVersion to a live version)."
+  }
+
+  private[connector] object TableFeed {
+    /** Commits that change no row: they pass as empty batches. */
+    val MetadataOps: Set[String] = Set("evolve-noop", "evolve-schema",
+      "rename-column", "drop-column", "set-properties", "set-partition-spec")
+
+    /** Commits that only remove or rewrite existing rows — skippable
+      * under `streamSkipRewrites`.
+      */
+    val RewriteOps: Set[String] =
+      Set("delete", "update", "dedup") ++ GraftTable.MaintenanceOps
+  }
 }
 
-/** Structured Streaming SOURCE over a graft table — the read-side
-  * completion of [[graft.streaming.GraftStream]]'s sink (the reference
-  * streams only INTO tables, `core/loader.py:210-235`; streaming OUT of
-  * them is the natural pairing). Reached via
-  * `spark.readStream.table("graft.ns.t")`.
+/** Structured Streaming SOURCE over a graft table's versions — the
+  * read-side completion of [[graft.streaming.GraftStream]]'s sink (the
+  * reference streams only INTO tables, `core/loader.py:210-235`). One
+  * source serves two relations, each a [[GraftMicroBatchStream.VersionFeed]]
+  * over the same per-version change ([[GraftTable.cdcSides]]):
   *
-  * Micro-batch planning is pure metadata: a batch for (start, end]
-  * walks the versions in the range and emits each append commit's NEW
-  * files, computed by diffing manifest REFERENCES against the parent
-  * snapshot — only manifests that changed are parsed, so per-batch
-  * planning is O(new files), never O(table). Files are then read by the
-  * same native columnar ParquetScan machinery as batch scans.
+  *  - `spark.readStream.table("graft.ns.t")` — new rows of each append
+  *    commit ([[GraftMicroBatchStream.TableFeed]]);
+  *  - `spark.readStream.table("graft.ns.t.changes")` — every commit's
+  *    insert and delete sides, tagged `_change_type` /
+  *    `_commit_version` ([[GraftChangesScan]]).
   *
-  * Non-append commits in a range abort the stream by default — their
-  * file churn rewrites EXISTING rows, and emitting it would duplicate
-  * data. With `streamSkipRewrites=true`, PURE-rewrite commits
-  * (delete/update/compact/cluster) are skipped instead: appends stay
-  * exact, but rows deleted or modified after their append commit were
-  * already emitted as-appended (at-least-once with respect to later
-  * mutation — the Iceberg streaming-read trade, where it is spelled
-  * streaming-skip-delete-snapshots). Upsert and overwrite commits still
-  * abort even in skip mode: they INSERT new rows alongside their
-  * rewrite churn, and skipping them would silently lose those rows —
-  * no offset bookkeeping can recover data never emitted.
+  * Micro-batch planning is metadata only: a version's change is a
+  * manifest diff against its parent (only changed manifests are
+  * parsed, so planning is O(new files), never O(table)), read by the
+  * same native columnar ParquetScan as batch scans, one scan per write
+  * era. The column naming is PINNED at stream start: commits after a
+  * rename keep streaming under the pinned names, matched by field id.
   *
-  * Options: `streamStartVersion` (default: the version current when the
-  * stream starts, i.e. only NEW appends; `-1` replays from genesis —
-  * valid when the table history is append-only);
-  * `streamStartTimestamp` (epoch millis — replay every commit after
-  * that moment; a timestamp before the first commit replays from
-  * genesis);
-  * `maxFilesPerTrigger` / `maxRowsPerTrigger` rate-limit each
-  * micro-batch via Spark's admission-control contract — a backlogged
-  * stream catches up in bounded batches instead of planning one batch
-  * over the entire pending history (the Delta/Iceberg streaming-read
-  * pattern). Admission stays VERSION-granular so exactly-once-per-
-  * version is preserved: at least one version is always admitted, and
-  * a single commit larger than the cap is admitted whole.
+  * Options:
+  * {{{
+  * option                 table  .changes  meaning
+  * streamStartVersion       x       x      exclusive start version; default:
+  *                                         the version current at stream start
+  *                                         (only NEW commits); -1 = genesis
+  * streamStartTimestamp     x       x      epoch millis: replay every commit at
+  *                                         or after it (before the first commit
+  *                                         = genesis)
+  * maxFilesPerTrigger       x       x      admission cap on files per batch
+  * maxRowsPerTrigger        x       x      admission cap on rows per batch
+  * streamSkipRewrites       x              skip pure-rewrite commits instead of
+  *                                         aborting (see TableFeed)
+  * maxVersionsPerTrigger            x      cap on versions per batch
+  * skipMaintenance                  x      drop commits that change no visible
+  *                                         row (compaction, clustering, delete
+  *                                         coalescing) from the feed
+  * }}}
+  * The table stream sizes a version by its new files; the change feed
+  * by both its sides. Admission stays VERSION-granular, so
+  * exactly-once per version holds: at least one version is always
+  * admitted, and a single commit larger than a cap is admitted whole.
+  * `Trigger.AvailableNow` pins the end version when the run is
+  * prepared. Source metrics report how many versions the consumer
+  * trails the table head by.
   */
 final class GraftMicroBatchStream(
     tbl: GraftTable,
-    readDataSchema: StructType,
-    pushed: Array[Filter],
     options: CaseInsensitiveStringMap,
-    pinnedSchema: StructType)
+    feed: GraftMicroBatchStream.VersionFeed)
     extends MicroBatchStream with SupportsTriggerAvailableNow with ReportsSourceMetrics {
-
-  private val skipRewrites = options.getBoolean("streamSkipRewrites", false)
+  import GraftMicroBatchStream.{admitWalk, whenLive}
 
   /** Per-batch observability in `StreamingQueryProgress.sources[i]
     * .metrics`: how far the consumer lags the table's head, in
@@ -142,7 +257,7 @@ final class GraftMicroBatchStream(
 
   override def initialOffset(): Offset = {
     // precedence: explicit version > timestamp > "now" (only NEW
-    // appends). A timestamp resolves to the last version committed
+    // commits). A timestamp resolves to the last version committed
     // STRICTLY BEFORE it (the offset is an exclusive lower bound), so a
     // commit stamped exactly at the requested timestamp IS replayed —
     // Iceberg's stream-from-timestamp includes snapshots with
@@ -174,18 +289,24 @@ final class GraftMicroBatchStream(
     }
   }
 
+  /** Memo of the most recent admission walk's per-version change:
+    * `latestOffset(start, limit)` and the `planInputPartitions` that
+    * follows cover the same versions, so each version's manifest diff
+    * (and any change-cache materialization) happens once per trigger.
+    * Replaced wholesale per walk — bounded by one batch's version span,
+    * never the stream's lifetime.
+    */
+  @volatile private var sidesMemo: Map[Int, CdcSides] = Map.empty
+
+  private def sidesOf(v: Int): CdcSides = whenLive(feed.expired(v))(tbl.cdcSides(v))
+
+  /** Largest end version in (from, latest] whose cumulative files/rows
+    * stay within `limit` — walking METADATA only, never file contents —
+    * then capped by the feed's version span.
+    */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[GraftStreamOffset].version
     val latest = availableNowEnd.getOrElse(tbl.currentOrFail().version)
-    GraftStreamOffset(admitUpTo(from, latest, limit))
-  }
-
-  /** Largest end version in (from, latest] whose cumulative new
-    * files/rows stay within `limit` — walking METADATA only (per-
-    * version manifest diffs), never file contents. Rewrite commits
-    * count zero (planning later aborts or skips them as configured).
-    */
-  private def admitUpTo(from: Int, latest: Int, limit: ReadLimit): Int = {
     def caps(l: ReadLimit): (Option[Int], Option[Long]) = l match {
       case f: ReadMaxFiles => (Some(f.maxFiles), None)
       case r: ReadMaxRows => (None, Some(r.maxRows))
@@ -196,213 +317,33 @@ final class GraftMicroBatchStream(
       case _ => (None, None)
     }
     val (maxFiles, maxRows) = caps(limit)
-    if (maxFiles.isEmpty && maxRows.isEmpty) return latest
-    val memo = scala.collection.mutable.HashMap.empty[Int, Option[Seq[(StructType, Seq[DataFile])]]]
-    try {
-      GraftMicroBatchStream.admitWalk(from, latest, maxFiles, maxRows) { v =>
-        val step = computeAppendedAt(v)
-        memo(v) = step
-        val added = step.getOrElse(Nil).flatMap(_._2)
-        (added.size.toLong, added.map(_.rows).sum)
+    val admitted =
+      if (maxFiles.isEmpty && maxRows.isEmpty) latest
+      else {
+        val memo = scala.collection.mutable.HashMap.empty[Int, CdcSides]
+        try admitWalk(from, latest, maxFiles, maxRows)(
+          feed.sizeOf(_, v => memo.getOrElseUpdate(v, sidesOf(v))))
+        finally sidesMemo = memo.toMap
       }
-    } finally walkMemo = memo.toMap // planInputPartitions reuses this walk
+    GraftStreamOffset(feed.maxVersions match {
+      case Some(m) if admitted > from => math.min(from + math.max(1, m), admitted)
+      case _ => admitted
+    })
   }
 
   override def deserializeOffset(json: String): Offset =
     GraftStreamOffset.fromJson(json)
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[GraftStreamOffset].version
-    val to = end.asInstanceOf[GraftStreamOffset].version
-    val added = addedBetween(from, to)
-    if (added.isEmpty) return Array.empty
-    // one native scan per WRITE-ERA schema: files committed before a
-    // rename read under their physical era names (mapped to the
-    // stream's PINNED naming by field id), files after it under the new
-    // ones — a rename no longer aborts the stream. Each partition
-    // carries its era's reader factory; the top-level factory is a pure
-    // dispatcher that preserves columnar reads.
-    added.groupBy(_._1).toSeq.flatMap { case (writeSchema, eraFiles) =>
-      val scan = scanFor(writeSchema, eraFiles.flatMap(_._2))
-      val factory = scan.toBatch.createReaderFactory()
-      scan.toBatch.planInputPartitions().map(p => EraPartition(p, factory))
-    }.toArray
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    feed.partitions(start.asInstanceOf[GraftStreamOffset].version,
+      end.asInstanceOf[GraftStreamOffset].version,
+      v => sidesMemo.getOrElse(v, sidesOf(v)))
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // file identity AND era factory ride inside each partition; the
-    // top factory only dispatches, so one instance serves every batch
-    new EraDispatchReaderFactory
+    // file identity AND era factory ride inside each partition, so one
+    // instance serves every batch
+    new GraftCdc.CdcReaderFactory(feed.metaPart)
 
   override def commit(end: Offset): Unit = () // offsets live in the checkpoint
   override def stop(): Unit = ()
-
-  /** New files of append-family version `v` (None for rewrite
-    * commits), by manifest-set diff: files of manifests NEW in `v`,
-    * minus paths of manifests it dropped (a concurrent manifest-merge
-    * moves old files into a new manifest; the subtraction keeps them
-    * out). Loads only changed manifests.
-    */
-  /** Memo of the most recent admission walk: `latestOffset(start,
-    * limit)` and the `planInputPartitions(start, end]` that follows it
-    * cover the same versions, so each version's manifest diff is
-    * computed once per trigger, not twice. Replaced wholesale per walk
-    * — bounded by one batch's version span, never the table's history.
-    * Values are era-grouped: (write-time schema, new files under it).
-    */
-  @volatile private var walkMemo: Map[Int, Option[Seq[(StructType, Seq[DataFile])]]] = Map.empty
-
-  private def appendedAt(v: Int): Option[Seq[(StructType, Seq[DataFile])]] =
-    walkMemo.getOrElse(v, computeAppendedAt(v))
-
-  private def computeAppendedAt(v: Int): Option[Seq[(StructType, Seq[DataFile])]] =
-    try {
-      val snap = tbl.snapshotAt(v)
-      // rename/drop-column commits are metadata-only (zero new files):
-      // they pass through as empty batches, and the era machinery in
-      // planInputPartitions maps files committed AFTER them back to the
-      // stream's pinned naming by field id
-      val isAppend = snap.operation == "append" || snap.operation.startsWith("evolve") ||
-        snap.operation == "set-properties" || snap.operation == "create" ||
-        snap.operation == "rename-column" || snap.operation == "drop-column"
-      def byEra(groups: Seq[graft.meta.FileGroup], files: Seq[DataFile] => Seq[DataFile]) =
-        groups.map(g => snap.writeSchemaFor(g.seq) -> files(g.files))
-          .filter(_._2.nonEmpty)
-      if (v == 0) Some(byEra(snap.fileGroups, identity))
-      else if (!isAppend) None
-      else {
-        val prev = tbl.snapshotAt(v - 1)
-        val prevManifests = prev.manifestPaths
-        val currManifests = snap.manifestPaths
-        val droppedPaths = prev.fileGroups
-          .filterNot(g => currManifests.contains(g.manifest))
-          .flatMap(_.files).map(_.path).toSet
-        Some(byEra(
-          snap.fileGroups.filterNot(g => prevManifests.contains(g.manifest)),
-          _.filterNot(f => droppedPaths.contains(f.path))))
-      }
-    } catch {
-      case e @ (_: java.nio.file.NoSuchFileException | _: java.io.FileNotFoundException) =>
-        // the checkpointed range was removed by expire_snapshots: the
-        // data can never be replayed — say so instead of surfacing a
-        // bare missing-file error from the metadata log (the parent
-        // snapshot of the manifest diff can be the missing one, so the
-        // guard covers the whole computation)
-        throw new IllegalStateException(
-          s"graft stream over ${tbl.tableDir} needs version $v, which has " +
-            "been removed by expire_snapshots; the checkpointed range is " +
-            "gone and cannot be replayed. Restart with a fresh checkpoint " +
-            "(optionally pinning streamStartVersion to a live version).", e)
-    }
-
-  private def addedBetween(from: Int, to: Int): Seq[(StructType, Seq[DataFile])] = {
-    val out = Seq.newBuilder[(StructType, Seq[DataFile])]
-    var v = math.max(from + 1, 0)
-    while (v <= to) {
-      appendedAt(v) match {
-        case Some(eraFiles) => out ++= eraFiles
-        case None =>
-          val snap = tbl.snapshotAt(v)
-        // delete/update/compact/cluster only churn EXISTING rows, so
-        // skipping them is the documented at-least-once trade. upsert and
-        // overwrite also INSERT rows — skipping those is silent data
-        // loss, so they abort regardless of streamSkipRewrites.
-        val pureRewrite = Set("delete", "update", "compact", "cluster")(snap.operation)
-        if (!skipRewrites || !pureRewrite) {
-          val hint =
-            if (pureRewrite)
-              "set streamSkipRewrites=true to skip pure-rewrite commits " +
-                "(appends stay exact; later deletes/updates are not replayed)"
-            else
-              s"'${snap.operation}' inserts new rows and cannot be skipped " +
-                "(streamSkipRewrites only skips delete/update/compact/cluster); " +
-                "restart the stream from a later streamStartVersion"
-          throw new IllegalStateException(
-            s"graft stream over ${tbl.tableDir} hit a non-append commit " +
-              s"(v$v: ${snap.operation}); " + hint)
-        }
-      }
-      v += 1
-    }
-    out.result()
-  }
-
-  /** Era-aware scan: the requested fields read under their PHYSICAL
-    * names in `writeSchema` (matched by field id), so the emitted rows
-    * stay positionally identical to the stream's pinned
-    * `readDataSchema` across renames. A column dropped mid-stream
-    * null-fills in post-drop files. Filters push into EVERY era with
-    * their references translated to the era's physical names
-    * ([[FilterRename]]) — row-group pruning is speedup only, Spark
-    * re-applies every filter.
-    */
-  private def scanFor(writeSchema: StructType, files: Seq[DataFile]): ParquetScan = {
-    val spark = tbl.spark
-    val mapping = tbl.nameMapping(writeSchema, readDataSchema)
-    val physSchema = mapping match {
-      case None => readDataSchema
-      case Some(m) => StructType(m.map { case (n, f) =>
-        StructField(n, f.dataType, nullable = true) })
-    }
-    // filters may reference unprojected columns: translate through the
-    // FULL pinned schema's era mapping, not the pruned one
-    val filterMap = FilterRename.eraMap(writeSchema,
-      tbl.nameMapping(writeSchema, pinnedSchema), pinnedSchema)
-    val pushable = pushed.flatMap(FilterRename(_, filterMap))
-    // FILE-level zone-map pruning from the translated conjunction (all
-    // filters stay residual above, so skipping provably-empty files is
-    // pure speedup) — a filtered stream over a clustered table then
-    // reads only the new files that can match
-    val pruned =
-      if (pushable.isEmpty) files
-      else {
-        val preds = pushable.flatMap(FilterSql.toSql)
-        if (preds.isEmpty) files
-        else {
-          val expr = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-            .parseExpression(preds.mkString("(", ") AND (", ")"))
-          files.filter(f =>
-            graft.table.StatsPruner.evaluate(f, writeSchema, expr).may)
-        }
-      }
-    ParquetScan(
-      sparkSession = spark,
-      hadoopConf = GraftSqlShim.newHadoopConf(spark),
-      fileIndex = new GraftFileIndex(spark, tbl.tableDir, pruned, writeSchema),
-      dataSchema = writeSchema,
-      readDataSchema = physSchema,
-      readPartitionSchema = StructType(Nil),
-      pushedFilters = pushable, // row-group pruning inside parquet
-      options = CaseInsensitiveStringMap.empty())
-  }
-}
-
-/** A file task tagged with the reader factory that knows its era's
-  * physical read schema — what lets one micro-batch span files written
-  * under different column namings.
-  */
-private[connector] final case class EraPartition(
-    delegate: InputPartition,
-    factory: PartitionReaderFactory) extends InputPartition {
-  override def preferredLocations(): Array[String] = delegate.preferredLocations()
-}
-
-/** Pure dispatcher to each partition's embedded era factory —
-  * preserves the vectorized columnar path (unlike the CDC wrapper,
-  * nothing is appended per row here).
-  */
-private[connector] final class EraDispatchReaderFactory extends PartitionReaderFactory {
-  private def era(p: InputPartition): EraPartition = p match {
-    case e: EraPartition => e
-    case other => throw new IllegalStateException(s"unexpected partition kind: $other")
-  }
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val e = era(p); e.factory.createReader(e.delegate)
-  }
-  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] = {
-    val e = era(p); e.factory.createColumnarReader(e.delegate)
-  }
-  override def supportColumnarReads(p: InputPartition): Boolean = {
-    val e = era(p); e.factory.supportColumnarReads(e.delegate)
-  }
 }

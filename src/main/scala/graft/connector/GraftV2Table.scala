@@ -534,7 +534,8 @@ final class GraftNativeScan(tbl: GraftTable, snap: Snapshot,
     // physical names BY FIELD ID from that metadata
     val pinned = StructType(readSchema().fields.map(f =>
       snap.schema.fields.find(_.name == f.name).getOrElse(f)))
-    new GraftMicroBatchStream(tbl, pinned, pushed, options, snap.schema)
+    new GraftMicroBatchStream(tbl, options, new GraftMicroBatchStream.TableFeed(
+      tbl, pinned, pushed, snap.schema, options.getBoolean("streamSkipRewrites", false)))
   }
 
   override def columnarSupportMode(): Scan.ColumnarSupportMode =

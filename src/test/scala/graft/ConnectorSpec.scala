@@ -2775,6 +2775,25 @@ class ConnectorSpec extends AnyFunSuite with Matchers {
       .where("id > 999").count() shouldBe 10L
   }
 
+  test("a change read of data columns only returns the full read's data columns") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.nscdcd")
+    spark.sql(
+      """CREATE TABLE graft.nscdcd.t (id BIGINT, v STRING)
+        |TBLPROPERTIES ('graft.delete.mode' = 'mor')""".stripMargin)
+    spark.sql("INSERT INTO graft.nscdcd.t VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    spark.sql("DELETE FROM graft.nscdcd.t WHERE id = 2")        // MoR: cached pre-image
+    spark.sql("INSERT INTO graft.nscdcd.t VALUES (4, 'd'), (2, 'b')")
+    spark.sql("UPDATE graft.nscdcd.t SET v = 'C' WHERE id = 3")
+    def changes() = spark.read.option("startingVersion", "0").table("graft.nscdcd.t.changes")
+    val full = changes().collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[String]("v"))).sorted.toSeq
+    val dataOnly = changes().select("id", "v")
+    // the two CDC columns are pruned from the scan itself
+    dataOnly.queryExecution.executedPlan.toString should include("read=id,v, pushed")
+    dataOnly.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq shouldBe full
+    full should contain allOf((2L, "b"), (3L, "C"))
+  }
+
   test("change feed reads across a type widening (old INT files under the LONG schema)") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.nscdcw")
     spark.sql("CREATE TABLE graft.nscdcw.t (id BIGINT, n INT)")

@@ -648,21 +648,122 @@ class GraftStreamSpec extends AnyFunSuite with Matchers {
     // expire everything but the newest snapshot, then ask the stream to
     // replay from genesis: versions 0..2 are gone
     s.sql("CALL graft.system.expire_snapshots('sns6', 'src', 1)")
-    val ckpt = Files.createTempDirectory("graft-src6-ckpt").toString
-    val q = s.readStream
+    for ((relation, i) <- Seq("graft.sns6.src", "graft.sns6.src.changes").zipWithIndex) {
+      val ckpt = Files.createTempDirectory("graft-src6-ckpt").toString
+      val q = s.readStream
+        .option("streamStartVersion", "-1")
+        .table(relation)
+        .writeStream
+        .format("memory")
+        .queryName(s"graft_src6_sink$i")
+        .option("checkpointLocation", ckpt)
+        .start()
+      try {
+        val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q.processAllAvailable()
+        }
+        withClue(relation) {
+          ex.getMessage should include("expire_snapshots")
+          ex.getMessage should include("fresh checkpoint")
+        }
+      } finally q.stop()
+    }
+  }
+
+  test("a metadata-only commit passes through the table stream in either mode") {
+    val (s, _) = streamSession("graft-src8")
+    s.sql("CREATE NAMESPACE IF NOT EXISTS graft.sns8")
+    s.sql("CREATE TABLE graft.sns8.src (id BIGINT, v STRING)")
+    s.sql("INSERT INTO graft.sns8.src VALUES (1, 'a')")
+    val qs = Seq("false", "true").map { skip =>
+      s.readStream
+        .option("streamStartVersion", "-1")
+        .option("streamSkipRewrites", skip)
+        .table("graft.sns8.src")
+        .writeStream.format("memory").queryName(s"graft_src8_skip_$skip")
+        .option("checkpointLocation", Files.createTempDirectory("graft-src8-ckpt").toString)
+        .start()
+    }
+    try {
+      qs.foreach(_.processAllAvailable())
+      // a partition-spec change rewrites no file and changes no row
+      s.sql("CALL graft.system.set_partition_spec('sns8', 'src', 'bucket(4, id)')")
+      s.sql("INSERT INTO graft.sns8.src VALUES (2, 'b')")
+      qs.foreach(_.processAllAvailable())
+      for (skip <- Seq("false", "true"))
+        withClue(s"streamSkipRewrites=$skip") {
+          s.sql(s"SELECT id FROM graft_src8_skip_$skip").collect().map(_.getLong(0))
+            .sorted.toSeq shouldBe Seq(1L, 2L)
+        }
+    } finally qs.foreach(_.stop())
+  }
+
+  test("skip mode skips dedup and delete-maintenance commits; default mode names the skip") {
+    val (s, c) = streamSession("graft-src9")
+    s.sql("CREATE NAMESPACE IF NOT EXISTS graft.sns9")
+    s.sql(
+      """CREATE TABLE graft.sns9.src (id BIGINT, v STRING)
+        |TBLPROPERTIES ('graft.delete.mode' = 'mor')""".stripMargin)
+    s.sql("INSERT INTO graft.sns9.src VALUES (1, 'a'), (1, 'a'), (2, 'b')")
+    def start(skip: Boolean, sink: String) = s.readStream
       .option("streamStartVersion", "-1")
-      .table("graft.sns6.src")
-      .writeStream
-      .format("memory")
-      .queryName("graft_src6_sink")
-      .option("checkpointLocation", ckpt)
+      .option("streamSkipRewrites", skip.toString)
+      .table("graft.sns9.src")
+      .writeStream.format("memory").queryName(sink)
+      .option("checkpointLocation", Files.createTempDirectory("graft-src9-ckpt").toString)
       .start()
+    val q = start(skip = true, "graft_src9_sink")
+    try {
+      q.processAllAvailable()
+      s.sql("CALL graft.system.dedup_table('sns9', 'src', '')")    // rows removed only
+      s.sql("INSERT INTO graft.sns9.src VALUES (3, 'c')")
+      s.sql("DELETE FROM graft.sns9.src WHERE id = 2")             // two MoR deletes
+      s.sql("DELETE FROM graft.sns9.src WHERE id = 3")
+      s.sql("CALL graft.system.compact_deletes('sns9', 'src')")    // no visible change
+      s.sql("CALL graft.system.rewrite_deletes('sns9', 'src')")    // no visible change
+      s.sql("INSERT INTO graft.sns9.src VALUES (4, 'd')")
+      c.load(TableIdent("sns9", "src")).snapshots().map(_.operation) should contain allOf(
+        "dedup", "compact-deletes", "rewrite-deletes")
+      q.processAllAvailable()
+      s.sql("SELECT id FROM graft_src9_sink").collect().map(_.getLong(0)).sorted.toSeq shouldBe
+        Seq(1L, 1L, 2L, 3L, 4L)
+    } finally q.stop()
+    // without skip mode the dedup commit aborts, pointing at the skip
+    // option rather than claiming the commit inserts rows
+    val q2 = start(skip = false, "graft_src9_sink2")
     try {
       val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q2.processAllAvailable()
+      }
+      ex.getMessage should include("dedup")
+      ex.getMessage should include("set streamSkipRewrites=true")
+      ex.getMessage should not include "cannot be skipped"
+    } finally q2.stop()
+  }
+
+  test("merging appends: a table stream from genesis emits each row exactly once") {
+    val (s, c) = streamSession("graft-src10")
+    s.sql("CREATE NAMESPACE IF NOT EXISTS graft.sns10")
+    s.sql(
+      """CREATE TABLE graft.sns10.src (id BIGINT)
+        |TBLPROPERTIES ('graft.manifest.merge-threshold' = '2')""".stripMargin)
+    (1 to 4).foreach(i => s.sql(s"INSERT INTO graft.sns10.src VALUES ($i)"))
+    val q = s.readStream
+      .option("streamStartVersion", "-1")
+      .table("graft.sns10.src")
+      .writeStream.format("memory").queryName("graft_src10_sink")
+      .option("checkpointLocation", Files.createTempDirectory("graft-src10-ckpt").toString)
+      .start()
+    try {
+      q.processAllAvailable()
+      (5 to 7).foreach { i =>
+        s.sql(s"INSERT INTO graft.sns10.src VALUES ($i)")
         q.processAllAvailable()
       }
-      ex.getMessage should include("expire_snapshots")
-      ex.getMessage should include("fresh checkpoint")
+      // the appends really merged manifests: fewer groups than appends
+      c.load(TableIdent("sns10", "src")).currentOrFail().fileGroups.size should be <= 2
+      s.sql("SELECT id FROM graft_src10_sink").collect().map(_.getLong(0)).sorted.toSeq shouldBe
+        (1L to 7L)
     } finally q.stop()
   }
 
